@@ -74,7 +74,7 @@ object Dedup {
   /** Duplicate-group REPORT: (text_hash, n_docs, canonical_id = min
     * doc_id, sample_ids = the `sampleK` smallest member ids). Every
     * column is a bounded aggregate — the id sample runs through the
-    * bounded-buffer [[graft.search.MinKLongsAggregator]], so a
+    * bounded top-k heap ([[graft.search.TopK.minIds]]), so a
     * boilerplate document duplicated 10⁸× costs one k-slot buffer, not
     * one 10⁸-element array cell (the unbounded `collect_list` this
     * replaced was the report's only scale hazard; StressSpec pins the

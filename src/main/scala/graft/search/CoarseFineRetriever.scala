@@ -12,9 +12,11 @@ import graft.index.Codebook
   *             partition-pruned by c0)
   *           → explode members, join embeddings on doc_id (J4)
   *           → exact dot-product re-rank (V2)
-  *           → per-(query,doc) dedup max/sum across clusters (A10,
-  *             main_models.py:3999-4011)
-  *           → grouped bounded top-k (T2)
+  *           → grouped bounded top-k (T2) with the per-(query,doc)
+  *             dedup across clusters (A10, main_models.py:3999-4011)
+  *             folded in: "max" is the top-k's distinct-id mode, one
+  *             aggregate and one shuffle; "sum" and the topic mix
+  *             dedup in a groupBy first
   *
   * Candidate count per query ≈ ndoc@cluster-R ≪ corpus: the join on
   * predicted codes is the engine's partition-pruning analog of the
@@ -62,7 +64,8 @@ object CoarseFineRetriever {
     *                      [[graft.index.ClusterIndexBuilder]]
     * @param docs          (doc_id, vec ARRAY<FLOAT>) — the full corpus
     * @param dedup         "max" | "sum" (A10 score-dedup mode; the
-    *                      reference's multiclus_score_aggr)
+    *                      reference's multiclus_score_aggr); anything
+    *                      else is an IllegalArgumentException
     * @param topicMix      optional (doc_id, codes, dprob) table (see
     *                      [[docClusterProba]]): scores become
     *                      q_proba·(r·dprob + (1−r)·qd) per membership —
@@ -86,6 +89,9 @@ object CoarseFineRetriever {
       topicMix: Option[DataFrame] = None,
       topicRatio: Double = 0.5): DataFrame = {
 
+    if (dedup != "max" && dedup != "sum")
+      throw new IllegalArgumentException(
+        s"""dedup must be "max" or "sum", got "$dedup"""")
     val coarse = CodebookBeamSearch.search(queries, codebook, beams)
 
     // J3: candidate clusters → members. Equi-join on the code tuple.
@@ -125,19 +131,22 @@ object CoarseFineRetriever {
     // order-sensitive and partial-agg order varies with partitioning, so
     // at T ≥ 3 memberships an unordered sum is not replay-deterministic
     // (the BM25 term-fold contract; the DuckDB twin orders by the same
-    // tuple).
-    val deduped =
-      if (dedup == "sum")
-        scored.groupBy("query_id", "doc_id")
-          .agg(aggregate(
-            array_sort(collect_list(struct(col("codes"), col("score")))),
-            lit(0.0),
-            (acc, s) => acc + s.getField("score")).as("score"))
-      else
-        scored.groupBy("query_id", "doc_id").agg(max(col("score")).as("score"))
-
-    // T2: grouped bounded top-k.
-    TopK.ranked(deduped, k)
+    // tuple). Plain 'max' folds into T2's distinct-id mode: every repeat
+    // of a (query, doc) pair carries the same dot product, so keeping one
+    // of them is exactly max. Topic-mix scores differ per membership and
+    // keep SQL max().
+    if (dedup == "sum")
+      TopK.ranked(scored.groupBy("query_id", "doc_id")
+        .agg(aggregate(
+          array_sort(collect_list(struct(col("codes"), col("score")))),
+          lit(0.0),
+          (acc, s) => acc + s.getField("score")).as("score")), k)
+    else if (topicMix.isDefined)
+      TopK.ranked(
+        scored.groupBy("query_id", "doc_id").agg(max(col("score")).as("score")),
+        k)
+    else
+      TopK.ranked(scored, k, distinctIds = true)
   }
 
   /** Budgeted variant: before fetching ANY embeddings, re-score candidate
@@ -213,8 +222,8 @@ object CoarseFineRetriever {
       .select(col("query_id"), col("doc_id"),
         BruteForceKNN.score(metric)(col("qvec"), col("vec")).as("score"))
 
-    TopK.ranked(
-      scored.groupBy("query_id", "doc_id").agg(max(col("score")).as("score")),
-      k)
+    // a doc in several kept clusters repeats with the same dot product:
+    // the distinct-id top-k keeps one copy (= max), no extra shuffle
+    TopK.ranked(scored, k, distinctIds = true)
   }
 }

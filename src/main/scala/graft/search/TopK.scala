@@ -1,134 +1,339 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
-import scala.collection.mutable.ArrayBuffer
+import java.nio.ByteBuffer
 
-/** One scored candidate. Ties broken by ascending id for determinism. */
-case class ScoredDoc(id: Long, score: Double)
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
 
-/** Bounded buffer: worst-of-top-k pruning happens on overflow, so partial
-  * (map-side) aggregation never holds more than 4k candidates per group.
+/** Bounded best-k heap over primitive arrays: the one top-k primitive.
+  *
+  * Rank order is the engine's ranked-list contract: score descending as
+  * `java.lang.Double.compare` orders the NEGATED score (so NaN ranks
+  * last and 0.0 before -0.0), then id ascending. The root holds the
+  * worst kept entry, so an offer is one compare when it loses and
+  * O(log k) when it wins. The arrays start small and double up to k:
+  * k = corpus size on a 100-row group allocates ~100 slots, not k.
+  *
+  * `distinct` keeps one entry per id — the better-ranked score of a
+  * repeated id — through an id→slot open-addressing table, so a repeat
+  * costs O(1) to find. Exact under partial aggregation: an id whose best
+  * score belongs in the global top-k is in the top-k of whichever
+  * partial saw that score.
   */
-case class TopKBuffer(k: Int, items: ArrayBuffer[ScoredDoc])
+private[search] final class TopKHeap(val k: Int, val distinct: Boolean) {
+  private[search] var ids = new Array[Long](math.min(k, 16))
+  private[search] var scores = new Array[Double](ids.length)
+  private[search] var size = 0
 
-/** Grouped bounded top-k as a partial-aggregatable `Aggregator`.
+  // distinct mode only: linear-probing table, `slotOf(i)` = heap slot + 1
+  // (0 = empty), power-of-two length ≥ 2 × heap capacity
+  private var keys: Array[Long] = _
+  private var slotOf: Array[Int] = _
+  private var shift = 0
+  if (distinct) rehash(2 * ids.length)
+
+  def offer(id: Long, score: Double): Unit = {
+    if (distinct) {
+      val at = find(id)
+      if (at >= 0) {
+        val slot = slotOf(at) - 1
+        if (TopKHeap.before(score, id, scores(slot), id)) {
+          scores(slot) = score
+          siftDown(slot, size)
+        }
+        return
+      }
+    }
+    if (size < k) {
+      if (size == ids.length) grow()
+      size += 1
+      place(size - 1, id, score)
+      siftUp(size - 1)
+    } else if (TopKHeap.before(score, id, scores(0), ids(0))) {
+      if (distinct) remove(ids(0))
+      place(0, id, score)
+      siftDown(0, size)
+    }
+  }
+
+  def mergeFrom(other: TopKHeap): Unit = {
+    var i = 0
+    while (i < other.size) { offer(other.ids(i), other.scores(i)); i += 1 }
+  }
+
+  /** (ids, scores) best-first; leaves this heap untouched. */
+  def sorted: (Array[Long], Array[Double]) = {
+    val h = new TopKHeap(k, distinct = false)
+    h.ids = java.util.Arrays.copyOf(ids, size)
+    h.scores = java.util.Arrays.copyOf(scores, size)
+    h.size = size
+    var end = size - 1
+    while (end > 0) { // heap-sort: the worst goes to the back
+      val id = h.ids(end)
+      val s = h.scores(end)
+      h.ids(end) = h.ids(0); h.scores(end) = h.scores(0)
+      h.place(0, id, s)
+      h.siftDown(0, end)
+      end -= 1
+    }
+    (h.ids, h.scores)
+  }
+
+  def toBytes: Array[Byte] = {
+    val b = ByteBuffer.allocate(4 + 16 * size).putInt(size)
+    var i = 0
+    while (i < size) { b.putLong(ids(i)); i += 1 }
+    i = 0
+    while (i < size) { b.putDouble(scores(i)); i += 1 }
+    b.array()
+  }
+
+  private def place(slot: Int, id: Long, score: Double): Unit = {
+    ids(slot) = id
+    scores(slot) = score
+    if (distinct) put(id, slot)
+  }
+
+  /** Moves the entry at `slot` toward the root while it ranks after its
+    * parent. */
+  private def siftUp(slot: Int): Unit = {
+    val id = ids(slot)
+    val s = scores(slot)
+    var c = slot
+    while (c > 0 && TopKHeap.before(scores((c - 1) >> 1), ids((c - 1) >> 1), s, id)) {
+      val p = (c - 1) >> 1
+      place(c, ids(p), scores(p))
+      c = p
+    }
+    place(c, id, s)
+  }
+
+  /** Moves the entry at `slot` away from the root, within `[0, n)`, while
+    * a child ranks after it. */
+  private def siftDown(slot: Int, n: Int): Unit = {
+    val id = ids(slot)
+    val s = scores(slot)
+    var p = slot
+    var done = false
+    while (!done) {
+      var c = 2 * p + 1
+      if (c >= n) done = true
+      else {
+        if (c + 1 < n && TopKHeap.before(scores(c), ids(c), scores(c + 1), ids(c + 1)))
+          c += 1 // the worse child
+        if (TopKHeap.before(s, id, scores(c), ids(c))) {
+          place(p, ids(c), scores(c))
+          p = c
+        } else done = true
+      }
+    }
+    place(p, id, s)
+  }
+
+  private def grow(): Unit = {
+    val cap = math.min(k.toLong, 2L * ids.length).toInt
+    ids = java.util.Arrays.copyOf(ids, cap)
+    scores = java.util.Arrays.copyOf(scores, cap)
+    if (distinct) rehash(2 * cap)
+  }
+
+  // Fibonacci hashing: the top bits of id × 2⁶⁴/φ
+  private def home(id: Long): Int = ((id * 0x9E3779B97F4A7C15L) >>> shift).toInt
+
+  private def rehash(minLen: Int): Unit = {
+    val len = Integer.highestOneBit(math.max(minLen, 2) - 1) << 1
+    keys = new Array[Long](len)
+    slotOf = new Array[Int](len)
+    shift = 64 - Integer.numberOfTrailingZeros(len)
+    var i = 0
+    while (i < size) { put(ids(i), i); i += 1 }
+  }
+
+  /** Table index of `id`, or -1. */
+  private def find(id: Long): Int = {
+    val mask = keys.length - 1
+    var i = home(id)
+    while (slotOf(i) != 0) {
+      if (keys(i) == id) return i
+      i = (i + 1) & mask
+    }
+    -1
+  }
+
+  private def put(id: Long, slot: Int): Unit = {
+    val mask = keys.length - 1
+    var i = home(id)
+    while (slotOf(i) != 0 && keys(i) != id) i = (i + 1) & mask
+    keys(i) = id
+    slotOf(i) = slot + 1
+  }
+
+  /** Backward-shift deletion: later entries of the probe run move into
+    * the hole when it lies on their path from home, so no tombstones. */
+  private def remove(id: Long): Unit = {
+    val mask = keys.length - 1
+    var hole = find(id)
+    slotOf(hole) = 0
+    var j = (hole + 1) & mask
+    while (slotOf(j) != 0) {
+      val h = home(keys(j))
+      if (((hole - h) & mask) < ((j - h) & mask)) {
+        keys(hole) = keys(j); slotOf(hole) = slotOf(j); slotOf(j) = 0
+        hole = j
+      }
+      j = (j + 1) & mask
+    }
+  }
+}
+
+private[search] object TopKHeap {
+  /** Does (s1, id1) rank strictly before (s2, id2)? */
+  @inline def before(s1: Double, id1: Long, s2: Double, id2: Long): Boolean = {
+    val c = java.lang.Double.compare(-s1, -s2)
+    c < 0 || (c == 0 && id1 < id2)
+  }
+
+  def fromBytes(bytes: Array[Byte], k: Int, distinct: Boolean): TopKHeap = {
+    val b = ByteBuffer.wrap(bytes)
+    val n = b.getInt()
+    val h = new TopKHeap(k, distinct)
+    h.ids = new Array[Long](math.max(n, h.ids.length))
+    h.scores = new Array[Double](h.ids.length)
+    var i = 0
+    while (i < n) { h.ids(i) = b.getLong(); i += 1 }
+    i = 0
+    while (i < n) { h.scores(i) = b.getDouble(); i += 1 }
+    h.size = n // serialized in heap order: the invariant already holds
+    if (distinct) h.rehash(2 * h.ids.length)
+    h
+  }
+}
+
+/** Grouped bounded top-k as a partial-aggregatable Catalyst aggregate.
   *
   * Re-expresses the reference's streaming bounded top-k — running
   * `torch.topk` over scanned doc batches (MEVI/main_models.py:3819-3876,
-  * 3979-3989) — as Spark's partial+final aggregation: each map task keeps a
-  * bounded buffer (combiner-side pruning), merge is concat+prune. At 100 TB
-  * this is the difference between shuffling every scored (query, doc) pair
-  * and shuffling ≤ k rows per (group, map task).
+  * 3979-3989) — as Spark's partial+final aggregation: each map task keeps
+  * one [[TopKHeap]] per group, reads id and score straight from the input
+  * row, and ships it as raw bytes; merge offers one heap into the other.
+  * At 100 TB this is the difference between shuffling every scored
+  * (query, doc) pair and shuffling ≤ k rows per (group, map task).
   *
-  * Output is sorted by (score desc, id asc) — canonical for oracle hashing.
+  * Rows with a null id or score are skipped, as SQL aggregates skip
+  * nulls. Output is best-first — ARRAY<STRUCT<id, score>>, or with
+  * `idsOnly` ARRAY<BIGINT> — canonical for oracle hashing.
   */
-class TopKAggregator(k: Int)
-    extends Aggregator[ScoredDoc, TopKBuffer, Seq[ScoredDoc]] {
+case class BoundedTopK(
+    id: Expression,
+    score: Expression,
+    k: Int,
+    distinctIds: Boolean,
+    idsOnly: Boolean,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[TopKHeap]
+    with ImplicitCastInputTypes with BinaryLike[Expression] {
 
-  private val overflow = math.max(4 * k, 64)
+  require(k > 0, s"top-k needs k > 0, got $k")
 
-  override def zero: TopKBuffer = TopKBuffer(k, ArrayBuffer.empty)
+  override def left: Expression = id
+  override def right: Expression = score
+  override def inputTypes: Seq[DataType] = Seq(LongType, DoubleType)
+  override def prettyName: String = "bounded_topk"
 
-  private def prune(buf: TopKBuffer, to: Int): TopKBuffer = {
-    if (buf.items.length > to) {
-      val kept = buf.items.sortBy(d => (-d.score, d.id)).take(k)
-      TopKBuffer(k, ArrayBuffer.from(kept))
-    } else buf
+  // The nullability of the typed Aggregator this replaced: a nullable
+  // result whose struct elements are marked nullable, as encoders mark
+  // case classes. With the true non-null shape, the constraints Spark
+  // derives downstream change, and KnnGraph.walk (a checkpointed top-k
+  // graph feeding a union) failed in Union.rewriteConstraints with
+  // "key not found".
+  override def nullable: Boolean = true
+  override def dataType: DataType =
+    if (idsOnly) ArrayType(LongType, containsNull = false)
+    else ArrayType(StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false))), containsNull = true)
+
+  override def createAggregationBuffer(): TopKHeap = new TopKHeap(k, distinctIds)
+
+  override def update(buf: TopKHeap, row: InternalRow): TopKHeap = {
+    val i = id.eval(row)
+    if (i != null) {
+      val s = score.eval(row)
+      if (s != null) buf.offer(i.asInstanceOf[Long], s.asInstanceOf[Double])
+    }
+    buf
   }
 
-  override def reduce(b: TopKBuffer, a: ScoredDoc): TopKBuffer = {
-    b.items += a
-    prune(b, overflow)
+  override def merge(buf: TopKHeap, other: TopKHeap): TopKHeap = {
+    buf.mergeFrom(other)
+    buf
   }
 
-  override def merge(b1: TopKBuffer, b2: TopKBuffer): TopKBuffer = {
-    b1.items ++= b2.items
-    prune(b1, k)
+  override def eval(buf: TopKHeap): Any = {
+    val (ids, scores) = buf.sorted
+    if (idsOnly) new GenericArrayData(ids)
+    else new GenericArrayData(Array.tabulate[Any](ids.length)(i =>
+      InternalRow(ids(i), scores(i))))
   }
 
-  override def finish(r: TopKBuffer): Seq[ScoredDoc] =
-    r.items.sortBy(d => (-d.score, d.id)).take(k).toSeq
+  override def serialize(buf: TopKHeap): Array[Byte] = buf.toBytes
+  override def deserialize(bytes: Array[Byte]): TopKHeap =
+    TopKHeap.fromBytes(bytes, k, distinctIds)
 
-  override def bufferEncoder: Encoder[TopKBuffer] = Encoders.kryo[TopKBuffer]
-  override def outputEncoder: Encoder[Seq[ScoredDoc]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredDoc]]()
-}
-
-/** Bounded buffer for [[MinKLongsAggregator]] — same overflow-prune
-  * discipline as [[TopKBuffer]].
-  */
-case class MinKBuffer(k: Int, items: ArrayBuffer[Long])
-
-/** Grouped bounded k-SMALLEST-ids as a partial-aggregatable `Aggregator` —
-  * the capped-sample replacement for `collect_list` in group REPORTS
-  * (e.g. duplicate-group membership samples): a group with 10⁸ members
-  * costs the same bounded buffer as a group with 10. Exact over the full
-  * Long domain (no Double round-trip — ids above 2^53 stay exact).
-  * Output sorted ascending, deterministic for oracle hashing.
-  */
-class MinKLongsAggregator(k: Int)
-    extends Aggregator[Long, MinKBuffer, Seq[Long]] {
-
-  private val overflow = math.max(4 * k, 64)
-
-  override def zero: MinKBuffer = MinKBuffer(k, ArrayBuffer.empty)
-
-  private def prune(buf: MinKBuffer, to: Int): MinKBuffer = {
-    if (buf.items.length > to) {
-      val kept = buf.items.sorted.take(k)
-      MinKBuffer(k, ArrayBuffer.from(kept))
-    } else buf
-  }
-
-  override def reduce(b: MinKBuffer, a: Long): MinKBuffer = {
-    b.items += a
-    prune(b, overflow)
-  }
-
-  override def merge(b1: MinKBuffer, b2: MinKBuffer): MinKBuffer = {
-    b1.items ++= b2.items
-    prune(b1, k)
-  }
-
-  override def finish(r: MinKBuffer): Seq[Long] =
-    r.items.sorted.take(k).toSeq
-
-  override def bufferEncoder: Encoder[MinKBuffer] = Encoders.kryo[MinKBuffer]
-  override def outputEncoder: Encoder[Seq[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+  override def withNewMutableAggBufferOffset(o: Int): BoundedTopK =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): BoundedTopK =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BoundedTopK =
+    copy(id = newLeft, score = newRight)
 }
 
 object TopK {
-  /** Untyped column form of the bounded k-smallest-ids sample:
-    * `df.groupBy("h").agg(TopK.minIds(8)($"doc_id"))` → `ARRAY<BIGINT>`
-    * ascending. Replaces `sort_array(collect_list(id))` wherever the
-    * group size is adversary-controlled.
+  private def agg(f: BoundedTopK): Column =
+    ColumnBridge.column(f.toAggregateExpression())
+
+  /** Bounded k-smallest-ids sample: `df.groupBy("h").agg(TopK.minIds(8)($"doc_id"))`
+    * → `ARRAY<BIGINT>` ascending, repeated ids kept. The top-k heap under
+    * a constant score (so the order is id ascending); exact over the full
+    * Long domain. Replaces `sort_array(collect_list(id))` wherever the
+    * group size is adversary-controlled: a group with 10⁸ members costs
+    * the same k-slot heap as a group with 10.
     */
   def minIds(k: Int): Column => Column = { id =>
-    udaf(new MinKLongsAggregator(k), Encoders.scalaLong).apply(id)
+    agg(BoundedTopK(ColumnBridge.expression(id), Literal(0.0), k,
+      distinctIds = false, idsOnly = true))
   }
 
   /** Untyped column form: `df.groupBy("qid").agg(TopK.topk(10)($"doc_id", $"score"))`
     * → `ARRAY<STRUCT<id BIGINT, score DOUBLE>>` ranked best-first.
+    * `distinctIds` keeps one entry per id, at its better-ranked score.
     */
-  def topk(k: Int): (Column, Column) => Column = { (id, score) =>
-    udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])
-      .apply(id, score)
+  def topk(k: Int, distinctIds: Boolean = false): (Column, Column) => Column = {
+    (id, score) =>
+      agg(BoundedTopK(ColumnBridge.expression(id), ColumnBridge.expression(score),
+        k, distinctIds, idsOnly = false))
   }
 
   /** The canonical ranked-hit output: scored (query_id, doc_id, score) rows
     * → (query_id, rank 1-based, doc_id, score), grouped bounded top-k.
     * Single definition of the engine's ranked-list contract (tie-break,
     * rank base, column names) shared by every retrieval path.
+    * `distinctIds` folds a per-(query, doc) max-style dedup into the same
+    * aggregate: one row per doc, at its better-ranked score.
     */
-  def ranked(scored: org.apache.spark.sql.DataFrame, k: Int)
-      : org.apache.spark.sql.DataFrame = {
+  def ranked(scored: DataFrame, k: Int, distinctIds: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
     scored
       .groupBy("query_id")
-      .agg(topk(k)(col("doc_id"), col("score")).as("top"))
+      .agg(topk(k, distinctIds)(col("doc_id"), col("score")).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sd")))
       .select(col("query_id"), (col("pos") + 1).as("rank"),
         col("sd.id").as("doc_id"), col("sd.score").as("score"))

@@ -27,19 +27,137 @@ class SearchSpec extends SparkSpec {
     assert(top(1).getSeq[org.apache.spark.sql.Row](1).size == 1)
   }
 
+  // (id, score bits): tells 0.0 from -0.0 and matches NaN with NaN
+  private type Hit = (Long, Long)
+  private def hit(id: Long, s: Double): Hit =
+    (id, java.lang.Double.doubleToLongBits(s))
+  // the ranked-list contract, independent of the heap: negated score
+  // ascending under java.lang.Double.compare, then id ascending
+  private val rankOrder: Ordering[(Long, Double)] =
+    Ordering.by[(Long, Double), (Double, Long)](r => (-r._2, r._1))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+  private def sortTake(rows: Seq[(Long, Double)], k: Int): Seq[Hit] =
+    rows.sorted(rankOrder).take(k).map(r => hit(r._1, r._2))
+  /** One row per id, at its better-ranked score. */
+  private def bestPerId(rows: Seq[(Long, Double)]): Seq[(Long, Double)] =
+    rows.groupBy(_._1).values.map(_.min(rankOrder)).toSeq
+
+  // seven groups of ~86 rows plus one 100-row group (q = 7): ties, NaN,
+  // ±0.0, ±∞ and repeated ids (120 ids over 700 rows)
+  private lazy val hostileRows: Seq[(Long, Long, Double)] = {
+    val rnd = new scala.util.Random(7)
+    val odd = Array(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    Seq.tabulate(700) { i =>
+      val score =
+        if (rnd.nextInt(4) == 0) odd(rnd.nextInt(odd.length))
+        else rnd.nextInt(20) / 4.0
+      (math.min(i / 86, 7).toLong, rnd.nextInt(120).toLong, score)
+    }
+  }
+
+  private def byGroup(data: Seq[(Long, Long, Double)])(
+      f: Seq[(Long, Double)] => Seq[Hit]): Map[Long, Seq[Hit]] =
+    data.groupBy(_._1).map { case (q, rows) => q -> f(rows.map(r => (r._2, r._3))) }
+
+  private def topkByGroup(data: Seq[(Long, Long, Double)], parts: Int, k: Int,
+      distinctIds: Boolean): Map[Long, Seq[Hit]] =
+    spark.createDataFrame(spark.sparkContext.parallelize(data, parts))
+      .toDF("q", "id", "score")
+      .groupBy("q").agg(TopK.topk(k, distinctIds)($"id", $"score").as("top"))
+      .collect().map { r =>
+        r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
+          .map(t => hit(t.getLong(0), t.getDouble(1))).toSeq
+      }.toMap
+
   test("TopK aggregator equals global sort-take under any partitioning") {
     val rnd = new scala.util.Random(7)
-    val data = Seq.tabulate(500)(i => (i % 7L, i.toLong, rnd.nextDouble()))
+    val plain = Seq.tabulate(500)(i => (i % 7L, i.toLong, rnd.nextDouble()))
     for (parts <- Seq(1, 3, 16)) {
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(data, parts)).toDF("q", "id", "score")
-      val got = df.groupBy("q").agg(TopK.topk(5)($"id", $"score").as("top"))
-        .select($"q", $"top.id".as("ids")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val expect = data.groupBy(_._1).map { case (q, rows) =>
-        q -> rows.sortBy(r => (-r._3, r._2)).take(5).map(_._2).toSeq
+      assert(topkByGroup(plain, parts, 5, distinctIds = false) ==
+        byGroup(plain)(sortTake(_, 5)), s"plain parts=$parts")
+      // k above every group size, and k = 10⁶ on groups of ≤ 100 rows
+      for (k <- Seq(1, 5, 200, 1000000)) {
+        assert(topkByGroup(hostileRows, parts, k, distinctIds = false) ==
+          byGroup(hostileRows)(sortTake(_, k)), s"hostile parts=$parts k=$k")
+        assert(topkByGroup(hostileRows, parts, k, distinctIds = true) ==
+          byGroup(hostileRows)(rows => sortTake(bestPerId(rows), k)),
+          s"distinct parts=$parts k=$k")
       }
-      assert(got == expect, s"parts=$parts")
+    }
+  }
+
+  test("distinct TopK equals groupBy-max followed by sort-take") {
+    // SQL max() and the heap's better-ranked score agree wherever max is
+    // well defined: no NaN (max picks it, the heap ranks it last) and no
+    // -0.0 (max treats it as equal to 0.0)
+    val finite = hostileRows.filter(r =>
+      !r._3.isNaN && java.lang.Double.doubleToLongBits(r._3) != 0x8000000000000000L)
+    for (parts <- Seq(1, 3, 16); k <- Seq(1, 5, 200)) {
+      val maxed = spark.createDataFrame(spark.sparkContext.parallelize(finite, parts))
+        .toDF("q", "id", "score")
+        .groupBy("q", "id").agg(max($"score").as("score"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(topkByGroup(finite, parts, k, distinctIds = true) ==
+        byGroup(maxed)(sortTake(_, k)), s"parts=$parts k=$k")
+    }
+  }
+
+  test("minIds equals a sorted take that keeps repeated ids") {
+    for (parts <- Seq(1, 3, 16); k <- Seq(1, 5, 200, 1000000)) {
+      val got = spark.createDataFrame(spark.sparkContext.parallelize(hostileRows, parts))
+        .toDF("q", "id", "score")
+        .groupBy("q").agg(TopK.minIds(k)($"id").as("ids"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+      val expect = hostileRows.groupBy(_._1).map { case (q, rows) =>
+        q -> rows.map(_._2).sorted.take(k)
+      }
+      assert(got == expect, s"parts=$parts k=$k")
+    }
+  }
+
+  test("TopK skips rows with a null id or score, as SQL aggregates do") {
+    val df = Seq[(Long, Option[Long], Option[Double])](
+      (1L, Some(10L), Some(1.0)), (1L, None, Some(9.0)),
+      (1L, Some(11L), None), (1L, Some(12L), Some(2.0)),
+      (2L, None, Some(1.0))
+    ).toDF("q", "id", "score")
+    val got = df.groupBy("q")
+      .agg(TopK.topk(5)($"id", $"score").as("top"),
+        TopK.topk(5, distinctIds = true)($"id", $"score").as("dtop"),
+        TopK.minIds(5)($"id").as("ids"))
+      .orderBy("q").collect()
+    def hits(r: org.apache.spark.sql.Row, i: Int) =
+      r.getSeq[org.apache.spark.sql.Row](i).map(t => (t.getLong(0), t.getDouble(1)))
+    assert(hits(got(0), 1) == Seq((12L, 2.0), (10L, 1.0)))
+    assert(hits(got(0), 2) == Seq((12L, 2.0), (10L, 1.0)))
+    assert(got(0).getSeq[Long](3) == Seq(10L, 11L, 12L))
+    // a group whose every row is skipped yields an empty list, not null
+    assert(hits(got(1), 1).isEmpty && got(1).getSeq[Long](3).isEmpty)
+  }
+
+  test("TopK heap grows on demand and survives eviction, merge and bytes") {
+    val big = new TopKHeap(1000000, distinct = true)
+    (0 until 100).foreach(i => big.offer(i % 60, i.toDouble))
+    assert(big.size == 60 && big.ids.length <= 128, s"capacity ${big.ids.length}")
+
+    val rnd = new scala.util.Random(11)
+    for (round <- 0 until 40; k <- Seq(1, 7, 64, 500); distinct <- Seq(false, true)) {
+      val offers = Seq.fill(1500)(
+        (rnd.nextInt(300).toLong, rnd.nextInt(40) / 8.0))
+      val expect = sortTake(if (distinct) bestPerId(offers) else offers, k)
+      def sortedHits(h: TopKHeap) = {
+        val (ids, scores) = h.sorted
+        ids.indices.map(i => hit(ids(i), scores(i)))
+      }
+      // three partials, each through bytes, merged into the first
+      val parts = offers.grouped(500).map { chunk =>
+        val h = new TopKHeap(k, distinct)
+        chunk.foreach(o => h.offer(o._1, o._2))
+        TopKHeap.fromBytes(h.toBytes, k, distinct)
+      }.toSeq
+      parts.tail.foreach(parts.head.mergeFrom)
+      assert(sortedHits(parts.head) == expect, s"round=$round k=$k distinct=$distinct")
     }
   }
 
@@ -152,6 +270,70 @@ class SearchSpec extends SparkSpec {
     got.collect().foreach { r =>
       assert(r.getAs[Long]("doc_id") == r.getAs[Long]("query_id"))
     }
+  }
+
+  test("coarse→fine rejects an unknown dedup mode, naming it") {
+    val cb = RQTrainer.fit(docs, "vec", numLevels = 2, k = 8, seed = 42L)
+    val index = ClusterIndexBuilder.build(CodeAssigner.assign(docs, cb))
+    val e = intercept[IllegalArgumentException] {
+      CoarseFineRetriever.retrieve(queries, index, docs, cb, dedup = "mean")
+    }
+    assert(e.getMessage.contains("dedup") && e.getMessage.contains("mean"))
+  }
+
+  test("multi-membership coarse→fine and budgeted equal the groupBy-max form") {
+    val cb = RQTrainer.fit(docs, "vec", numLevels = 2, k = 8, seed = 42L)
+    val index = ClusterIndexBuilder.build(
+      CodeAssigner.assignTopK(docs, cb, t = 2).select("doc_id", "codes"))
+    val beams = 8
+    val k = 20
+    val budget = 150
+    // the form the retrievers had before the max dedup folded into the
+    // top-k: score every (query, candidate) row, groupBy max, then rank
+    def groupByMaxRanked(cands: org.apache.spark.sql.DataFrame) = {
+      val scored = cands.join(docs, Seq("doc_id")).join(queries, Seq("query_id"))
+        .select(col("query_id"), col("doc_id"),
+          BruteForceKNN.score("ip")(col("qvec"), col("vec")).as("score"))
+      TopK.ranked(
+        scored.groupBy("query_id", "doc_id").agg(max(col("score")).as("score")), k)
+    }
+    def members(clusters: org.apache.spark.sql.DataFrame) =
+      clusters.join(index.select("codes", "doc_ids"), Seq("codes"))
+        .select(col("query_id"), explode(col("doc_ids")).as("doc_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rank").collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getLong(2),
+          java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSeq
+
+    val coarse = CodebookBeamSearch.search(queries, cb, beams)
+    val cands = members(coarse.select("query_id", "codes"))
+    assert(cands.count() > cands.distinct().count(),
+      "no doc reaches a query through two clusters: the parity is vacuous")
+    assert(rows(CoarseFineRetriever.retrieve(queries, index, docs, cb,
+      beams = beams, k = k)) == rows(groupByMaxRanked(cands)))
+
+    // the budgeted path's cluster choice, restated: best reconstruction
+    // scores first until the member count reaches the budget
+    val recon = udf { (q: Seq[Float], codes: Seq[Int]) =>
+      val rec = cb.reconstruct(codes.toArray)
+      var s = 0.0
+      for (j <- q.indices) s += q(j).toDouble * rec(j).toDouble
+      s
+    }
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(col("rscore").desc, col("codes").asc)
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val kept = coarse.join(index.select("codes", "csize").distinct(), Seq("codes"))
+      .join(queries, Seq("query_id"))
+      .withColumn("rscore", recon(col("qvec"), col("codes")))
+      .withColumn("prior", coalesce(sum(col("csize")).over(w), lit(0L)))
+      .where(col("prior") < budget)
+      .select("query_id", "codes")
+    val budgetedCands = members(kept)
+    assert(budgetedCands.count() > budgetedCands.distinct().count())
+    assert(budgetedCands.count() < cands.count(), "the budget pruned nothing")
+    assert(rows(CoarseFineRetriever.retrieveBudgeted(queries, index, docs, cb,
+      beams = beams, k = k, budget = budget)) == rows(groupByMaxRanked(budgetedCands)))
   }
 
   test("topic mix r=0 drops the doc-proba term entirely") {
