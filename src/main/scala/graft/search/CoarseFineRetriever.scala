@@ -15,8 +15,8 @@ import graft.index.Codebook
   *           → grouped bounded top-k (T2) with the per-(query,doc)
   *             dedup across clusters (A10, main_models.py:3999-4011)
   *             folded in: "max" is the top-k's distinct-id mode, one
-  *             aggregate and one shuffle; "sum" and the topic mix
-  *             dedup in a groupBy first
+  *             aggregate and one shuffle; "sum" dedups in a groupBy
+  *             first
   *
   * Candidate count per query ≈ ndoc@cluster-R ≪ corpus: the join on
   * predicted codes is the engine's partition-pruning analog of the
@@ -131,20 +131,16 @@ object CoarseFineRetriever {
     // order-sensitive and partial-agg order varies with partitioning, so
     // at T ≥ 3 memberships an unordered sum is not replay-deterministic
     // (the BM25 term-fold contract; the DuckDB twin orders by the same
-    // tuple). Plain 'max' folds into T2's distinct-id mode: every repeat
-    // of a (query, doc) pair carries the same dot product, so keeping one
-    // of them is exactly max. Topic-mix scores differ per membership and
-    // keep SQL max().
+    // tuple). 'max' folds into T2's distinct-id mode, which keeps each
+    // doc's better-ranked score: that is max() for every score but NaN
+    // (max picks it, the top-k ranks it last) and -0.0 (max may keep it
+    // over 0.0).
     if (dedup == "sum")
       TopK.ranked(scored.groupBy("query_id", "doc_id")
         .agg(aggregate(
           array_sort(collect_list(struct(col("codes"), col("score")))),
           lit(0.0),
           (acc, s) => acc + s.getField("score")).as("score")), k)
-    else if (topicMix.isDefined)
-      TopK.ranked(
-        scored.groupBy("query_id", "doc_id").agg(max(col("score")).as("score")),
-        k)
     else
       TopK.ranked(scored, k, distinctIds = true)
   }

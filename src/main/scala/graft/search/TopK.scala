@@ -21,28 +21,21 @@ import org.apache.spark.sql.types._
   * k = corpus size on a 100-row group allocates ~100 slots, not k.
   *
   * `distinct` keeps one entry per id — the better-ranked score of a
-  * repeated id — through an id→slot open-addressing table, so a repeat
-  * costs O(1) to find. Exact under partial aggregation: an id whose best
-  * score belongs in the global top-k is in the top-k of whichever
-  * partial saw that score.
+  * repeated id. A repeat is found by scanning the kept ids, at most
+  * min(k, group size) per offer: small on the retrieval paths that use
+  * it, whose groups hold one query's candidates from a few clusters.
+  * Exact under partial aggregation: an id whose best score belongs in
+  * the global top-k is in the top-k of whichever partial saw that score.
   */
 private[search] final class TopKHeap(val k: Int, val distinct: Boolean) {
   private[search] var ids = new Array[Long](math.min(k, 16))
   private[search] var scores = new Array[Double](ids.length)
   private[search] var size = 0
 
-  // distinct mode only: linear-probing table, `slotOf(i)` = heap slot + 1
-  // (0 = empty), power-of-two length ≥ 2 × heap capacity
-  private var keys: Array[Long] = _
-  private var slotOf: Array[Int] = _
-  private var shift = 0
-  if (distinct) rehash(2 * ids.length)
-
   def offer(id: Long, score: Double): Unit = {
     if (distinct) {
-      val at = find(id)
-      if (at >= 0) {
-        val slot = slotOf(at) - 1
+      val slot = slotOf(id)
+      if (slot >= 0) {
         if (TopKHeap.before(score, id, scores(slot), id)) {
           scores(slot) = score
           siftDown(slot, size)
@@ -56,7 +49,6 @@ private[search] final class TopKHeap(val k: Int, val distinct: Boolean) {
       place(size - 1, id, score)
       siftUp(size - 1)
     } else if (TopKHeap.before(score, id, scores(0), ids(0))) {
-      if (distinct) remove(ids(0))
       place(0, id, score)
       siftDown(0, size)
     }
@@ -97,7 +89,6 @@ private[search] final class TopKHeap(val k: Int, val distinct: Boolean) {
   private def place(slot: Int, id: Long, score: Double): Unit = {
     ids(slot) = id
     scores(slot) = score
-    if (distinct) put(id, slot)
   }
 
   /** Moves the entry at `slot` toward the root while it ranks after its
@@ -140,55 +131,13 @@ private[search] final class TopKHeap(val k: Int, val distinct: Boolean) {
     val cap = math.min(k.toLong, 2L * ids.length).toInt
     ids = java.util.Arrays.copyOf(ids, cap)
     scores = java.util.Arrays.copyOf(scores, cap)
-    if (distinct) rehash(2 * cap)
   }
 
-  // Fibonacci hashing: the top bits of id × 2⁶⁴/φ
-  private def home(id: Long): Int = ((id * 0x9E3779B97F4A7C15L) >>> shift).toInt
-
-  private def rehash(minLen: Int): Unit = {
-    val len = Integer.highestOneBit(math.max(minLen, 2) - 1) << 1
-    keys = new Array[Long](len)
-    slotOf = new Array[Int](len)
-    shift = 64 - Integer.numberOfTrailingZeros(len)
+  /** Heap slot of `id`, or -1. */
+  private def slotOf(id: Long): Int = {
     var i = 0
-    while (i < size) { put(ids(i), i); i += 1 }
-  }
-
-  /** Table index of `id`, or -1. */
-  private def find(id: Long): Int = {
-    val mask = keys.length - 1
-    var i = home(id)
-    while (slotOf(i) != 0) {
-      if (keys(i) == id) return i
-      i = (i + 1) & mask
-    }
+    while (i < size) { if (ids(i) == id) return i; i += 1 }
     -1
-  }
-
-  private def put(id: Long, slot: Int): Unit = {
-    val mask = keys.length - 1
-    var i = home(id)
-    while (slotOf(i) != 0 && keys(i) != id) i = (i + 1) & mask
-    keys(i) = id
-    slotOf(i) = slot + 1
-  }
-
-  /** Backward-shift deletion: later entries of the probe run move into
-    * the hole when it lies on their path from home, so no tombstones. */
-  private def remove(id: Long): Unit = {
-    val mask = keys.length - 1
-    var hole = find(id)
-    slotOf(hole) = 0
-    var j = (hole + 1) & mask
-    while (slotOf(j) != 0) {
-      val h = home(keys(j))
-      if (((hole - h) & mask) < ((j - h) & mask)) {
-        keys(hole) = keys(j); slotOf(hole) = slotOf(j); slotOf(j) = 0
-        hole = j
-      }
-      j = (j + 1) & mask
-    }
   }
 }
 
@@ -210,7 +159,6 @@ private[search] object TopKHeap {
     i = 0
     while (i < n) { h.scores(i) = b.getDouble(); i += 1 }
     h.size = n // serialized in heap order: the invariant already holds
-    if (distinct) h.rehash(2 * h.ids.length)
     h
   }
 }

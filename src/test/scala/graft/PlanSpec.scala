@@ -49,7 +49,7 @@ class PlanSpec extends SparkSpec {
     val p = planString(df)
     // ObjectHashAggregate with Partial + Final around one shuffle
     assert(p.contains("ObjectHashAggregate"), p)
-    assert("partial_topkaggregator|Partial".r.findFirstIn(p.toLowerCase.replace("\n", " ")).isDefined ||
+    assert("partial_bounded_topk|Partial".r.findFirstIn(p.toLowerCase.replace("\n", " ")).isDefined ||
       p.contains("partial"), s"no partial aggregation phase:\n$p")
   }
 

@@ -272,16 +272,7 @@ class SearchSpec extends SparkSpec {
     }
   }
 
-  test("coarse→fine rejects an unknown dedup mode, naming it") {
-    val cb = RQTrainer.fit(docs, "vec", numLevels = 2, k = 8, seed = 42L)
-    val index = ClusterIndexBuilder.build(CodeAssigner.assign(docs, cb))
-    val e = intercept[IllegalArgumentException] {
-      CoarseFineRetriever.retrieve(queries, index, docs, cb, dedup = "mean")
-    }
-    assert(e.getMessage.contains("dedup") && e.getMessage.contains("mean"))
-  }
-
-  test("multi-membership coarse→fine and budgeted equal the groupBy-max form") {
+  test("multi-membership coarse→fine and budgeted equal the groupBy-max form; unknown dedup refused") {
     val cb = RQTrainer.fit(docs, "vec", numLevels = 2, k = 8, seed = 42L)
     val index = ClusterIndexBuilder.build(
       CodeAssigner.assignTopK(docs, cb, t = 2).select("doc_id", "codes"))
@@ -334,6 +325,12 @@ class SearchSpec extends SparkSpec {
     assert(budgetedCands.count() < cands.count(), "the budget pruned nothing")
     assert(rows(CoarseFineRetriever.retrieveBudgeted(queries, index, docs, cb,
       beams = beams, k = k, budget = budget)) == rows(groupByMaxRanked(budgetedCands)))
+
+    // any dedup mode but "max" and "sum" is refused, by name
+    val e = intercept[IllegalArgumentException] {
+      CoarseFineRetriever.retrieve(queries, index, docs, cb, dedup = "mean")
+    }
+    assert(e.getMessage.contains("dedup") && e.getMessage.contains("mean"))
   }
 
   test("topic mix r=0 drops the doc-proba term entirely") {
