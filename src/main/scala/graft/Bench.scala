@@ -309,7 +309,6 @@ object Bench {
       val docs = SparkEntry.docVecs(spark, sfDir).cache()
       val nVec = docs.count()
       val queries = SparkEntry.queryVecs(spark, sfDir)
-      val nQ = queries.count().toDouble
 
       val (artifacts, buildSec) = timed {
         // library-default maxIter (20): the engine-metric codebook must
@@ -325,26 +324,11 @@ object Bench {
       val (cb, index) = artifacts
 
       val k = math.min(1000, nVec.toInt)
-      val (knnRanked, knnSec) = {
-        // excludeSelf: labelGroundTruth excludes the query's own doc, so
-        // the preds must too — a self-hit at rank 1 would deflate every
-        // rr/recall line (the catalog's knn_ip/knn_cos do the same)
-        val r = BruteForceKNN.topK(queries.select("query_id", "qvec"),
-          docs.select("doc_id", "vec"), k = k, excludeSelf = true)
-        val sec = bestOf2 {
-          r.write.format("noop").mode("overwrite").save()
-        }
-        (r.cache(), sec)
-      }
-      val (cf, cfSec) = {
-        val r = CoarseFineRetriever.retrieve(
-          queries.select("query_id", "qvec"), index,
-          docs.select("doc_id", "vec"), cb, beams = 4, k = k)
-        val sec = bestOf2 {
-          r.write.format("noop").mode("overwrite").save()
-        }
-        (r.cache(), sec)
-      }
+      // excludeSelf: labelGroundTruth excludes the query's own doc, so
+      // the preds must too — a self-hit at rank 1 would deflate every
+      // rr/recall line (the catalog's knn_ip/knn_cos do the same)
+      val knnRanked = BruteForceKNN.topK(queries.select("query_id", "qvec"),
+        docs.select("doc_id", "vec"), k = k, excludeSelf = true).cache()
       // candidate pool per query (BASELINE.md ndoc@cluster-R): measured on
       // an UNCAPPED retrieval — the rank-k output would silently clamp the
       // metric at k once beams cover more than k docs/query; the same
@@ -371,25 +355,10 @@ object Bench {
         queries = Some(queries.select("query_id")))
         .head.getAs[Double]("ndoc_per_query")
 
-      // r6→r7 drift note: coarse_fine_budgeted_qps 82 (r5 record) →
-      // ~45-47 was bisected with a standalone probe (BudgetedProbe) —
-      // the r5 CODE run against the current fixtures on the same machine
-      // lands on the same ~30 qps standalone / ~47 in-bench, so the r5
-      // record reflected machine/fixture state, not a code change. At 20
-      // fixture queries this metric is planning-latency-bound (~0.4 s
-      // absolute); treat small swings as noise, not throughput.
-      val cfbSec = bestOf2 {
-        CoarseFineRetriever.retrieveBudgeted(
-          queries.select("query_id", "qvec"), index,
-          docs.select("doc_id", "vec"), cb, beams = 4, k = k,
-          budget = math.max(k, 100))
-          .write.format("noop").mode("overwrite").save()
-      }
-
       // ---- regression-grade serving block (VERDICT r8 #4) ----
-      // The qps lines above run the 20-query fixture slice, which is
-      // planning-latency-bound (~0.4 s absolute) — same-code reruns
-      // spread ±45% and cannot catch a real 30% serving regression.
+      // The 20-query fixture slice is planning-latency-bound (~0.4 s
+      // absolute) — same-code reruns spread ±45% and cannot catch a
+      // real 30% serving regression.
       // This block serves a 2000-query batch (distinct query_ids, doc
       // vectors deterministically perturbed + renormalized so top-k
       // per-query cardinalities are realistic), so the ~0.4 s planning
@@ -504,13 +473,7 @@ object Bench {
         System.err.println(s"[bench] serve drift check failed: ${e.getMessage}")
       }
 
-      // legacy_ prefix (VERDICT r9 #7): the 20-query qps lines are
-      // planning-latency-bound (±45% same-code spread across three rounds);
-      // the serve_* medians above are the regression-grade signal. Kept
-      // under legacy_ for continuity with r1-r9 records, not for diffing.
-      s"""{$serveJson"index_build_sec":${d(buildSec, 3)},"legacy_knn_qps":${d(nQ / knnSec, 2)},""" +
-        s""""legacy_coarse_fine_qps":${d(nQ / cfSec, 2)},""" +
-        s""""legacy_coarse_fine_budgeted_qps":${d(nQ / cfbSec, 2)},""" +
+      s"""{$serveJson"index_build_sec":${d(buildSec, 3)},""" +
         s""""recall_at_1":${d(m(1)._1, 4)},""" +
         s""""recall_at_10":${d(m(10)._1, 4)},""" +
         s""""mrr_at_10":${d(m(10)._2, 4)},""" +

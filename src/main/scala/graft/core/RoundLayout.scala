@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RuntimeConfig}
 
 /** Layout helpers for ITERATIVE operators (PageRank, k-core, label
   * propagation): keep per-round state pinned to one hash layout so the
@@ -85,20 +85,26 @@ object RoundLayout {
     * configured parallelism AND the exchange elision. */
   def roundPartitions(df: DataFrame, nRows: Long): Int = {
     val conf = df.sparkSession.conf
-    val key = "spark.graft.graph.rowsPerPartition"
-    val target = conf.getOption(key).map { v =>
-      // a malformed session conf value must fail NAMING THE KEY, not as
-      // a bare NumberFormatException deep inside a graph loop (ADVICE r17)
+    val target = rowsPerPartition(conf,
+      "spark.graft.graph.rowsPerPartition", 262144L)
+    val cap = conf.get("spark.sql.shuffle.partitions", "200").toInt
+    math.max(1L, math.min((nRows + target - 1) / target, cap.toLong)).toInt
+  }
+
+  /** A positive rows-per-partition target read from session conf `key`
+    * (`default` when unset). A malformed or non-positive value fails
+    * NAMING THE KEY, not as a bare NumberFormatException deep inside a
+    * graph loop or a silent fallback (ADVICE r17). */
+  private[graft] def rowsPerPartition(conf: RuntimeConfig, key: String,
+      default: Long): Long =
+    conf.getOption(key).map { v =>
       val t = try v.trim.toLong catch {
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"$key must be a positive integer row count, got '$v'")
       }
       require(t > 0, s"$key must be positive, got '$v'")
       t
-    }.getOrElse(262144L)
-    val cap = conf.get("spark.sql.shuffle.partitions", "200").toInt
-    math.max(1L, math.min((nRows + target - 1) / target, cap.toLong)).toInt
-  }
+    }.getOrElse(default)
 
   /** Run `body` with `spark.sql.shuffle.partitions` scoped to `p`: a
     * NEW exchange planned at the session width (e.g. a per-round

@@ -72,11 +72,10 @@ object ArtifactCache {
       case Some(df) if !df.sparkSession.sparkContext.isStopped => df
       case _ =>
         val df = if (persist) {
+          val target = graft.core.RoundLayout.rowsPerPartition(session.conf,
+            "spark.graft.artifact.rowsPerPartition", 65536L)
           val d = build.persist()
           val n = d.count()
-          val target = session.conf
-            .getOption("spark.graft.artifact.rowsPerPartition")
-            .map(_.trim.toLong).filter(_ > 0).getOrElse(65536L)
           val cur = d.rdd.getNumPartitions
           val w = math.max(1L, math.min((n + target - 1) / target,
             cur.toLong)).toInt

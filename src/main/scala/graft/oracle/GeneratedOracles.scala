@@ -767,14 +767,15 @@ object GeneratedOracles {
     * subtrees differ, so level-m tables are keyed by the parent PATH;
     * the `||` prefix build null-propagates, so docs that hit a leaf early
     * match nothing deeper and their path stays short). Path rendering is
-    * null-skipping array_to_string — identical to Spark's concat_ws. */
-  def hkmAssignSql(tree: graft.index.HierarchicalKMeans.Tree): String = {
-    val nodes = tree.nodesByPrefix
+    * null-skipping array_to_string — identical to Spark's concat_ws.
+    * `nodes`: (path prefix, centroids) per trained node — the
+    * `HierarchicalKMeans.fitLevels` rows, root prefix "" — in DFS order. */
+  def hkmAssignSql(nodes: Seq[(String, Array[Array[Float]])]): String = {
     def level(p: String): Int = if (p.isEmpty) 0 else p.count(_ == ',') + 1
     val byLevel = nodes.groupBy { case (p, _) => level(p) }
     val maxLevel = byLevel.keys.max
     val root = byLevel(0).head._2
-    val rootRows = root.cents.zipWithIndex
+    val rootRows = root.zipWithIndex
       .map { case (c, code) => s"($code, ${centList(c)})" }.mkString(", ")
     val l2 = (a: String, b: String) =>
       s"list_sum(list_transform(list_zip($a, $b), p -> (p[1] - p[2]) * (p[1] - p[2])))"
@@ -788,8 +789,8 @@ object GeneratedOracles {
          |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY dist, code) AS rn FROM s0)
          |WHERE rn = 1 ORDER BY doc_id""".stripMargin
     val levelCtes = (1 to maxLevel).map { m =>
-      val rows = byLevel(m).flatMap { case (prefix, node) =>
-        node.cents.zipWithIndex.map { case (c, code) =>
+      val rows = byLevel(m).flatMap { case (prefix, cents) =>
+        cents.zipWithIndex.map { case (c, code) =>
           s"('$prefix', $code, ${centList(c)})"
         }
       }.mkString(", ")
@@ -819,26 +820,25 @@ object GeneratedOracles {
        |FROM a0 $joins ORDER BY doc_id""".stripMargin
   }
 
-  /** Trie beam-search oracle (HierarchicalKMeans.beamSearch): per round,
+  /** Trie beam-search oracle (HierarchicalKMeans.beamSearchByLevels): per round,
     * beams sitting on a live node expand through that node's OWN
     * log-softmax (raws/max/Σexp as ORDERED lists — the Scala loop's code
     * order), beams on leaves carry unchanged (the ANTI JOIN), and the
     * frontier re-ranks to `beams` rows per query on (cum DESC, path ASC)
     * — DuckDB list comparison is element-wise with shorter-prefix-first,
-    * identical to Scala's Seq ordering. */
-  def hkmBeamSql(tree: graft.index.HierarchicalKMeans.Tree, beams: Int,
-      maxQueryId: Int): String = {
-    val nodes = tree.nodesByPrefix
+    * identical to Scala's Seq ordering. `nodes` as in [[hkmAssignSql]];
+    * `k` is the trained fan-out (the child codes each round tries). */
+  def hkmBeamSql(nodes: Seq[(String, Array[Array[Float]])], k: Int,
+      beams: Int, maxQueryId: Int): String = {
     def level(p: String): Int = if (p.isEmpty) 0 else p.count(_ == ',') + 1
     val byLevel = nodes.groupBy { case (p, _) => level(p) }
     val maxLevel = byLevel.keys.max + 1 // expansion rounds
-    val k = tree.k
     val krange = (0 until k).map(c => s"($c)").mkString(", ")
-    def centsLit(n: graft.index.HierarchicalKMeans.Node): String =
-      n.cents.map(centList).mkString("[", ", ", "]")
+    def centsLit(cents: Array[Array[Float]]): String =
+      cents.map(centList).mkString("[", ", ", "]")
     val rounds = (0 until maxLevel).map { m =>
-      val rows = byLevel(m).map { case (prefix, node) =>
-        s"('$prefix', ${centsLit(node)})"
+      val rows = byLevel(m).map { case (prefix, cents) =>
+        s"('$prefix', ${centsLit(cents)})"
       }.mkString(", ")
       s"""hb$m(parent, cents) AS (VALUES $rows),
          |x$m AS (SELECT b.query_id, b.v, b.path, b.cum, n.cents

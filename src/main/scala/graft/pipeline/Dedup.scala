@@ -299,9 +299,8 @@ object Dedup {
     * thousand pairs pays ~2 s of pure scheduling for a graph that
     * union-finds in microseconds. The gate is ONE count over the edge
     * list (callers hold it checkpointed — counting is free) and the
-    * fallback is the scale path, so this is the inverse of the HKM
-    * driver-budget guard: bounded work may come to the driver, anything
-    * else stays distributed. The `dedup_components` catalog entry keeps
+    * fallback is the scale path: bounded work may come to the driver,
+    * anything else stays distributed. The `dedup_components` catalog entry keeps
     * calling [[connectedComponents]] directly — the distributed path
     * stays oracle-certified on its own.
     */

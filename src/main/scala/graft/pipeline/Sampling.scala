@@ -498,9 +498,8 @@ object Sampling {
     * the reference's 1.05M-cluster geometry, web domains) would
     * serialize a mega sort into a single task. The call therefore
     * fails FAST when the group count exceeds `maxGroups` (one cheap
-    * count over the counts agg — the HKM driver-tree budget-guard
-    * pattern), naming the fix, instead of stalling inside an
-    * unexplained single-task stage.
+    * count over the counts agg), naming the fix, instead of stalling
+    * inside an unexplained single-task stage.
     */
   def unimaxEpochs(df: DataFrame, groupCol: String, budget: Long,
       epochCap: Int, idCol: String = "doc_id",

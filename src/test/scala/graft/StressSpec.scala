@@ -284,6 +284,21 @@ class StressSpec extends SparkSpec {
     assert(out.count() >= 2000L * 4)
   }
 
+  /** (query, rank) → (path, score bits) of the plain-Scala reference
+    * beam over a fitLevels frame's collected nodes. */
+  private def referenceBeams(levels: org.apache.spark.sql.DataFrame,
+      queries: org.apache.spark.sql.DataFrame, beams: Int)
+      : Map[(Long, Long), (Seq[Int], Long)] = {
+    import spark.implicits._
+    val nodes = graft.index.HkmReference.nodes(levels)
+    queries.as[(Long, Array[Float])].collect().flatMap { case (q, v) =>
+      graft.index.HkmReference.beam(nodes, v, beams).zipWithIndex.map {
+        case ((p, sc), i) =>
+          (q, i + 1L) -> (p, java.lang.Double.doubleToLongBits(sc))
+      }
+    }.toMap
+  }
+
   test("hkm fit job count grows with depth, not node count") {
     import graft.index.HierarchicalKMeans
     import java.util.concurrent.atomic.AtomicInteger
@@ -319,21 +334,20 @@ class StressSpec extends SparkSpec {
 
     // same depth, 4x the fan-out (k=2 → 3 nodes max vs k=8 → 9 nodes):
     // job count must be identical — per-LEVEL scheduling
-    val jK2 = countJobs(HierarchicalKMeans.fit(df, "vec", k = 2, depth = 2,
-      seed = 1L, maxIter = 5))
-    val jK8 = countJobs(HierarchicalKMeans.fit(df, "vec", k = 8, depth = 2,
-      seed = 1L, maxIter = 5))
+    val jK2 = countJobs(HierarchicalKMeans.fitLevels(df, "vec", k = 2,
+      depth = 2, seed = 1L, maxIter = 5))
+    val jK8 = countJobs(HierarchicalKMeans.fitLevels(df, "vec", k = 8,
+      depth = 2, seed = 1L, maxIter = 5))
     assert(jK8 == jK2,
       s"fit jobs changed with fan-out: k=2 → $jK2 jobs, k=8 → $jK8 jobs")
 
     // deeper tree → more jobs, but bounded by a per-level constant
-    val jD3 = countJobs(HierarchicalKMeans.fit(df, "vec", k = 2, depth = 3,
-      seed = 1L, maxIter = 5))
+    val jD3 = countJobs(HierarchicalKMeans.fitLevels(df, "vec", k = 2,
+      depth = 3, seed = 1L, maxIter = 5))
     assert(jD3 > jK2, s"depth 3 ($jD3 jobs) should schedule more than depth 2 ($jK2)")
-    // one extra level costs the fit collect + the assign count + the
-    // r8 driver-budget width count (the fail-fast guard is itself a
-    // per-level job); AQE splits each shuffle into its own job, so
-    // "constant" is ~8, never node-count
+    // one extra level costs the level's fit count + the prefix-join
+    // descent count; AQE splits each shuffle into its own job, so
+    // "constant" is a handful, never node-count
     assert(jD3 - jK2 <= 9,
       s"per-level job cost should be a small constant: depth2=$jK2 depth3=$jD3")
   }
@@ -342,9 +356,9 @@ class StressSpec extends SparkSpec {
     import graft.index.HierarchicalKMeans
     import spark.implicits._
     // the reference geometry direction: K=32 fan-out — the regime where
-    // the driver Tree stops scaling (33k nodes × 32 × 768 floats ≈ 3 GB
-    // at depth 4); fitLevels/assignByLevels must agree with the Tree
-    // path bit-for-bit while keeping codebooks distributed
+    // driver-resident codebooks stop scaling (33k nodes × 32 × 768 floats
+    // ≈ 3 GB at depth 4); the join descent must agree with the plain
+    // per-node argmin walk bit-for-bit while keeping codebooks distributed
     val rng = new scala.util.Random(29)
     val df = (0 until 16000).map(i =>
       (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
@@ -359,20 +373,20 @@ class StressSpec extends SparkSpec {
     assert(sec < 120, s"k=32 distributed fit+assign took ${sec}s on 16k vecs")
     // no broadcast hint pinned anywhere in the descent plan
     assert(!paths.queryExecution.analyzed.toString.contains("ResolvedHint"))
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 32, depth = 2,
-      seed = 2L, maxIter = 10)
-    val byTree = HierarchicalKMeans.assign(df, tree)
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(byLevels == byTree, "distributed descent diverged from the tree")
+    val nodes = graft.index.HkmReference.nodes(levels)
+    val byWalk = df.as[(Long, Array[Float])].collect().map { case (id, v) =>
+      id -> graft.index.HkmReference.assign(nodes, v)
+    }.toMap
+    assert(byLevels == byWalk, "distributed descent diverged from the walk")
   }
 
   test("hkm distributed beam matches the tree beam at k=32 (no tree broadcast)") {
     import graft.index.HierarchicalKMeans
     import spark.implicits._
-    // the serving-side twin of the fit/assign parity above: at the
-    // reference geometry beamSearchDf's whole-Tree broadcast is ~3 GB,
-    // so beamSearchByLevels must reproduce it bit-for-bit off the
-    // per-level codebook frames alone
+    // the serving-side twin of the assign parity above: at the
+    // reference geometry a broadcast of every codebook is ~3 GB, so
+    // beamSearchByLevels must reproduce the sequential beam bit-for-bit
+    // off the per-level codebook frames alone
     val rng = new scala.util.Random(31)
     val df = (0 until 8000).map(i =>
       (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
@@ -399,16 +413,10 @@ class StressSpec extends SparkSpec {
         (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
       }.toMap
 
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 32, depth = 2,
-      seed = 2L, maxIter = 10)
-    val byTree = HierarchicalKMeans.beamSearchDf(queries, tree, beams = 6)
-      .as[(Long, Long, Seq[Int], Double)].collect()
-      .map { case (q, r, p, sc) =>
-        (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
-      }.toMap
-    assert(byLevels.size == byTree.size)
-    assert(byLevels == byTree,
-      "distributed beam diverged from the driver-tree beam (bit compare)")
+    val byRef = referenceBeams(levels, queries, beams = 6)
+    assert(byLevels.size == byRef.size)
+    assert(byLevels == byRef,
+      "distributed beam diverged from the reference beam (bit compare)")
   }
 
   test("hkm distributed beam: leaf beams carry and compete (variable-depth trie)") {
@@ -450,18 +458,11 @@ class StressSpec extends SparkSpec {
       "no length-1 path survived — the leaf-carry branch never engaged")
     assert(dist.exists(_._3.length == 2))
 
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 32, depth = 2,
-      seed = 5L, maxIter = 10)
-    val byTree = HierarchicalKMeans.beamSearchDf(queries, tree, beams = 8)
-      .as[(Long, Long, Seq[Int], Double)].collect()
-      .map { case (q, r, p, sc) =>
-        (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
-      }.toMap
     val byLevels = dist.map { case (q, r, p, sc) =>
       (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
     }.toMap
-    assert(byLevels == byTree,
-      "distributed beam diverged from the tree beam on a variable-depth trie")
+    assert(byLevels == referenceBeams(levels, queries, beams = 8),
+      "distributed beam diverged from the reference beam on a variable-depth trie")
   }
 
   test("hkm distributed beam: plan grows linearly in depth, parity holds at depth 4") {
@@ -501,15 +502,8 @@ class StressSpec extends SparkSpec {
       .map { case (q, r, p, sc) =>
         (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
       }.toMap
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 32, depth = 4,
-      seed = 7L, maxIter = 5)
-    val byTree = HierarchicalKMeans.beamSearchDf(queries, tree, beams = 6)
-      .as[(Long, Long, Seq[Int], Double)].collect()
-      .map { case (q, r, p, sc) =>
-        (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
-      }.toMap
-    assert(dist == byTree,
-      "depth-4 distributed beam diverged from the driver-tree beam (bit compare)")
+    assert(dist == referenceBeams(levels, queries, beams = 6),
+      "depth-4 distributed beam diverged from the reference beam (bit compare)")
   }
 
   test("hkm fit handles the reference's fan-out (k=32) in seconds") {
@@ -525,11 +519,12 @@ class StressSpec extends SparkSpec {
       .toDF("doc_id", "vec").repartition(16).cache()
     df.count()
     val t0 = System.nanoTime()
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 32, depth = 2,
+    val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 32, depth = 2,
       seed = 2L, maxIter = 10)
     val sec = (System.nanoTime() - t0) / 1e9
-    assert(tree.root.cents.length == 32)
-    assert(tree.root.children.count(_.isDefined) >= 16,
+    val nodes = graft.index.HkmReference.nodes(levels)
+    assert(nodes("").length == 32)
+    assert(nodes.size - 1 >= 16,
       "most root cells should be big enough to split at 32k docs")
     assert(sec < 90, s"k=32 depth-2 fit took ${sec}s on 32k vectors")
   }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * their save/mutate/restore pairs — each must compute the correct
   * result AND the session conf must come back to its pre-race value.
   * Also pins the named-key failure for a malformed
-  * `spark.graft.graph.rowsPerPartition` (ADVICE r17).
+  * `spark.graft.graph.rowsPerPartition` or
+  * `spark.graft.artifact.rowsPerPartition` (ADVICE r17).
   */
 class RoundLayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -49,20 +50,25 @@ class RoundLayoutSpec extends SparkSpec {
   }
 
   test("malformed rowsPerPartition conf fails naming the key") {
-    val key = "spark.graft.graph.rowsPerPartition"
     val df = Seq((1L, 2L)).toDF("src", "dst")
-    spark.conf.set(key, "not-a-number")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        RoundLayout.roundPartitions(df, 100L)
-      }
-      assert(e.getMessage.contains(key))
-      spark.conf.set(key, "-5")
-      val e2 = intercept[IllegalArgumentException] {
-        RoundLayout.roundPartitions(df, 100L)
-      }
-      assert(e2.getMessage.contains(key))
-    } finally spark.conf.unset(key)
+    // the graph-round width and the artifact-cache compaction read their
+    // targets through the same parse
+    val readers = Seq[(String, () => Any)](
+      "spark.graft.graph.rowsPerPartition" ->
+        (() => RoundLayout.roundPartitions(df, 100L)),
+      "spark.graft.artifact.rowsPerPartition" ->
+        (() => graft.index.ArtifactCache.frame(spark,
+          s"RoundLayoutSpec/${System.nanoTime()}")(df)))
+    readers.foreach { case (key, read) =>
+      spark.conf.set(key, "not-a-number")
+      try {
+        val e = intercept[IllegalArgumentException](read())
+        assert(e.getMessage.contains(key))
+        spark.conf.set(key, "-5")
+        val e2 = intercept[IllegalArgumentException](read())
+        assert(e2.getMessage.contains(key))
+      } finally spark.conf.unset(key)
+    }
   }
 
   test("roundPartitions derives width from rows, capped at session width") {

@@ -11,66 +11,39 @@ class HkmSpec extends SparkSpec {
     val df = (0 until 300).map(i =>
       (i.toLong, Array.fill(6)(rng.nextGaussian().toFloat)))
       .toDF("doc_id", "vec").cache()
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 3, depth = 2,
+    val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 3, depth = 2,
       seed = 42L, maxIter = 10)
-    val got = HierarchicalKMeans.assign(df, tree)
+    val nodes = HkmReference.nodes(levels)
+    val got = HierarchicalKMeans.assignByLevels(df, levels, depth = 2)
       .as[(Long, Seq[Int])].collect().toMap
     val data = df.as[(Long, Array[Float])].collect()
     data.foreach { case (id, v) =>
-      assert(got(id) == tree.assign(v), s"doc $id")
+      assert(got(id) == HkmReference.assign(nodes, v), s"doc $id")
       assert(got(id).nonEmpty && got(id).length <= 2)
       assert(got(id).forall(c => c >= 0 && c < 3))
     }
     // sibling subtrees genuinely differ (a trie, not a K-ary product):
     // two level-1 nodes with different centroid sets
-    val kids = tree.root.children.flatten
+    val kids = levels.where(col("level") === 1).orderBy("prefix")
+      .select("cents").as[Seq[Seq[Float]]].collect()
     assert(kids.length >= 2)
-    assert(!java.util.Arrays.deepEquals(
-      kids(0).cents.asInstanceOf[Array[AnyRef]],
-      kids(1).cents.asInstanceOf[Array[AnyRef]]))
-  }
-
-  test("driver-tree fit fails fast above the driver byte budget, pointing at fitLevels") {
-    val rng = new scala.util.Random(7)
-    val df = (0 until 400).map(i =>
-      (i.toLong, Array.fill(6)(rng.nextGaussian().toFloat)))
-      .toDF("doc_id", "vec").cache()
-    // k=4 level-1 width up to 4 nodes × 4 × 6 floats × 4B = 384 bytes —
-    // a 64-byte budget must trip BEFORE any centroid collect, with the
-    // remediation in the message (the K=32/depth-4/768-d reference
-    // geometry is ~3 GB against the 256 MB default, same trip path)
-    val e = intercept[IllegalArgumentException] {
-      HierarchicalKMeans.fit(df, "vec", k = 4, depth = 2,
-        seed = 42L, maxIter = 5, driverBudgetBytes = 64L)
-    }
-    assert(e.getMessage.contains("fitLevels"), e.getMessage)
-    assert(e.getMessage.contains("budget"), e.getMessage)
-    // the default budget comfortably admits the bounded fixture geometry
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 4, depth = 2,
-      seed = 42L, maxIter = 5)
-    assert(tree.root.cents.length == 4)
-    // the reference fan-out's projected leaf level (32^3 nodes × 32 ×
-    // 768-d) exceeds the default 256 MB budget — the arithmetic the
-    // guard runs, pinned here so nobody "fixes" the default upward past
-    // the geometry it exists to catch
-    val refBytes = math.pow(32, 3).toLong * 32L * 768L * 4L
-    assert(refBytes > (256L << 20))
+    assert(kids(0) != kids(1))
   }
 
   test("empty input reaches the graceful empty-corpus path, not the budget probe") {
-    // the r8 budget guard ran head() on the input to learn dim — which
-    // threw NoSuchElementException on an empty frame BEFORE fit's own
-    // "empty corpus" require could fire (round-8 advice)
+    // an empty corpus must fail by name, not yield an empty levels frame
+    // that assigns every doc path [] and beams every query to one empty
+    // path with score 0
     val empty = Seq.empty[(Long, Array[Float])].toDF("doc_id", "vec")
     val e = intercept[IllegalArgumentException] {
-      HierarchicalKMeans.fit(empty, "vec", k = 2, depth = 2)
+      HierarchicalKMeans.fitLevels(empty, "vec", k = 2, depth = 2)
     }
     assert(e.getMessage.contains("empty corpus"), e.getMessage)
-    // a null first vector must not NPE the dim probe either
+    // an all-NULL vector column is the same empty corpus
     val nullVec = Seq((1L, Option.empty[Array[Float]]))
       .toDF("doc_id", "vec")
     val e2 = intercept[IllegalArgumentException] {
-      HierarchicalKMeans.fit(nullVec, "vec", k = 2, depth = 2)
+      HierarchicalKMeans.fitLevels(nullVec, "vec", k = 2, depth = 2)
     }
     assert(e2.getMessage.contains("empty corpus"), e2.getMessage)
   }
@@ -84,9 +57,9 @@ class HkmSpec extends SparkSpec {
     val near = (0 until 300).map(i =>
       (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
     val df = (far ++ near).toDF("doc_id", "vec").cache()
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 3, depth = 2,
+    val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 3, depth = 2,
       seed = 42L, maxIter = 10)
-    val paths = HierarchicalKMeans.assign(df, tree)
+    val paths = HierarchicalKMeans.assignByLevels(df, levels, depth = 2)
       .as[(Long, Seq[Int])].collect().toMap
     val farLens = far.map { case (id, _) => paths(id).length }.toSet
     assert(farLens == Set(1), s"far cluster should be a leaf: $farLens")
@@ -99,21 +72,29 @@ class HkmSpec extends SparkSpec {
     val data = (0 until 250).map(i =>
       (i.toLong, Array.fill(5)(rng.nextGaussian().toFloat)))
     val df = data.toDF("doc_id", "vec").cache()
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 3, depth = 2,
+    val k = 3
+    val levels = HierarchicalKMeans.fitLevels(df, "vec", k = k, depth = 2,
       seed = 42L, maxIter = 10)
-    data.take(25).foreach { case (_, v) =>
-      val beams = tree.k * tree.k // full width at depth 2
-      val out = HierarchicalKMeans.beamSearch(tree, v, beams)
-      assert(out.map(_._2).sliding(2).forall(s =>
+    val nodes = HkmReference.nodes(levels)
+    val q = df.where(col("doc_id") < 25)
+      .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
+    val greedy = HierarchicalKMeans.assignByLevels(df, levels, depth = 2)
+      .as[(Long, Seq[Int])].collect().toMap
+    val out = HierarchicalKMeans.beamSearchByLevels(q, levels, depth = 2,
+      beams = k * k) // full width at depth 2
+      .as[(Long, Long, Seq[Int], Double)].collect().groupBy(_._1)
+    assert(out.size == 25)
+    out.foreach { case (qid, rows) =>
+      val ranked = rows.sortBy(_._2).toSeq
+      assert(ranked.map(_._4).sliding(2).forall(s =>
         s.length < 2 || s.head >= s(1)), "scores must be non-increasing")
-      assert(out.map(_._1).contains(tree.assign(v)),
+      assert(ranked.map(_._3).contains(greedy(qid)),
         "greedy path must appear in the full-width beam")
       // every path is a valid trie walk
-      out.map(_._1).foreach { p =>
-        var n: Option[HierarchicalKMeans.Node] = Some(tree.root)
-        p.foreach { c =>
-          assert(n.isDefined && c >= 0 && c < tree.k)
-          n = n.get.children(c)
+      ranked.map(_._3).foreach { p =>
+        p.indices.foreach { i =>
+          assert(nodes.contains(p.take(i).mkString(",")) && p(i) >= 0 &&
+            p(i) < k, s"query $qid path $p")
         }
       }
     }
@@ -124,14 +105,15 @@ class HkmSpec extends SparkSpec {
     val df = (0 until 200).map(i =>
       (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
       .toDF("doc_id", "vec").cache()
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 4, depth = 2,
+    val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 4, depth = 2,
       seed = 9L, maxIter = 10)
     val q = df.limit(6)
       .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
-    val a = HierarchicalKMeans.beamSearchDf(q, tree, beams = 3).collect()
+    val a = HierarchicalKMeans.beamSearchByLevels(q, levels, depth = 2,
+      beams = 3).collect()
     assert(a.groupBy(_.getLong(0)).values.forall(_.length <= 3))
-    val b = HierarchicalKMeans.beamSearchDf(q.repartition(5), tree, beams = 3)
-      .collect()
+    val b = HierarchicalKMeans.beamSearchByLevels(q.repartition(5), levels,
+      depth = 2, beams = 3).collect()
     assert(a.map(_.toString).sorted.toSeq == b.map(_.toString).sorted.toSeq)
   }
 
@@ -142,16 +124,15 @@ class HkmSpec extends SparkSpec {
       .toDF("doc_id", "vec")
     // sampleCap far below the root size: the fit must pick the SAME
     // lowest-scrambled-rank sample regardless of how rows are partitioned
-    val a = HierarchicalKMeans.fit(df, "vec", k = 3, depth = 2,
+    val a = HierarchicalKMeans.fitLevels(df, "vec", k = 3, depth = 2,
       seed = 8L, maxIter = 8, sampleCap = 64)
-    val b = HierarchicalKMeans.fit(df.repartition(17), "vec", k = 3,
+    val b = HierarchicalKMeans.fitLevels(df.repartition(17), "vec", k = 3,
       depth = 2, seed = 8L, maxIter = 8, sampleCap = 64)
-    def flat(t: HierarchicalKMeans.Tree): Seq[(String, Seq[Float])] =
-      t.nodesByPrefix.map { case (p, n) =>
-        (p, n.cents.flatten.toSeq)
-      }
+    def flat(levels: org.apache.spark.sql.DataFrame) =
+      HkmReference.nodes(levels).map { case (p, c) => (p, c.flatten.toSeq) }
+    assert(flat(a).size >= 2)
     assert(flat(a) == flat(b),
-      "trees diverged across partitionings under bounded sampling")
+      "tries diverged across partitionings under bounded sampling")
   }
 
   test("fitLevels/assignByLevels == fit/assign (distributed path parity)") {
@@ -160,24 +141,27 @@ class HkmSpec extends SparkSpec {
     val far = (0 until 3).map(i => (1000L + i, Array(50f + i, 50f, 0f, 0f)))
     val near = (0 until 400).map(i =>
       (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
-    val df = (far ++ near).toDF("doc_id", "vec").cache()
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 3, depth = 3,
-      seed = 42L, maxIter = 10)
+    val data = far ++ near
+    val df = data.toDF("doc_id", "vec").cache()
+    // the plain-Scala fit (all members, no sampling or shuffle) and walk
+    // are the reference for the distributed fit and the join descent
+    val ref = HkmReference.fit(data, k = 3, depth = 3, seed = 42L,
+      maxIter = 10)
     val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 3, depth = 3,
       seed = 42L, maxIter = 10)
     // identical codebooks node for node...
-    val fromTree = tree.nodesByPrefix
-      .map { case (p, n) => (p, n.cents.flatten.toSeq) }.toMap
-    val fromLevels = levels.select("prefix", "cents")
-      .as[(String, Seq[Seq[Float]])].collect()
-      .map { case (p, c) => (p, c.flatten) }.toMap
-    assert(fromLevels == fromTree, "trained codebooks diverged")
+    val fromLevels = HkmReference.nodes(levels)
+    assert(fromLevels.keySet == ref.keySet, "trained node sets diverged")
+    ref.foreach { case (p, cents) =>
+      assert(fromLevels(p).map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq,
+        s"trained codebook diverged at node '$p'")
+    }
     // ...and identical assignments doc for doc (incl. short leaf paths)
-    val a = HierarchicalKMeans.assign(df, tree)
+    val got = HierarchicalKMeans.assignByLevels(df, levels, depth = 3)
       .as[(Long, Seq[Int])].collect().toMap
-    val b = HierarchicalKMeans.assignByLevels(df, levels, depth = 3)
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(a == b, "assignment paths diverged between tree and join descent")
+    assert(got == data.map { case (id, v) => id -> HkmReference.assign(ref, v) }
+      .toMap, "assignment paths diverged between the walk and join descent")
+    assert(got.values.exists(_.length == 1) && got.values.exists(_.length == 3))
   }
 
   test("assignment is partitioning-independent given a trained tree") {
@@ -185,10 +169,12 @@ class HkmSpec extends SparkSpec {
     val df = (0 until 200).map(i =>
       (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
       .toDF("doc_id", "vec").cache()
-    val tree = HierarchicalKMeans.fit(df, "vec", k = 2, depth = 3,
+    val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 2, depth = 3,
       seed = 5L, maxIter = 5)
-    val a = HierarchicalKMeans.assign(df, tree).collect().toSet
-    val b = HierarchicalKMeans.assign(df.repartition(13), tree).collect().toSet
+    val a = HierarchicalKMeans.assignByLevels(df, levels, depth = 3)
+      .collect().toSet
+    val b = HierarchicalKMeans.assignByLevels(df.repartition(13), levels,
+      depth = 3).collect().toSet
     assert(a == b)
   }
 }

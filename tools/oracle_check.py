@@ -3,7 +3,12 @@
 oracle SQL dumped by graft.Verify and compare against the Spark parquet
 results (columns sorted by name, values hashed after canonical rounding).
 
-Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir> [<parentOutDir>]
+
+With a parent dump (a graft.Verify run of another commit on the same
+fixtures), it also checks that every result table equals the parent's
+row for row and that every oracle_sql.json entry is byte-identical to
+the parent's — the proof that a change leaves all outputs unchanged.
 """
 import json, os, sys, math, zlib
 import duckdb
@@ -58,7 +63,37 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(by=list(out.columns)).reset_index(drop=True)
 
 
-def main(sf_dir, out_dir):
+def compare_parent(names, out_dir, parent_dir):
+    """Row-for-row table equality and byte-identical oracle SQL against
+    a parent Verify dump. Returns the number of differences."""
+    n_diff = 0
+    ours = json.load(open(f"{out_dir}/oracle_sql.json"))
+    theirs = json.load(open(f"{parent_dir}/oracle_sql.json"))
+    for name in sorted(set(ours) | set(theirs)):
+        if ours.get(name) != theirs.get(name):
+            print(f"DIFF {name}: oracle SQL differs from the parent's")
+            n_diff += 1
+    n_same = 0
+    for name in sorted(names):
+        try:
+            got = canon(pd.read_parquet(f"{out_dir}/{name}"))
+            want = canon(pd.read_parquet(f"{parent_dir}/{name}"))
+        except Exception as e:
+            print(f"DIFF {name}: table unreadable/uncanonical: {e}")
+            n_diff += 1
+            continue
+        if list(got.columns) != list(want.columns) or not got.equals(want):
+            print(f"DIFF {name}: rows differ from the parent's "
+                  f"({len(got)} vs {len(want)} rows)")
+            n_diff += 1
+            continue
+        n_same += 1
+    print(f"parent: {n_same} tables equal, {len(set(ours) | set(theirs))} "
+          f"oracle entries compared, {n_diff} differences")
+    return n_diff
+
+
+def main(sf_dir, out_dir, parent_dir=None):
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -102,8 +137,11 @@ def main(sf_dir, out_dir):
         print(f"PASS {name} ({len(got)} rows)")
         n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed")
-    return 1 if n_fail else 0
+    n_diff = compare_parent(items, out_dir, parent_dir) if parent_dir else 0
+    return 1 if n_fail or n_diff else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    if len(sys.argv) not in (3, 4):
+        sys.exit(__doc__)
+    sys.exit(main(*sys.argv[1:]))
