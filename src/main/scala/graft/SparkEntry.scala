@@ -967,7 +967,7 @@ object SparkEntry {
 
   /** The fixture's HKM trie: k=4, depth 2, one cached `fitLevels`
     * frame per dir that every hkm_* query serves from. */
-  private def hkmLevels(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def hkmLevels(s: SparkSession, dir: String): DataFrame = {
     val levels = ArtifactCache.frame(s, s"$dir/hkm4x2/levels") {
       graft.index.HierarchicalKMeans.fitLevels(
         docVecs(s, dir).select("doc_id", "vec"), "vec",

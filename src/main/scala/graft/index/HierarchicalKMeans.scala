@@ -287,11 +287,13 @@ object HierarchicalKMeans {
   }
 
   /** Distributed trie descent over [[fitLevels]] output: per level, LEFT
-    * join the current (doc, prefix) state with that level's codebooks on
-    * prefix and extend by the argmin code; docs whose node stopped
-    * splitting keep their (shorter) path — the per-node argmin walk,
-    * with no driver-resident codebooks and nothing broadcast but what
-    * AQE chooses to. The tests replay the walk in plain Scala
+    * join the current (doc, prefix) state with the (prefix, cents) rows
+    * and extend by the argmin code; docs whose node stopped splitting
+    * keep their (shorter) path — the per-node argmin walk, with no
+    * driver-resident codebooks and nothing broadcast but what AQE chooses
+    * to. Every level joins the same frame: a node's prefix has exactly
+    * `level` codes, so a level filter would select nothing the join
+    * does not. The tests replay the walk in plain Scala
     * (`HkmReference.assign`). Returns (idCol, path ARRAY<INT>).
     */
   def assignByLevels(docs: DataFrame, levels: DataFrame, depth: Int,
@@ -299,13 +301,12 @@ object HierarchicalKMeans {
     val extendUdf = udf { (vec: Array[Float], cents: Seq[Seq[Float]]) =>
       argminCode(vec, cents.map(_.toArray).toArray)
     }
+    val nodes = levels.select(col("prefix").as("__prefix"), col("cents").as("__cents"))
     var state = docs.select(col(idCol), col(vecCol).cast("array<float>")
       .as("__vec")).withColumn("__prefix", lit(""))
-    for (level <- 0 until depth) {
-      val lv = levels.where(col("level") === level)
-        .select(col("prefix").as("__prefix"), col("cents").as("__cents"))
+    for (_ <- 0 until depth) {
       state = state
-        .join(lv, Seq("__prefix"), "left")
+        .join(nodes, Seq("__prefix"), "left")
         .select(
           when(col("__cents").isNull, col("__prefix")) // leaf: path ends
             .when(col("__prefix") === "",
@@ -324,8 +325,9 @@ object HierarchicalKMeans {
   /** Trie-masked beam search over [[fitLevels]] output — the
     * generation-side analog of the reference's trie-constrained decoding
     * (generation_utils.py:709-1011) and the CodebookBeamSearch.search
-    * shape: `depth` rounds of (join beam state to the level's
-    * (prefix, cents) rows) → explode(≤K children, each scored by the
+    * shape: `depth` rounds of (join beam state to the (prefix, cents)
+    * rows — one frame for every level, as in [[assignByLevels]], so AQE
+    * builds its broadcast once) → explode(≤K children, each scored by the
     * node-local log-softmax of −‖q − child‖², accumulated along the
     * path) → per-query top-`beams` window. The trie mask stays
     * structural: only existing children expand, and a beam whose prefix
@@ -382,12 +384,11 @@ object HierarchicalKMeans {
       .withColumn("__done", lit(false))
     val w = Window.partitionBy(col(qidCol))
       .orderBy(col("__cum").desc, col("__path").asc)
-    for (level <- 0 until depth) {
-      val lv = levels.where(col("level") === level)
-        .select(col("prefix").as("__prefix"), col("cents").as("__cents"))
+    val nodes = levels.select(col("prefix").as("__prefix"), col("cents").as("__cents"))
+    for (_ <- 0 until depth) {
       val joined = state
         .withColumn("__prefix", array_join(col("__path"), ","))
-        .join(lv, Seq("__prefix"), "left")
+        .join(nodes, Seq("__prefix"), "left")
       // ONE conditional expand instead of an expanded/carried two-branch
       // union: referencing `joined` twice doubled the logical subtree per
       // level (~2^depth plan nodes); a single select keeps the plan —

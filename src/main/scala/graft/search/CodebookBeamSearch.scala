@@ -122,7 +122,8 @@ object CodebookBeamSearch {
   }
 
   /** (query_id, qvec) → (query_id, codes ARRAY<INT>, crank INT 1-based,
-    * logprob DOUBLE), R rows per query.
+    * logprob DOUBLE), R rows per query. A row whose vector is NULL has
+    * no beams, so it gets no rows.
     */
   def search(
       queries: DataFrame,
@@ -133,21 +134,45 @@ object CodebookBeamSearch {
       idCol: String = "query_id",
       vecCol: String = "qvec",
       doSample: Boolean = false,
-      sampleSeed: Long = 42L): DataFrame = {
+      sampleSeed: Long = 42L): DataFrame =
+    beamRows(queries, codebook, beams, metric, scoreMode, idCol, vecCol,
+      doSample, sampleSeed, keepVec = false)
+
+  /** [[search]] at its defaults, with each row's `qvec` carried onto its
+    * beam rows: (query_id, qvec, codes, crank, logprob). The retrievers
+    * score candidates against this column instead of joining the query
+    * batch back in. */
+  private[search] def searchKeepingVec(
+      queries: DataFrame, codebook: Codebook, beams: Int): DataFrame =
+    beamRows(queries, codebook, beams, "l2", "prod", "query_id", "qvec",
+      doSample = false, sampleSeed = 42L, keepVec = true)
+
+  private def beamRows(
+      queries: DataFrame,
+      codebook: Codebook,
+      beams: Int,
+      metric: String,
+      scoreMode: String,
+      idCol: String,
+      vecCol: String,
+      doSample: Boolean,
+      sampleSeed: Long,
+      keepVec: Boolean): DataFrame = {
     val bc = queries.sparkSession.sparkContext.broadcast(codebook)
     val beamUdf = udf { (id: String, qvec: Array[Float]) =>
-      searchOne(bc.value, qvec, beams, metric, scoreMode,
+      if (qvec == null) Seq.empty[(Seq[Int], Double)]
+      else searchOne(bc.value, qvec, beams, metric, scoreMode,
         doSample, sampleSeed, salt = id)
         .map { case (codes, score) => (codes.toSeq, score) }.toSeq
     }
+    val kept = if (keepVec) Seq(col(idCol), col(vecCol)) else Seq(col(idCol))
     queries
-      .select(col(idCol),
+      .select(kept :+
         posexplode(beamUdf(col(idCol).cast("string"), col(vecCol)))
-          .as(Seq("pos", "b")))
-      .select(
-        col(idCol),
+          .as(Seq("pos", "b")): _*)
+      .select(kept ++ Seq(
         col("b._1").as("codes"),
         (col("pos") + 1).as("crank"),
-        col("b._2").as("logprob"))
+        col("b._2").as("logprob")): _*)
   }
 }

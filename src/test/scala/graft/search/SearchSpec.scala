@@ -333,6 +333,155 @@ class SearchSpec extends SparkSpec {
     assert(e.getMessage.contains("dedup") && e.getMessage.contains("mean"))
   }
 
+  // the driver plan's fixture: an RQ index over the 0.001 embeddings, the
+  // same index with clusters split over several chunk rows, and a batch
+  // of hostile rows — a duplicate query_id with another vector, a zero
+  // and a NaN vector, a NULL qvec, a NULL query_id and a query whose
+  // every predicted cluster is missing from the index
+  private lazy val driverFixture = {
+    val beams = 8
+    val cb = RQTrainer.fit(docs, "vec", numLevels = 2, k = 8, seed = 42L)
+    val assigned = CodeAssigner.assign(docs, cb)
+    val vecs = docs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    // the orphan: the doc vector whose predicted clusters hold the fewest
+    // members, so dropping them from the index leaves the rest served
+    val sizes = assigned.groupBy("codes").count().collect()
+      .map(r => r.getSeq[Int](0) -> r.getLong(1)).toMap
+    def predicted(v: Array[Float]) = CodebookBeamSearch.searchOne(cb, v, beams).map(_._1.toSeq)
+    val orphanVec = vecs.toSeq.minBy { case (id, v) =>
+      (predicted(v).map(sizes.getOrElse(_, 0L)).sum, id) }._2
+    val orphan = predicted(orphanVec).toSet
+    val notOrphan = udf((codes: Seq[Int]) => !orphan.contains(codes))
+    def index(maxChunk: Int) = {
+      val ix = ClusterIndexBuilder.build(assigned, maxChunk)
+        .where(notOrphan(col("codes"))).cache()
+      ix.count()
+      ix
+    }
+    val whole = index(ClusterIndexBuilder.DefaultMaxChunk)
+    val chunked = index(3)
+    assert(chunked.groupBy("codes").count().where(col("count") > 1).count() > 0,
+      "no cluster is split over chunk rows")
+    val dim = vecs(0L).length
+    val batch = Seq[(java.lang.Long, Array[Float])](
+      (0L, vecs(0L)), (1L, vecs(1L)), (2L, vecs(2L)), (2L, vecs(5L)),
+      (3L, Array.fill(dim)(0f)), (4L, Array.fill(dim)(Float.NaN)),
+      (5L, null), (null, vecs(8L)), (6L, orphanVec), (7L, vecs(7L)))
+    (cb, whole, chunked, beams, localBatch(batch))
+  }
+
+  /** (query_id, qvec) rows as a LocalRelation — a batch on the driver. */
+  private def localBatch(rows: Seq[(java.lang.Long, Array[Float])]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("query_id", LongType),
+      StructField("qvec", ArrayType(FloatType))))
+    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (id, v) =>
+      Row(id, Option(v).map(_.toSeq).orNull) }: _*), schema)
+  }
+
+  private def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  private def rankedBits(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+      java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted.toSeq
+
+  test("a driver-resident batch is served on the driver, equal to the distributed plan to the bit") {
+    val (cb, whole, chunked, beams, local) = driverFixture
+    val distributed = local.localCheckpoint()
+    val k = 1000 // above every candidate count: the whole candidate set shows
+    for (metric <- Seq("ip", "l2", "cos"); (index, ixName) <- Seq(whole -> "whole", chunked -> "chunked")) {
+      def both(name: String)(run: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+        val (a, b) = (run(local), run(distributed))
+        val where = s"$name, $metric, $ixName index"
+        assert(onDriver(a), s"$where: the local batch took the distributed plan")
+        assert(!onDriver(b), s"$where: the checkpointed batch took the driver plan")
+        assert(a.schema == b.schema, where)
+        val rows = rankedBits(a)
+        assert(rows == rankedBits(b), where)
+        rows
+      }
+      val plain = both("retrieve") { q =>
+        CoarseFineRetriever.retrieve(q, index, docs, cb, beams = beams, k = k, metric = metric)
+      }
+      val loose = both("budgeted, loose") { q =>
+        CoarseFineRetriever.retrieveBudgeted(q, index, docs, cb, beams = beams, k = k,
+          budget = 1000000, metric = metric)
+      }
+      val tight = both("budgeted, tight") { q =>
+        CoarseFineRetriever.retrieveBudgeted(q, index, docs, cb, beams = beams, k = k,
+          budget = 12, metric = metric)
+      }
+      assert(loose == plain, s"$metric: an unlimited budget must equal retrieve")
+      assert(tight.size < loose.size, s"$metric: the tight budget pruned nothing")
+      // the duplicate id ranks both rows' candidates in one list; the NULL
+      // vector, the NULL id and the orphan query get none
+      val ids = plain.map(_._1).toSet
+      assert(ids == Set(0L, 1L, 2L, 3L, 4L, 7L), s"$metric: $ids")
+      assert(plain.filter(_._1 == 2L).map(_._3).distinct.size ==
+        plain.count(_._1 == 2L), "a doc repeats in the merged duplicate-id list")
+    }
+
+    // an empty batch: no rows and the same schema on both plans
+    val empty = localBatch(Nil)
+    val (a, b) = (CoarseFineRetriever.retrieve(empty, whole, docs, cb),
+      CoarseFineRetriever.retrieve(empty.localCheckpoint(), whole, docs, cb))
+    assert(a.schema == b.schema && a.collect().isEmpty && b.collect().isEmpty)
+  }
+
+  test("the driver plan falls back when the candidate pairs exceed the broadcast threshold") {
+    val (cb, whole, _, beams, local) = driverFixture
+    def runs = Seq(
+      CoarseFineRetriever.retrieve(local, whole, docs, cb, beams = beams, k = 5),
+      CoarseFineRetriever.retrieveBudgeted(local, whole, docs, cb, beams = beams,
+        k = 5, budget = 12))
+    val onDriverRows = runs.map { df => assert(onDriver(df)); rankedBits(df) }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      runs.zip(onDriverRows).foreach { case (df, want) =>
+        assert(!onDriver(df), "16-byte pairs against a 1-byte threshold stayed on the driver")
+        assert(rankedBits(df) == want)
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("an 8-query driver-resident batch runs at most two Spark jobs") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (cb, whole, _, beams, _) = driverFixture
+    docs.count() // materialize the cached corpus outside the counted calls
+    val vecs = docs.where(col("doc_id") < 8).collect()
+      .map(r => (java.lang.Long.valueOf(r.getLong(0)), r.getSeq[Float](1).toArray)).toSeq
+    val batch = localBatch(vecs)
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Array[org.apache.spark.sql.Row]): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val rows = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(rows.nonEmpty)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val plain = jobsOf(CoarseFineRetriever.retrieve(batch, whole, docs, cb,
+        beams = beams, k = 10).collect())
+      val budgeted = jobsOf(CoarseFineRetriever.retrieveBudgeted(batch, whole, docs, cb,
+        beams = beams, k = 10, budget = 12).collect())
+      assert(plain <= 2 && budgeted <= 2, s"retrieve ran $plain jobs, retrieveBudgeted $budgeted")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("topic mix r=0 drops the doc-proba term entirely") {
     val cb = RQTrainer.fit(docs, "vec", numLevels = 2, k = 8, seed = 42L)
     val multi = CodeAssigner.assignTopK(docs, cb, t = 2)

@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Test bridge to the listener bus: a listener reads its counts only
+  * after every event posted so far has been delivered. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
