@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: times every `SparkEntry.queries` entry (noop sink
@@ -368,23 +368,7 @@ object Bench {
       // across 5 whole-batch runs — the spread IS the stability
       // witness the round-over-round diff reads.
       val nServe = 2000
-      val serveQ = {
-        val nVecL = nVec
-        val raw = spark.range(nServe)
-          .select(col("id").as("query_id"), (col("id") % nVecL).as("doc_id"))
-          .join(docs.select("doc_id", "vec"), Seq("doc_id"))
-          .select(col("query_id"),
-            transform(col("vec"), (x, i) =>
-              x + lit(1e-3f) * sin(col("query_id") * lit(31) + i)).as("__p"))
-          .select(col("query_id"),
-            transform(col("__p"), x => x / sqrt(aggregate(col("__p"),
-              lit(0.0d), (acc, v) => acc + v * v))).as("qvec"))
-          .select(col("query_id"),
-            transform(col("qvec"), x => x.cast("float")).as("qvec"))
-          .cache()
-        raw.count()
-        raw
-      }
+      val serveQ = serveBatch(docs, nVec, nServe)
       def serveRuns(f: => Unit): (Double, Double) = {
         val runs = (1 to 5).map(_ => timed(f)._2).sorted
         (runs(runs.size / 2), runs.last)
@@ -884,5 +868,26 @@ object Bench {
     println(compact)
     System.err.println(compact)
     spark.stop()
+  }
+
+  /** The serve block's query batch: `n` distinct query ids over the
+    * corpus vectors (`nVec` of them, cycled), each perturbed
+    * deterministically and renormalized so the per-query top-k
+    * cardinalities are realistic. Cached and counted. */
+  private[graft] def serveBatch(docs: DataFrame, nVec: Long, n: Int): DataFrame = {
+    val batch = docs.sparkSession.range(n)
+      .select(col("id").as("query_id"), (col("id") % nVec).as("doc_id"))
+      .join(docs.select("doc_id", "vec"), Seq("doc_id"))
+      .select(col("query_id"),
+        transform(col("vec"), (x, i) =>
+          x + lit(1e-3f) * sin(col("query_id") * lit(31) + i)).as("__p"))
+      .select(col("query_id"),
+        transform(col("__p"), x => x / sqrt(aggregate(col("__p"),
+          lit(0.0d), (acc, v) => acc + v * v))).as("qvec"))
+      .select(col("query_id"),
+        transform(col("qvec"), x => x.cast("float")).as("qvec"))
+      .cache()
+    batch.count()
+    batch
   }
 }

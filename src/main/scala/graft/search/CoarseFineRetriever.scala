@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.util.SizeEstimator
 import graft.index.Codebook
 
 /** Coarse→fine retrieval: the reference's core serving shape
@@ -43,11 +44,22 @@ import graft.index.Codebook
   * table-backed batch (the catalog's, `graft.Bench`'s) takes the
   * distributed plan, and so does any other call.
   *
-  * Guard: the driver plan ships every candidate (query, doc) pair to
-  * every executor, so it falls back to the distributed plan when those
-  * pairs, at 16 bytes a pair, exceed `spark.sql.autoBroadcastJoinThreshold`
-  * — Spark's own limit on what it broadcasts — or when that threshold is
-  * ≤ 0 (broadcasts disabled).
+  * The driver plan runs when it is called: `retrieve` and
+  * `retrieveBudgeted` return a materialized frame for a driver-resident
+  * batch, and its errors surface at the call. A caller that times only
+  * the action on the returned frame times none of the driver plan, so
+  * time the call and the action together. Every other batch gets a lazy
+  * plan, as before.
+  *
+  * Guard: job 2 ships the doc → query-row map and the vectors of the
+  * rows with candidates to every executor, and collects one row per
+  * candidate (query, doc) pair. The call falls back to the distributed
+  * plan when that payload, measured with Spark's `SizeEstimator`,
+  * exceeds `spark.sql.autoBroadcastJoinThreshold` — Spark's own limit on
+  * what it broadcasts — or when that threshold is ≤ 0 (broadcasts
+  * disabled; checked first, before any work). The payload is known only
+  * after job 1, so a fallback costs the driver beam and one index scan
+  * on top of the distributed plan.
   *
   * Query rows: a row with a NULL `query_id` or a NULL `qvec` gets no
   * hits. Rows that share a `query_id` are ranked together, as one group;
@@ -110,7 +122,9 @@ object CoarseFineRetriever {
     *                      nci_scores. None = plain qd (use_topic_model
     *                      off).
     * @param topicRatio    the reference's --topic_score_ratio r ∈ [0,1]
-    * @return (query_id, rank, doc_id, score)
+    * @return (query_id, rank, doc_id, score); for a driver-resident batch
+    *         with max dedup and no topic mix, computed by this call (see
+    *         the object scaladoc), otherwise a lazy plan
     */
   def retrieve(
       queries: DataFrame,
@@ -199,6 +213,10 @@ object CoarseFineRetriever {
     * query's window ordered by (rscore desc, codes asc) — a RANGE frame,
     * so it runs through the last chunk of the row's own cluster — minus
     * `csize`: the members of every better cluster.
+    *
+    * A driver-resident batch is served by this call and returns a
+    * materialized frame (see the object scaladoc); any other batch
+    * returns a lazy plan.
     */
   def retrieveBudgeted(
       queries: DataFrame,
@@ -380,15 +398,18 @@ object CoarseFineRetriever {
       val rows = want.getOrElseUpdate(d, mutable.ArrayBuffer.empty[Int])
       if (rows.isEmpty || rows.last != i) rows += i
     }
-    val pairs = want.valuesIterator.map(_.length.toLong).sum
-    if (pairs * 16L > threshold) return distributed
-    if (pairs == 0L) return answer(Nil)
+    if (want.isEmpty) return answer(Nil)
+    // what job 2 ships to every executor: the doc → rows map and the
+    // vectors of the rows it names, sized against Spark's broadcast limit
+    val scoredRows = want.valuesIterator.flatten.toSet
+    val qvecs: Array[Array[java.lang.Float]] = batch.indices.map(i =>
+      if (scoredRows(i)) batch(i).getSeq[java.lang.Float](1).toArray else null).toArray
+    val plan = (want.map { case (d, rs) => d -> rs.toArray }, qvecs)
+    if (SizeEstimator.estimate(plan) > threshold) return distributed
 
     // job 2: one docs scan, each doc expanded into its query rows and
     // scored with the distributed plan's expression
-    val qvecs: Array[Array[java.lang.Float]] = batch.map(r =>
-      if (r.isNullAt(1)) null else r.getSeq[java.lang.Float](1).toArray)
-    val bcPlan = sc.broadcast((want.map { case (d, rs) => d -> rs.toArray }, qvecs))
+    val bcPlan = sc.broadcast(plan)
     val rowsOf = udf { (d: Long) => bcPlan.value._1.getOrElse(d, Array.empty[Int]) }
     val qvecOf = udf { (i: Int) => bcPlan.value._2(i) }
     val scored = docs
@@ -406,10 +427,7 @@ object CoarseFineRetriever {
       heaps.getOrElseUpdate(batch(r.getInt(0)).get(0), new TopKHeap(k, distinct = true))
         .offer(r.getLong(1), r.getDouble(2))
     answer(live.map(i => batch(i).get(0)).distinct.flatMap { id =>
-      heaps.get(id).toSeq.flatMap { h =>
-        val (ids, scores) = h.sorted
-        ids.indices.map(j => Row(id, j + 1, ids(j), scores(j)))
-      }
+      heaps.get(id).toSeq.flatMap(TopK.rankedRows(id, _))
     })
   }
 }

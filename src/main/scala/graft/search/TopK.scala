@@ -2,7 +2,7 @@ package graft.search
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -273,7 +273,8 @@ object TopK {
   /** The canonical ranked-hit output: scored (query_id, doc_id, score) rows
     * → (query_id, rank 1-based, doc_id, score), grouped bounded top-k.
     * Single definition of the engine's ranked-list contract (tie-break,
-    * rank base, column names) shared by every retrieval path.
+    * rank base, column names) shared by every retrieval path; a ranking
+    * built on the driver emits it through [[rankedRows]].
     * `distinctIds` folds a per-(query, doc) max-style dedup into the same
     * aggregate: one row per doc, at its better-ranked score.
     */
@@ -285,5 +286,13 @@ object TopK {
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sd")))
       .select(col("query_id"), (col("pos") + 1).as("rank"),
         col("sd.id").as("doc_id"), col("sd.score").as("score"))
+  }
+
+  /** [[ranked]]'s rows for one query's heap built on the driver: the
+    * same column order and rank base, so a driver-side ranking keeps the
+    * contract by construction. */
+  private[search] def rankedRows(queryId: Any, heap: TopKHeap): Seq[Row] = {
+    val (ids, scores) = heap.sorted
+    ids.indices.map(j => Row(queryId, j + 1, ids(j), scores(j)))
   }
 }

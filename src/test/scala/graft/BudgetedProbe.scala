@@ -3,16 +3,23 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Ad-hoc probe (test scope): isolate coarse_fine_budgeted_qps from the
-  * rest of the Bench engine block to localize the r5→r6 drop — same
-  * fixtures, same artifacts, nothing else running in the session.
-  * `sbt 'Test/runMain graft.BudgetedProbe <sfDir>'`
+/** Ad-hoc probe (test scope): `graft.Bench`'s coarse-fine serve block on
+  * its own — the same sf fixtures, codebook, index and 2000-query batch
+  * ([[Bench.serveBatch]]), nothing else running in the session. The batch
+  * is cached, not driver-resident, so `retrieve` and `retrieveBudgeted`
+  * take the distributed plan: this is the workload for that side of
+  * `CoarseFineRetriever`'s plan choice (perfbench `serve` sends
+  * driver-resident batches). After one warm-up call each, prints one JSON
+  * line with every timed run (seconds, noop sink) and the medians.
+  * `sbt 'Test/runMain graft.BudgetedProbe <sfDir> [reps]'`
   */
 object BudgetedProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val sfDir = args(0)
+    val reps = if (args.length > 1) args(1).toInt else 5
+    val cpus = math.min(32, Runtime.getRuntime.availableProcessors)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
@@ -23,36 +30,28 @@ object BudgetedProbe {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    spark.range(1000).select(avg(col("id"))).write.format("noop").mode("overwrite").save()
+    // Bench's engine block: the same docs, codebook and index
     val docs = SparkEntry.docVecs(spark, sfDir).cache()
     val nVec = docs.count()
-    val queries = SparkEntry.queryVecs(spark, sfDir).cache()
-    val nQ = queries.count().toDouble
     val cb = RQTrainer.fit(docs.select("doc_id", "vec"), "vec",
       numLevels = 2, k = 8, seed = 42L)
-    val index = ClusterIndexBuilder.build(CodeAssigner.assign(docs, cb)).cache()
+    val index = ClusterIndexBuilder.build(CodeAssigner.assign(docs, cb).cache()).cache()
     index.count()
-    val k = math.min(1000, nVec.toInt)
-    for (i <- 1 to 4) {
-      val sec = timed {
-        CoarseFineRetriever.retrieveBudgeted(
-          queries.select("query_id", "qvec"), index,
-          docs.select("doc_id", "vec"), cb, beams = 4, k = k,
-          budget = math.max(k, 100))
-          .write.format("noop").mode("overwrite").save()
-      }
-      println(f"budgeted iter $i: ${sec}%.3f s  (${nQ / sec}%.1f qps)")
+    val serveQ = Bench.serveBatch(docs, nVec, 2000)
+    val calls = Seq(
+      "coarse_fine" -> (() => CoarseFineRetriever.retrieve(serveQ, index,
+        docs.select("doc_id", "vec"), cb, beams = 4, k = 10)),
+      "budgeted" -> (() => CoarseFineRetriever.retrieveBudgeted(serveQ, index,
+        docs.select("doc_id", "vec"), cb, beams = 4, k = 10, budget = 100)))
+    def run(call: () => org.apache.spark.sql.DataFrame): Double =
+      timed(call().write.format("noop").mode("overwrite").save())
+    calls.foreach { case (_, call) => run(call) }
+    val fields = calls.map { case (name, call) =>
+      val runs = (1 to reps).map(_ => run(call)).sorted
+      f""""${name}_med_s":${runs(runs.size / 2)}%.4f,""" +
+        s""""${name}_runs_s":${runs.map(s => f"$s%.4f").mkString("[", ",", "]")}"""
     }
-    // the plain retrieve for contrast
-    for (i <- 1 to 2) {
-      val sec = timed {
-        CoarseFineRetriever.retrieve(
-          queries.select("query_id", "qvec"), index,
-          docs.select("doc_id", "vec"), cb, beams = 4, k = k)
-          .write.format("noop").mode("overwrite").save()
-      }
-      println(f"plain    iter $i: ${sec}%.3f s  (${nQ / sec}%.1f qps)")
-    }
+    println(fields.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,4 +19,20 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(scale: String): String = s"/root/testdata/sf$scale"
+
+  /** Spark jobs started while `body` runs, counted by a listener that
+    * is read only after the listener bus has delivered every event. */
+  def countJobs(body: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+      n.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -301,8 +301,6 @@ class StressSpec extends SparkSpec {
 
   test("hkm fit job count grows with depth, not node count") {
     import graft.index.HierarchicalKMeans
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
 
     val rng = new scala.util.Random(11)
@@ -310,27 +308,6 @@ class StressSpec extends SparkSpec {
       (i.toLong, Array.fill(6)(rng.nextGaussian().toFloat)))
       .toDF("doc_id", "vec").cache()
     df.count()
-
-    def countJobs(body: => Unit): Int = {
-      val n = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // listener bus is async — poll until the count stops moving
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(150)
-          val cur = n.get()
-          if (cur == last) stable += 1 else { stable = 0; last = cur }
-        }
-        n.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
 
     // same depth, 4x the fan-out (k=2 → 3 nodes max vs k=8 → 9 nodes):
     // job count must be identical — per-LEVEL scheduling

@@ -431,7 +431,7 @@ class SearchSpec extends SparkSpec {
     assert(a.schema == b.schema && a.collect().isEmpty && b.collect().isEmpty)
   }
 
-  test("the driver plan falls back when the candidate pairs exceed the broadcast threshold") {
+  test("the driver plan falls back when its payload exceeds the broadcast threshold") {
     val (cb, whole, _, beams, local) = driverFixture
     def runs = Seq(
       CoarseFineRetriever.retrieve(local, whole, docs, cb, beams = beams, k = 5),
@@ -443,7 +443,7 @@ class SearchSpec extends SparkSpec {
     spark.conf.set(key, "1")
     try {
       runs.zip(onDriverRows).foreach { case (df, want) =>
-        assert(!onDriver(df), "16-byte pairs against a 1-byte threshold stayed on the driver")
+        assert(!onDriver(df), "a payload over a 1-byte threshold stayed on the driver")
         assert(rankedBits(df) == want)
       }
     } finally prev match {
@@ -453,33 +453,18 @@ class SearchSpec extends SparkSpec {
   }
 
   test("an 8-query driver-resident batch runs at most two Spark jobs") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (cb, whole, _, beams, _) = driverFixture
     docs.count() // materialize the cached corpus outside the counted calls
     val vecs = docs.where(col("doc_id") < 8).collect()
       .map(r => (java.lang.Long.valueOf(r.getLong(0)), r.getSeq[Float](1).toArray)).toSeq
     val batch = localBatch(vecs)
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Array[org.apache.spark.sql.Row]): Int = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      val rows = body
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      assert(rows.nonEmpty)
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val plain = jobsOf(CoarseFineRetriever.retrieve(batch, whole, docs, cb,
-        beams = beams, k = 10).collect())
-      val budgeted = jobsOf(CoarseFineRetriever.retrieveBudgeted(batch, whole, docs, cb,
-        beams = beams, k = 10, budget = 12).collect())
-      assert(plain <= 2 && budgeted <= 2, s"retrieve ran $plain jobs, retrieveBudgeted $budgeted")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def jobsOf(body: => Array[org.apache.spark.sql.Row]): Int =
+      countJobs(assert(body.nonEmpty))
+    val plain = jobsOf(CoarseFineRetriever.retrieve(batch, whole, docs, cb,
+      beams = beams, k = 10).collect())
+    val budgeted = jobsOf(CoarseFineRetriever.retrieveBudgeted(batch, whole, docs, cb,
+      beams = beams, k = 10, budget = 12).collect())
+    assert(plain <= 2 && budgeted <= 2, s"retrieve ran $plain jobs, retrieveBudgeted $budgeted")
   }
 
   test("topic mix r=0 drops the doc-proba term entirely") {
