@@ -17,7 +17,7 @@ import graft.io.MeviIO
   *
   * Every `queries` entry is an operator from SURVEY.md §2 (id in the name),
   * runs on the driver fixtures (TESTDATA.md), and — where SQL-expressible —
-  * has a DuckDB oracle in `oracleSql` with identical column names/ordering.
+  * has a DuckDB oracle in `oracles` with identical column names/ordering.
   * Non-SQL-expressible entries (MLlib KMeans-derived) get rows-only checks.
   */
 object SparkEntry {
@@ -292,20 +292,15 @@ object SparkEntry {
   private[graft] val TokensPerShard = 4096L
 
   /** Trained unigram-LM tokenizer for a fixture dir — ONE cache key
-    * shared by text_unigram_tokenize, the curated export and the pack
-    * witness, and the registration point for their generated oracles
-    * (dirUnigram feeds oracleSql's dynamic section). */
+    * shared by text_unigram_tokenize, the curated export, the pack
+    * witness and their generated oracles. */
   private def unigramOf(s: SparkSession,
-      dir: String): graft.pipeline.Unigram.Model = {
-    val model = ArtifactCache.value(s"$dir/unigram48") {
+      dir: String): graft.pipeline.Unigram.Model =
+    ArtifactCache.value(s"$dir/unigram48") {
       traced("unigram_train")(
         graft.pipeline.Unigram.train(t(s, dir, "documents"),
           vocabSize = 48, maxPieceLen = 4, seedSize = 200, nIters = 4))
     }
-    dirUnigram.put(dir, model)
-    lastDir = Some(dir)
-    model
-  }
 
   /** Token-id stream → training artifact: pack a tokenized corpus
     * (doc_id, n_tokens, ids) into fixed `seqLen`-token sequences
@@ -840,66 +835,15 @@ object SparkEntry {
       .select(col("vec_id").as("doc_id"), col("embedding").as("vec"),
         col("label"))
 
-  /** Trained artifacts for the oracle generator, keyed by fixture dir.
-    * `oracleSql` has no dir parameter (fixed driver contract), so the dump
-    * targets `lastDir` — the dir the most recent query ran against. Verify
-    * runs every query on ONE dir then dumps, so lastDir is always right
-    * there; keying by dir (rather than keeping bare "last trained" values)
-    * ensures the three artifact kinds can never mix fixture dirs even if a
-    * caller interleaves dirs before dumping. */
-  private val dirCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebook]
-  private val dirIvfCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebook]
-  // SemDeDup refinement sub-codebook: None = the refined query RAN at
-  // this dir and found no over-cap cell (oracle replays the base-only
-  // branch); Some(cb) = the trained sub artifact to inline
-  private val dirSemSubCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Codebook]]
-  // derived-k SemDeDup codebook (k = autoCells(n)): the headline
-  // dedup_semdedup entry trains THIS, not the fixed ivf16
-  private val dirSemScaledCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebook]
-  private val dirRerankers =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]
-  private val dirRotations =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.index.PcaRotation.Rotation]
-  private val dirPqCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.index.PQCodebook]
-  private val dirIvfPq =
-    new java.util.concurrent.ConcurrentHashMap[String, (Codebook, graft.index.PQCodebook)]
-  // the trained HKM trie (fitLevels frame); oracleSql collects it
-  private val dirHkmLevels =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  private val dirSwapArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Seq[(String, Array[Float])], Codebook)]
-  private val dirAlignments =
-    new java.util.concurrent.ConcurrentHashMap[String, (Codebook, Codebook, Array[Array[Int]])]
-  private val dirBpeMerges =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]
-  private val dirUnigram =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.pipeline.Unigram.Model]
-  private val dirLifecycle =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Seq[(String, String)], Codebook)]
-  private val dirQualityLR =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]
-  @volatile private var lastDir: Option[String] = None
-
   /** Session-memoized RQ artifacts per fixture dir (path-keyed caching,
     * mirroring MEVI/main_models.py:2944-2978). */
-  private def rqCodebook(s: SparkSession, dir: String): Codebook = {
-    val cb = ArtifactCache.codebook(s"$dir/rq2x3") {
+  private[graft] def rqCodebook(s: SparkSession, dir: String): Codebook =
+    ArtifactCache.codebook(s"$dir/rq2x3") {
       // maxIter 10 suffices at the fixture geometry (2×8 over ≤5k vecs
       // converges in <10 iters); the library default stays 20
       RQTrainer.fit(docVecs(s, dir).select("doc_id", "vec"),
         "vec", numLevels = 2, k = 8, seed = 42L, maxIter = 10)
     }
-    dirCodebooks.put(dir, cb)
-    lastDir = Some(dir)
-    cb
-  }
 
   private def rqAssignments(s: SparkSession, dir: String): DataFrame =
     // frame cache is validity-checked per live context; the codebook is a
@@ -967,15 +911,24 @@ object SparkEntry {
 
   /** The fixture's HKM trie: k=4, depth 2, one cached `fitLevels`
     * frame per dir that every hkm_* query serves from. */
-  private[graft] def hkmLevels(s: SparkSession, dir: String): DataFrame = {
-    val levels = ArtifactCache.frame(s, s"$dir/hkm4x2/levels") {
+  private[graft] def hkmLevels(s: SparkSession, dir: String): DataFrame =
+    ArtifactCache.frame(s, s"$dir/hkm4x2/levels") {
       graft.index.HierarchicalKMeans.fitLevels(
         docVecs(s, dir).select("doc_id", "vec"), "vec",
         k = 4, depth = 2, seed = 42L, maxIter = 10)
     }
-    dirHkmLevels.put(dir, levels)
-    lastDir = Some(dir)
-    levels
+
+  /** The trained HKM trie's (prefix, centroids) rows — one per node
+    * (≤ 5 at k=4/depth 2) — in DFS order: integer-path order is the
+    * trie's pre-order walk, the shape the hkm_* oracles inline. */
+  private[graft] def hkmNodes(s: SparkSession,
+      dir: String): Seq[(String, Array[Array[Float]])] = {
+    import s.implicits._
+    hkmLevels(s, dir).select("prefix", "cents")
+      .as[(String, Array[Array[Float]])].collect().toSeq
+      .sortBy { case (p, _) =>
+        if (p.isEmpty) Seq.empty[Int] else p.split(',').toSeq.map(_.toInt)
+      }(scala.math.Ordering.Implicits.seqOrdering)
   }
 
   private def hkmAssign(s: SparkSession, dir: String): DataFrame =
@@ -1047,8 +1000,6 @@ object SparkEntry {
       RQTrainer.fit(docVecs(s, dir).select("doc_id", "vec"), "vec",
         numLevels = 1, k = 16, seed = 42L, maxIter = 10)
     }
-    dirIvfCodebooks.put(dir, cb)
-    lastDir = Some(dir)
     val cells = ArtifactCache.frame(s, s"$dir/ivf16/cells",
         layout = Seq(col("cell"))) {
       CodeAssigner.assign(docVecs(s, dir).select("doc_id", "vec"), cb)
@@ -1076,8 +1027,6 @@ object SparkEntry {
       RQTrainer.fit(docVecs(s, dir).select("doc_id", "vec"), "vec",
         numLevels = 1, k = k, seed = 42L, maxIter = 10)
     }
-    dirSemScaledCodebooks.put(dir, cb)
-    lastDir = Some(dir)
     val cells = ArtifactCache.frame(s, s"$dir/semscaled$k/cells",
         layout = Seq(col("cell"))) {
       CodeAssigner.assign(docVecs(s, dir).select("doc_id", "vec"), cb)
@@ -1089,15 +1038,11 @@ object SparkEntry {
 
   /** Plain-PQ codebook over the fixture embeddings: 4 slices × 8 cents
     * (dim 64 → 16-wide sub-vectors), dir-memoized like the RQ artifacts. */
-  private def pqCodebookOf(s: SparkSession, dir: String): graft.index.PQCodebook = {
-    val cb = ArtifactCache.value(s"$dir/pq4x8") {
+  private def pqCodebookOf(s: SparkSession, dir: String): graft.index.PQCodebook =
+    ArtifactCache.value(s"$dir/pq4x8") {
       graft.index.PQTrainer.fit(docVecs(s, dir).select("doc_id", "vec"),
         "vec", numSub = 4, k = 8, seed = 42L, maxIter = 10)
     }
-    dirPqCodebooks.put(dir, cb)
-    lastDir = Some(dir)
-    cb
-  }
 
   /** IVF-PQ composite index over the fixture embeddings: 16 coarse cells,
     * 4×8 residual PQ. Codebooks cache across sessions; the (cheap,
@@ -1112,8 +1057,6 @@ object SparkEntry {
       ArtifactCache.frame(s, codesKey, persist = false)(idx.codes): Unit
       (idx.coarse, idx.pq)
     }
-    dirIvfPq.put(dir, (coarse, pq))
-    lastDir = Some(dir)
     // warm path (fresh session, cached codebooks): one train-free encode
     val codes = ArtifactCache.frame(s, codesKey, persist = false) {
       graft.search.IVFPQ.encode(docVecs(s, dir).select("doc_id", "vec"),
@@ -1121,6 +1064,113 @@ object SparkEntry {
     }
     graft.search.IVFPQ.Index(coarse, pq, codes)
   }
+
+  /** SemDeDup refined at maxCell=64: the result frame plus the trained
+    * refinement sub-codebook it used — None when no cell tripped the
+    * cap, else the codebook whose k derives from the hot count inside
+    * [[Dedup.semDeDupRefined]]. Memoized per live context so the
+    * query and its oracle share the one branch decision. */
+  private[graft] def semRefinedOf(s: SparkSession, dir: String)
+      : (DataFrame, Option[Codebook]) =
+    ArtifactCache.sessionValue(s.sparkContext, s"$dir/semrefined") {
+      val ivf = ivfOf(s, dir)
+      var sub: Option[Codebook] = None
+      val trainer = (d: DataFrame, k: Int) => {
+        val cb2 = ArtifactCache.codebook(s"$dir/semsub$k") {
+          graft.index.RQTrainer.fit(d.select("doc_id", "vec"), "vec",
+            numLevels = 1, k = k, seed = 43L, maxIter = 10)
+        }
+        sub = Some(cb2)
+        val cells2 = ArtifactCache.frame(s, s"$dir/semsub$k/cells",
+            layout = Seq(col("cell"))) {
+          graft.index.CodeAssigner.assign(d.select("doc_id", "vec"), cb2)
+            .select(col("doc_id"), col("codes").getItem(0).as("cell"))
+        }
+        graft.search.IVFIndex.IVF(cb2, cells2)
+      }
+      val out = graft.pipeline.Dedup.semDeDupRefined(
+        t(s, dir, "embeddings"), ivf.cells, ivf.codebook, tau = 0.35,
+        maxCell = 64, targetCell = 32, seed = 43L, train = Some(trainer))
+      (out, sub)
+    }
+
+  /** GPT-3-style quality classifier: LR weights trained on the
+    * doc_id ≡ 0 (mod 7) target slice vs the corpus, over the same 64
+    * md5-bucket features as sample_dsir. */
+  private def qualityLrOf(s: SparkSession,
+      dir: String): (Array[Double], Double) =
+    ArtifactCache.value(s"$dir/qualitylr") {
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      graft.pipeline.QualityClassifier.train(docs,
+        docs.where(pmod(col("doc_id"), lit(7L)) === 0L), buckets = 64)
+    }
+
+  /** The 24-merge BPE table trained on the fixture documents (shared by
+    * text_bpe_tokenize and the lifecycle entry). */
+  private def bpeMergesOf(s: SparkSession,
+      dir: String): Seq[(String, String)] =
+    ArtifactCache.value(s"$dir/bpe24") {
+      graft.pipeline.Bpe.train(t(s, dir, "documents"), nMerges = 24)
+    }
+
+  /** Lifecycle doc vectors: BPE-tokenized documents hash-embedded
+    * through the V1 seam (the tokenize stage feeds the encoder). */
+  private def lifecycleVecs(s: SparkSession, dir: String): DataFrame =
+    ArtifactCache.frame(s, s"$dir/bpe24/hash16/vecs") {
+      val toks = graft.pipeline.Bpe.applyMerges(t(s, dir, "documents"),
+          bpeMergesOf(s, dir))
+        .where(col("tokens") =!= "")
+        .select(col("doc_id"), split(col("tokens"), ",").as("toks"))
+      graft.functions.TextEmbedder.hashEmbedTokens(
+        toks, "doc_id", "toks", dim = 16)
+    }
+
+  /** RQ codebook trained on the lifecycle vectors. */
+  private def lifecycleCodebookOf(s: SparkSession, dir: String): Codebook =
+    ArtifactCache.codebook(s"$dir/bpe24/hash16/rq2x8") {
+      RQTrainer.fit(lifecycleVecs(s, dir).select("doc_id", "vec"), "vec",
+        numLevels = 2, k = 8, seed = 42L, maxIter = 10)
+    }
+
+  /** V11 alignment: the RQ codebook, its seed-7 refresh, and the
+    * Hungarian match of each level's fresh centroids to the old ones. */
+  private def alignmentOf(s: SparkSession,
+      dir: String): (Codebook, Codebook, Array[Array[Int]]) = {
+    val old = rqCodebook(s, dir)
+    val fresh = ArtifactCache.codebook(s"$dir/rq2x3/refresh7") {
+      RQTrainer.fit(docVecs(s, dir).select("doc_id", "vec"), "vec",
+        numLevels = 2, k = 8, seed = 7L, maxIter = 10)
+    }
+    val perms = old.levels.indices.map(m =>
+      graft.index.CodebookAligner.alignOptimal(
+        old.levels(m), fresh.levels(m))).toArray
+    (old, fresh, perms)
+  }
+
+  /** V15 learned reranker: LR over the aligned ANN/coarse candidate
+    * features, labels from label ground truth (train-once, like the RQ
+    * codebook). */
+  private def rerankerOf(s: SparkSession, dir: String)
+      : org.apache.spark.ml.classification.LogisticRegressionModel =
+    ArtifactCache.value(s"$dir/reranker") {
+      val (ann, coarse) = annCoarseCandidates(s, dir)
+      graft.eval.Reranker.train(graft.eval.Reranker.features(
+        ann.join(coarse, Seq("query_id", "doc_id"), "left")
+          .join(queryVecs(s, dir).select(col("query_id"),
+            col("label").as("qlab")), Seq("query_id"))
+          .join(docVecs(s, dir).select(col("doc_id"),
+            col("label").as("dlab")), Seq("doc_id"))
+          .withColumn("label",
+            when(col("qlab") === col("dlab"), 1.0).otherwise(0.0))))
+    }
+
+  /** V3/OPQ: 4-component PCA rotation of the fixture embeddings. */
+  private def pcaRotationOf(s: SparkSession,
+      dir: String): graft.index.PcaRotation.Rotation =
+    ArtifactCache.value(s"$dir/pca4") {
+      graft.index.PcaRotation.fit(t(s, dir, "embeddings"), "embedding",
+        k = 4)
+    }
 
   /** Force-build the per-dir trained artifacts: RQ codebook fit +
     * assignment + cluster index, IVF cells, ensemble candidate tables, and
@@ -1132,19 +1182,19 @@ object SparkEntry {
     semScaledIvfOf(s, dir).cells.count()
     pqCodebookOf(s, dir): Unit
     ivfPqOf(s, dir).codes.count()
-    // constructing the v15/PCA frames materializes the candidate frames,
-    // the one-time LR fit, and the PCA rotation fit (ArtifactCache-backed,
-    // all eager at frame-construction time); the plans themselves stay lazy
+    // constructing the v15 frame materializes the candidate frames and
+    // the one-time LR fit (ArtifactCache-backed, eager at construction);
+    // the plan itself stays lazy
     queries("v15_rerank")(s, dir)
-    queries("sample_quality_pareto")(s, dir)
-    queries("v_opq_rotate")(s, dir)
+    qualityLrOf(s, dir): Unit
+    pcaRotationOf(s, dir): Unit
     hkmLevels(s, dir): Unit
     // multiclus assignments + index + doc-proba frames (T=2 and T=3), the
     // v11 refresh codebook, the NN-descent graph and the token-containment
     // matches — all ArtifactCache-backed, eager at construction
     queries("coarse_fine_topic")(s, dir)
     queries("coarse_fine_topic_add_t3")(s, dir)
-    queries("v11_align")(s, dir)
+    alignmentOf(s, dir): Unit
     knnGraphOf(s, dir): Unit
     answerMatches(s, dir): Unit
     ArtifactCache.frame(s, s"$dir/dedup/sig8", persist = false) {
@@ -1890,12 +1940,7 @@ object SparkEntry {
     // the kept SET replays bit-for-bit
     "sample_quality_pareto" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val target = docs.where(pmod(col("doc_id"), lit(7L)) === 0L)
-      val (coefs, icpt) = ArtifactCache.value(s"$dir/qualitylr") {
-        graft.pipeline.QualityClassifier.train(docs, target, buckets = 64)
-      }
-      dirQualityLR.put(dir, (coefs, icpt))
-      lastDir = Some(dir)
+      val (coefs, icpt) = qualityLrOf(s, dir)
       val scored = graft.pipeline.QualityClassifier.score(
         docs, coefs, icpt, buckets = 64)
       graft.pipeline.QualityClassifier.paretoDecide(
@@ -2025,11 +2070,8 @@ object SparkEntry {
     // unchanged on the swapped source — hash-proof the downstream never
     // cared which encoder made the vectors
     "encoder_swap" -> ((s, dir) => {
-      val wv = swapWordVecs(s, dir)
       val cb = swapCodebook(s, dir)
       val docs = swapDocVecs(s, dir)
-      dirSwapArtifacts.put(dir, (wv, cb))
-      lastDir = Some(dir)
       val index = ArtifactCache.frame(s, s"$dir/w2v16/rq2x8/index") {
         ClusterIndexBuilder.build(
           CodeAssigner.assign(docs.select("doc_id", "vec"), cb))
@@ -2402,29 +2444,11 @@ object SparkEntry {
     // oracle replays both inlined codebooks, the dynamic over-cap cell
     // detection, and the two-pass union — so "production raises k with
     // n" is a hash-checked mechanism, not a doc promise
-    "dedup_semdedup_refined" -> ((s, dir) => {
-      val ivf = ivfOf(s, dir)
-      dirSemSubCodebooks.put(dir, None)
-      val trainer = (d: DataFrame, k: Int) => {
-        val cb2 = ArtifactCache.codebook(s"$dir/semsub$k") {
-          graft.index.RQTrainer.fit(d.select("doc_id", "vec"), "vec",
-            numLevels = 1, k = k, seed = 43L, maxIter = 10)
-        }
-        dirSemSubCodebooks.put(dir, Some(cb2))
-        val cells2 = ArtifactCache.frame(s, s"$dir/semsub$k/cells",
-            layout = Seq(col("cell"))) {
-          graft.index.CodeAssigner.assign(d.select("doc_id", "vec"), cb2)
-            .select(col("doc_id"), col("codes").getItem(0).as("cell"))
-        }
-        graft.search.IVFIndex.IVF(cb2, cells2)
-      }
-      graft.pipeline.Dedup.semDeDupRefined(
-          t(s, dir, "embeddings"), ivf.cells, ivf.codebook, tau = 0.35,
-          maxCell = 64, targetCell = 32, seed = 43L, train = Some(trainer))
+    "dedup_semdedup_refined" -> ((s, dir) =>
+      semRefinedOf(s, dir)._1
         .select(col("vec_id"), col("cell").cast("long").as("cell"),
           col("cent_sim_micro"), col("kept"), col("refined"))
-        .orderBy("vec_id")
-    }),
+        .orderBy("vec_id")),
 
     // Text analysis #2: language ID (stopword-ratio heuristic)
     "text_langid" -> ((s, dir) =>
@@ -2726,15 +2750,10 @@ object SparkEntry {
     // stand-in to learned-subword tokenization — broadcast merge list,
     // per-partition word memo; oracle replays the same merges as nested
     // leftmost-first replaces, see GeneratedOracles.bpeTokenizeSql)
-    "text_bpe_tokenize" -> ((s, dir) => {
-      val merges = ArtifactCache.value(s"$dir/bpe24") {
-        graft.pipeline.Bpe.train(t(s, dir, "documents"), nMerges = 24)
-      }
-      dirBpeMerges.put(dir, merges)
-      lastDir = Some(dir)
-      graft.pipeline.Bpe.applyMerges(t(s, dir, "documents"), merges)
-        .orderBy("doc_id")
-    }),
+    "text_bpe_tokenize" -> ((s, dir) =>
+      graft.pipeline.Bpe.applyMerges(t(s, dir, "documents"),
+          bpeMergesOf(s, dir))
+        .orderBy("doc_id")),
 
     // ...and the reference's ACTUAL tokenizer family (VERDICT r13 #4):
     // the T5 tokenizer MEVI loads is SentencePiece unigram-LM, not BPE
@@ -2970,28 +2989,11 @@ object SparkEntry {
     // the signal that drops below 1.0 exactly when the beam misses the
     // query's own cluster, which is what serving quality means here.
     "pipeline_index_serve" -> ((s, dir) => {
-      val docsT = t(s, dir, "documents")
-      // P11: learned tokenizer (trained artifact, shared with
-      // text_bpe_tokenize's $dir/bpe24 cache key)
-      val merges = ArtifactCache.value(s"$dir/bpe24") {
-        graft.pipeline.Bpe.train(docsT, nMerges = 24)
-      }
-      dirBpeMerges.put(dir, merges)
-      val toks = graft.pipeline.Bpe.applyMerges(docsT, merges)
-        .where(col("tokens") =!= "")
-        .select(col("doc_id"), split(col("tokens"), ",").as("toks"))
-      // V1 seam: the tokenize stage FEEDS the encoder (pre-tokenized)
-      val vecs = ArtifactCache.frame(s, s"$dir/bpe24/hash16/vecs") {
-        graft.functions.TextEmbedder.hashEmbedTokens(
-          toks, "doc_id", "toks", dim = 16)
-      }
+      // P11 → V1: learned BPE tokens (shared with text_bpe_tokenize)
+      // feed the hash encoder
+      val vecs = lifecycleVecs(s, dir)
       // V4: RQ codebook trained on the lifecycle vectors
-      val cb = ArtifactCache.codebook(s"$dir/bpe24/hash16/rq2x8") {
-        RQTrainer.fit(vecs.select("doc_id", "vec"), "vec",
-          numLevels = 2, k = 8, seed = 42L, maxIter = 10)
-      }
-      dirLifecycle.put(dir, (merges, cb))
-      lastDir = Some(dir)
+      val cb = lifecycleCodebookOf(s, dir)
       // V5 + A1: assign + cluster inverted index
       val index = ArtifactCache.frame(s, s"$dir/bpe24/hash16/rq2x8/index") {
         ClusterIndexBuilder.build(
@@ -3680,16 +3682,7 @@ object SparkEntry {
     // centroids to old, emit (level, new_code → old_code, L2² cost); the
     // oracle recomputes each pair's cost from inlined centroid literals
     "v11_align" -> ((s, dir) => {
-      val old = rqCodebook(s, dir)
-      val fresh = ArtifactCache.codebook(s"$dir/rq2x3/refresh7") {
-        RQTrainer.fit(docVecs(s, dir).select("doc_id", "vec"), "vec",
-          numLevels = 2, k = 8, seed = 7L, maxIter = 10)
-      }
-      val perms = old.levels.indices.map(m =>
-        graft.index.CodebookAligner.alignOptimal(
-          old.levels(m), fresh.levels(m))).toArray
-      dirAlignments.put(dir, (old, fresh, perms))
-      lastDir = Some(dir)
+      val (old, fresh, perms) = alignmentOf(s, dir)
       val rows = for {
         m <- old.levels.indices
         n <- perms(m).indices
@@ -3910,21 +3903,7 @@ object SparkEntry {
     "v15_rerank" -> ((s, dir) => {
       val (ann, coarse) = annCoarseCandidates(s, dir)
       val aligned = ann.join(coarse, Seq("query_id", "doc_id"), "left")
-      // train-once artifact (like the RQ codebook): serving reuses the
-      // fitted weights; the fit itself is warmed/attributed separately
-      val model = ArtifactCache.value(s"$dir/reranker") {
-        val labeled = graft.eval.Reranker.features(aligned
-          .join(queryVecs(s, dir).select(col("query_id"),
-            col("label").as("qlab")), Seq("query_id"))
-          .join(docVecs(s, dir).select(col("doc_id"),
-            col("label").as("dlab")), Seq("doc_id"))
-          .withColumn("label",
-            when(col("qlab") === col("dlab"), 1.0).otherwise(0.0)))
-        graft.eval.Reranker.train(labeled)
-      }
-      dirRerankers.put(dir, (model.coefficients.toArray, model.intercept))
-      lastDir = Some(dir)
-      graft.eval.Reranker.rerank(model, aligned, k = 10)
+      graft.eval.Reranker.rerank(rerankerOf(s, dir), aligned, k = 10)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("doc_id"), round(col("prob"), 6).as("prob"))
         .orderBy("query_id", "rank")
@@ -3936,20 +3915,13 @@ object SparkEntry {
     // artifact like the RQ codebook); projection is the deterministic
     // sequential-fold kernel, so the oracle replays it from inlined
     // component literals
-    "v_opq_rotate" -> ((s, dir) => {
-      val rot = ArtifactCache.value(s"$dir/pca4") {
-        graft.index.PcaRotation.fit(t(s, dir, "embeddings"), "embedding",
-          k = 4)
-      }
-      dirRotations.put(dir, rot)
-      lastDir = Some(dir)
+    "v_opq_rotate" -> ((s, dir) =>
       graft.index.PcaRotation.project(
-        t(s, dir, "embeddings"), "embedding", rot)
+        t(s, dir, "embeddings"), "embedding", pcaRotationOf(s, dir))
         .select(col("vec_id"),
           concat_ws(",", transform(col("proj"),
             x => microUnits(x, 6)).cast("array<string>")).as("proj"))
-        .orderBy("vec_id")
-    }),
+        .orderBy("vec_id")),
 
     // V13 grid: α/γ hyperparameter sweep in one pass (the reference's
     // --alphas/--betas/--gammas comma lists, ensemble_marco.py:251-253) —
@@ -4055,133 +4027,103 @@ object SparkEntry {
        |             row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id ASC) AS rank
        |      FROM s)""".stripMargin
 
-  /** Static + generated oracles. The RQ entries need the trained codebook
-    * (Verify evaluates this AFTER running the queries); without one (e.g. a
-    * dry oracle dump) they are simply omitted. */
-  def oracleSql: Map[String, String] = {
-    val dir = lastDir
-    staticOracleSql ++
-      dir.flatMap(d => Option(dirCodebooks.get(d)))
-        .map(cb => graft.oracle.GeneratedOracles.rqOracles(
-          cb, beams = 4, topK = 10, budget = 100,
-          maxChunk = graft.index.ClusterIndexBuilder.DefaultMaxChunk,
-          maxQueryId = 20)).getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirIvfCodebooks.get(d)))
-        .map(cb => Map(
-          "ivf_knn" -> graft.oracle.GeneratedOracles.ivfKnnSql(
-            cb, nprobe = 4, k = 10, maxQueryId = 20),
-          "knn_graph" -> graft.oracle.GeneratedOracles.knnGraphSql(
-            cb, k = 8, rounds = 2, maxDegree = 16),
-          "knn_graph_search" -> graft.oracle.GeneratedOracles.knnGraphWalkSql(
-            cb, k = 8, rounds = 2, maxDegree = 16, walkK = 10, beam = 16,
-            walkRounds = 2, nprobe = 4, perCell = 4,
-            maxQueryId = 20),
-          "dedup_semdedup_fixedk" -> graft.oracle.GeneratedOracles
-            .semDeDupSql(cb, tau = 0.35),
-          "sample_cluster_balanced" -> graft.oracle.GeneratedOracles
-            .clusterBalancedSql(cb, total = 100L, alpha = 0.5),
-          "pack_semantic" -> graft.oracle.GeneratedOracles
-            .packSemanticSql(cb, seqLen = 128)))
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirSemScaledCodebooks.get(d)))
-        .map(cb => Map(
-          "dedup_semdedup" -> graft.oracle.GeneratedOracles.semDeDupSql(
-            cb, tau = 0.35)))
-        .getOrElse(Map.empty) ++
-      // refined SemDeDup needs BOTH the base ivf codebook and the
-      // refined query to have RUN at this dir (the sub map entry is a
-      // ran-marker: None = ran, no over-cap cell; Some = trained sub) —
-      // emitting it from a stale base codebook alone would claim the
-      // no-hot branch for a query that never executed
-      (for {
-        d <- dir
-        cbBase <- Option(dirIvfCodebooks.get(d))
-        subOpt <- Option(dirSemSubCodebooks.get(d))
-      } yield Map("dedup_semdedup_refined" ->
-        graft.oracle.GeneratedOracles.semDeDupRefinedSql(
-          cbBase, subOpt, tau = 0.35, maxCell = 64))).getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirRerankers.get(d)))
-        .map { case (coef, intercept) => Map("v15_rerank" ->
-          graft.oracle.GeneratedOracles.rerankSql(
-            coef, intercept, k = 10, maxQueryId = 20)) }.getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirQualityLR.get(d)))
-        .map { case (coef, intercept) => Map("sample_quality_pareto" ->
-          graft.oracle.GeneratedOracles.qualityParetoSql(
-            coef, intercept, alpha = 9.0, seed = 42L)) }.getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirRotations.get(d)))
-        .map(rot => Map("v_opq_rotate" ->
-          graft.oracle.GeneratedOracles.pcaProjectSql(rot.components)))
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirSwapArtifacts.get(d)))
-        .map { case (wv, cb) => Map("encoder_swap" ->
-          graft.oracle.GeneratedOracles.encoderSwapSql(
-            wv, cb, beams = 4, k = 10, maxQueryId = 20)) }
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirPqCodebooks.get(d)))
-        .map(cb => Map(
-          "pq_assign" -> graft.oracle.GeneratedOracles.pqAssignSql(cb),
-          "pq_reconstruct" -> graft.oracle.GeneratedOracles.pqReconstructSql(cb)))
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirIvfPq.get(d)))
-        .map { case (coarse, pq) => Map("ivfpq_knn" ->
-          graft.oracle.GeneratedOracles.ivfPqKnnSql(
-            coarse, pq, nprobe = 4, k = 10, maxQueryId = 20)) }
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirHkmLevels.get(d)))
-        .map { levels =>
-          // one row per trained node (≤ 5 at k=4/depth 2), in DFS order:
-          // integer-path order is the trie's pre-order walk
-          import levels.sparkSession.implicits._
-          val nodes = levels.select("prefix", "cents")
-            .as[(String, Array[Array[Float]])].collect().toSeq
-            .sortBy { case (p, _) =>
-              if (p.isEmpty) Seq.empty[Int] else p.split(',').toSeq.map(_.toInt)
-            }(scala.math.Ordering.Implicits.seqOrdering)
-          val assignSql = graft.oracle.GeneratedOracles.hkmAssignSql(nodes)
-          val beamSql = graft.oracle.GeneratedOracles.hkmBeamSql(
-            nodes, k = 4, beams = 4, maxQueryId = 20)
-          Map("hkm_assign" -> assignSql, "hkm_assign_dist" -> assignSql,
-            "hkm_beam" -> beamSql, "hkm_beam_dist" -> beamSql)
-        }.getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirAlignments.get(d)))
-        .map { case (old, fresh, perms) => Map("v11_align" ->
-          graft.oracle.GeneratedOracles.alignSql(old, fresh, perms)) }
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirBpeMerges.get(d)))
-        .map(merges => Map("text_bpe_tokenize" ->
-          graft.oracle.GeneratedOracles.bpeTokenizeSql(merges)))
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirUnigram.get(d)))
-        .map(model => Map(
-          "text_unigram_tokenize" ->
-            graft.oracle.GeneratedOracles.unigramTokenizeSql(model),
-          // the tokenizer-true composition oracles chain the trained
-          // model's DP replay, so they are generated per dir like the
-          // tokenize oracle itself (VERDICT r15 #1)
-          "pipeline_curate_funnel" -> curateFullSql(
-            funnelSelectSql, materializeStages = true,
-            exportModel = Some(model)),
-          "pipeline_curate_export" -> curateFullSql(
-            tokenExportSelectSql, materializeStages = true,
-            exportModel = Some(model)),
-          "pipeline_curate_pack" -> curateWitnessSql(
-            tokenExportSelectSql, exportModel = Some(model))))
-        .getOrElse(Map.empty) ++
-      // the in-context export needs BOTH trained artifacts at this dir:
-      // the unigram model (token streams) and the ivf codebook (cells)
-      (for {
-        d <- dir
-        model <- Option(dirUnigram.get(d))
-        cb <- Option(dirIvfCodebooks.get(d))
-      } yield Map("pipeline_curate_export_ctx" -> curateFullSql(
-        tokenExportSelectSql, materializeStages = true,
-        exportModel = Some(model), exportCtxCb = Some(cb))))
-        .getOrElse(Map.empty) ++
-      dir.flatMap(d => Option(dirLifecycle.get(d)))
-        .map { case (merges, cb) => Map("pipeline_index_serve" ->
-          graft.oracle.GeneratedOracles.pipelineIndexServeSql(
-            merges, cb, beams = 4, k = 10, maxQueryId = 20)) }
-        .getOrElse(Map.empty)
+  /** DuckDB oracle SQL for every SQL-expressible catalog query, as a
+    * function of the session and the fixture dir the query runs
+    * against. A static entry ignores both. A generated entry inlines
+    * the trained artifact it reads through the same dir-keyed
+    * `ArtifactCache` accessor its query uses, training it first when
+    * this JVM has not yet; the seeds are fixed, so the SQL replays
+    * exactly the artifact the query served from, whichever dirs ran
+    * before. */
+  def oracles: Map[String, (SparkSession, String) => String] =
+    staticOracleSql.map { case (name, sql) =>
+      name -> ((_: SparkSession, _: String) => sql)
+    } ++ generatedOracles
+
+  private def generatedOracles: Map[String, (SparkSession, String) => String] = {
+    import graft.oracle.GeneratedOracles._
+    def ivfCb(s: SparkSession, dir: String) = ivfOf(s, dir).codebook
+    val hkmAssign: (SparkSession, String) => String =
+      (s, dir) => hkmAssignSql(hkmNodes(s, dir))
+    val hkmBeam: (SparkSession, String) => String =
+      (s, dir) => hkmBeamSql(hkmNodes(s, dir), k = 4, beams = 4,
+        maxQueryId = 20)
+    rqOracles(beams = 4, topK = 10, budget = 100,
+        maxChunk = graft.index.ClusterIndexBuilder.DefaultMaxChunk,
+        maxQueryId = 20).map { case (name, sql) =>
+      name -> ((s: SparkSession, dir: String) => sql(rqCodebook(s, dir)))
+    } ++ Map[String, (SparkSession, String) => String](
+      "ivf_knn" -> ((s, dir) =>
+        ivfKnnSql(ivfCb(s, dir), nprobe = 4, k = 10, maxQueryId = 20)),
+      "knn_graph" -> ((s, dir) =>
+        knnGraphSql(ivfCb(s, dir), k = 8, rounds = 2, maxDegree = 16)),
+      "knn_graph_search" -> ((s, dir) =>
+        knnGraphWalkSql(ivfCb(s, dir), k = 8, rounds = 2, maxDegree = 16,
+          walkK = 10, beam = 16, walkRounds = 2, nprobe = 4, perCell = 4,
+          maxQueryId = 20)),
+      "dedup_semdedup_fixedk" -> ((s, dir) =>
+        semDeDupSql(ivfCb(s, dir), tau = 0.35)),
+      "sample_cluster_balanced" -> ((s, dir) =>
+        clusterBalancedSql(ivfCb(s, dir), total = 100L, alpha = 0.5)),
+      "pack_semantic" -> ((s, dir) =>
+        packSemanticSql(ivfCb(s, dir), seqLen = 128)),
+      "dedup_semdedup" -> ((s, dir) =>
+        semDeDupSql(semScaledIvfOf(s, dir).codebook, tau = 0.35)),
+      "dedup_semdedup_refined" -> ((s, dir) =>
+        semDeDupRefinedSql(ivfCb(s, dir), semRefinedOf(s, dir)._2,
+          tau = 0.35, maxCell = 64)),
+      "v15_rerank" -> ((s, dir) => {
+        val m = rerankerOf(s, dir)
+        rerankSql(m.coefficients.toArray, m.intercept, k = 10,
+          maxQueryId = 20)
+      }),
+      "sample_quality_pareto" -> ((s, dir) => {
+        val (coef, intercept) = qualityLrOf(s, dir)
+        qualityParetoSql(coef, intercept, alpha = 9.0, seed = 42L)
+      }),
+      "v_opq_rotate" -> ((s, dir) =>
+        pcaProjectSql(pcaRotationOf(s, dir).components)),
+      "encoder_swap" -> ((s, dir) =>
+        encoderSwapSql(swapWordVecs(s, dir), swapCodebook(s, dir),
+          beams = 4, k = 10, maxQueryId = 20)),
+      "pq_assign" -> ((s, dir) => pqAssignSql(pqCodebookOf(s, dir))),
+      "pq_reconstruct" -> ((s, dir) =>
+        pqReconstructSql(pqCodebookOf(s, dir))),
+      "ivfpq_knn" -> ((s, dir) => {
+        val idx = ivfPqOf(s, dir)
+        ivfPqKnnSql(idx.coarse, idx.pq, nprobe = 4, k = 10, maxQueryId = 20)
+      }),
+      "hkm_assign" -> hkmAssign,
+      "hkm_assign_dist" -> hkmAssign,
+      "hkm_beam" -> hkmBeam,
+      "hkm_beam_dist" -> hkmBeam,
+      "v11_align" -> ((s, dir) => {
+        val (old, fresh, perms) = alignmentOf(s, dir)
+        alignSql(old, fresh, perms)
+      }),
+      "text_bpe_tokenize" -> ((s, dir) =>
+        bpeTokenizeSql(bpeMergesOf(s, dir))),
+      "text_unigram_tokenize" -> ((s, dir) =>
+        unigramTokenizeSql(unigramOf(s, dir))),
+      // the tokenizer-true composition oracles chain the trained
+      // model's DP replay (VERDICT r15 #1)
+      "pipeline_curate_funnel" -> ((s, dir) =>
+        curateFullSql(funnelSelectSql, materializeStages = true,
+          exportModel = Some(unigramOf(s, dir)))),
+      "pipeline_curate_export" -> ((s, dir) =>
+        curateFullSql(tokenExportSelectSql, materializeStages = true,
+          exportModel = Some(unigramOf(s, dir)))),
+      "pipeline_curate_pack" -> ((s, dir) =>
+        curateWitnessSql(tokenExportSelectSql,
+          exportModel = Some(unigramOf(s, dir)))),
+      // the in-context export also lays streams out by ivf cell
+      "pipeline_curate_export_ctx" -> ((s, dir) =>
+        curateFullSql(tokenExportSelectSql, materializeStages = true,
+          exportModel = Some(unigramOf(s, dir)),
+          exportCtxCb = Some(ivfCb(s, dir)))),
+      "pipeline_index_serve" -> ((s, dir) =>
+        pipelineIndexServeSql(bpeMergesOf(s, dir), lifecycleCodebookOf(s, dir),
+          beams = 4, k = 10, maxQueryId = 20)))
   }
 
   private def staticOracleSql: Map[String, String] = Map(
@@ -6308,10 +6250,9 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin),
 
     // pipeline_curate_funnel / pipeline_curate_export / pipeline_curate
-    // _pack oracles live in the DYNAMIC section (oracleSql): they chain
-    // the trained unigram model's DP replay, so they are generated from
-    // dirUnigram like text_unigram_tokenize's.
-
+    // _pack oracles are generated (generatedOracles): they chain the
+    // trained unigram model's DP replay, read through unigramOf like
+    // text_unigram_tokenize's.
 
     "pipeline_clean_corpus" ->
       s"""WITH t AS (SELECT doc_id, text, string_split_regex(lower(text), '\\s+') AS toks FROM documents),

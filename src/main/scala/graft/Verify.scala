@@ -42,8 +42,17 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(e => keep(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // each kept oracle is built for THIS dir (a generated one reads its
+    // trained artifact like its query does); a failing entry is named
+    // and left out, and the file is still written
+    val json = SparkEntry.oracles.filter(e => keep(e._1)).flatMap {
+      case (name, oracle) =>
+        try Some(s"${q(name)}: ${q(oracle(spark, sfDir))}")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] oracle $name failed: ${e.getMessage}")
+          None
+        }
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -9,9 +9,11 @@ import graft.search.LSHSearch
   * coarse→fine) is a deterministic function of the corpus AND the trained
   * codebook. Training (MLlib KMeans) is not SQL-expressible, but the trained
   * centroids are tiny (M×K×dim floats) — so the oracle inlines them as SQL
-  * literals and replays the serving math exactly. `SparkEntry.oracleSql` is
-  * a `def` evaluated AFTER the queries run (Verify dumps oracle_sql.json
-  * last), so the centroids here are the exact floats the Spark queries used.
+  * literals and replays the serving math exactly. Each `SparkEntry.oracles`
+  * entry takes the fixture dir and reads its artifact through the same
+  * dir-keyed `ArtifactCache` accessor as its query (training it first if
+  * needed, with the query's fixed seeds), so the centroids here are the
+  * exact floats the Spark query used — whether or not it has run yet.
   *
   * Float-parity contract (mirrors Codebook.assign / VectorOps):
   *  - centroid literals are float values widened to double, printed with
@@ -529,25 +531,26 @@ object GeneratedOracles {
        |FROM sp ORDER BY seq_id, doc_id""".stripMargin
   }
 
-  /** All codebook-derived oracles keyed by SparkEntry query name. */
-  def rqOracles(cb: Codebook, beams: Int, topK: Int, budget: Int,
-      maxChunk: Int, maxQueryId: Int): Map[String, String] = Map(
-    "rq_assign" -> rqAssignSql(cb),
-    "rq_cluster_index" -> rqClusterIndexSql(cb, maxChunk),
-    "rq_reconstruct" -> rqReconstructSql(cb),
-    "rq_reconstruct_all" -> reconstructAllSql(cb),
-    "rq_ndoc" -> rqNdocSql(cb, beams, maxQueryId),
-    "v6_beam" -> v6BeamSql(cb, beams, maxQueryId),
-    "coarse_fine" -> coarseFineSql(cb, beams, topK, maxQueryId),
-    "coarse_fine_budgeted" -> coarseFineBudgetedSql(cb, beams, topK, budget, maxQueryId),
-    "rq_multiclus" -> rqMulticlusSql(cb, t = 2),
-    "coarse_fine_multiclus" -> coarseFineMulticlusSql(cb, beams, topK, t = 2, maxQueryId),
-    "coarse_fine_topic" -> coarseFineTopicSql(cb, beams, topK, t = 2, r = 0.5, maxQueryId),
-    "coarse_fine_topic_r0" -> coarseFineTopicSql(cb, beams, topK, t = 2, r = 0.0, maxQueryId),
-    "coarse_fine_topic_add" -> coarseFineTopicSql(cb, beams, topK, t = 2, r = 0.5, maxQueryId, aggr = "sum"),
+  /** All RQ-codebook-derived oracles keyed by SparkEntry query name,
+    * each a function of the trained codebook. */
+  def rqOracles(beams: Int, topK: Int, budget: Int, maxChunk: Int,
+      maxQueryId: Int): Map[String, Codebook => String] = Map(
+    "rq_assign" -> (cb => rqAssignSql(cb)),
+    "rq_cluster_index" -> (cb => rqClusterIndexSql(cb, maxChunk)),
+    "rq_reconstruct" -> (cb => rqReconstructSql(cb)),
+    "rq_reconstruct_all" -> (cb => reconstructAllSql(cb)),
+    "rq_ndoc" -> (cb => rqNdocSql(cb, beams, maxQueryId)),
+    "v6_beam" -> (cb => v6BeamSql(cb, beams, maxQueryId)),
+    "coarse_fine" -> (cb => coarseFineSql(cb, beams, topK, maxQueryId)),
+    "coarse_fine_budgeted" -> (cb => coarseFineBudgetedSql(cb, beams, topK, budget, maxQueryId)),
+    "rq_multiclus" -> (cb => rqMulticlusSql(cb, t = 2)),
+    "coarse_fine_multiclus" -> (cb => coarseFineMulticlusSql(cb, beams, topK, t = 2, maxQueryId)),
+    "coarse_fine_topic" -> (cb => coarseFineTopicSql(cb, beams, topK, t = 2, r = 0.5, maxQueryId)),
+    "coarse_fine_topic_r0" -> (cb => coarseFineTopicSql(cb, beams, topK, t = 2, r = 0.0, maxQueryId)),
+    "coarse_fine_topic_add" -> (cb => coarseFineTopicSql(cb, beams, topK, t = 2, r = 0.5, maxQueryId, aggr = "sum")),
     // T=3: the regime where sum-dedup NEEDS the membership-ordered fold
     // (3-operand float addition isn't partial-agg-order invariant)
-    "coarse_fine_topic_add_t3" -> coarseFineTopicSql(cb, beams, topK, t = 3, r = 0.5, maxQueryId, aggr = "sum"))
+    "coarse_fine_topic_add_t3" -> (cb => coarseFineTopicSql(cb, beams, topK, t = 3, r = 0.5, maxQueryId, aggr = "sum")))
 
   def reconstructAllSql(cb: Codebook): String = {
     val values = (0 until cb.numLevels).map(m => valuesCte(cb, m)).mkString(",\n")

@@ -193,7 +193,15 @@ object NgramLM {
     * cutoffs — hence bit-identical buckets — while the broadcast
     * side's cost drops from a second full-corpus pass to `sampleK`
     * docs. Callers that only hold a scored frame keep using
-    * [[ccnetBuckets]]. */
+    * [[ccnetBuckets]].
+    *
+    * Precondition: `idCol` is unique in `docs`; it is not checked,
+    * since a check would cost a job per call. A repeated id does not
+    * fail: [[score]] groups by id, so its rows are scored as ONE doc
+    * over their pooled bigrams and it gets one output row. Its rows
+    * also each take a slot of the md5 cutoff sample, so when the
+    * sample reaches that id the cutoffs come from fewer than `sampleK`
+    * ids and can differ from `ccnetBuckets(score(docs))`. */
   def ccnetBucketsOf(docs: DataFrame, model: Model, sampleK: Int = 300,
       seed: Long = 42L, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {

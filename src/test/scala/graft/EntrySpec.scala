@@ -13,48 +13,63 @@ class EntrySpec extends SparkSpec {
     }
   }
 
-  test("every oracleSql key has a queries entry") {
-    val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.oracleSql.keySet.diff(qs)
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
-  }
-
-
-  // pair-mining queries are legitimately empty when the fixture has no
-  // near-duplicates at this sf (sf0.1 plants 8 exact dups)
-  private val mayBeEmpty = Set("dedup_minhash_pairs")
-
-  // deliberate bounded cartesian: the exhaustive small-input oracle form
-  // (docs gated to 200 rows; the scale path is the LSH variant)
-  private val mayCartesian = Set("dedup_jaccard_topk")
-
-  test("all queries run at sf0.001, return rows, and plan no unbroadcast cartesian") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf("0.001"))
-      // pre-AQE physical plan: a CartesianProduct here means a corpus-sized
-      // shuffle-shuffle cross join at scale (broadcast cross joins plan as
-      // BroadcastNestedLoopJoin and are fine)
-      val plan = df.queryExecution.sparkPlan.toString
-      if (!mayCartesian(name))
-        assert(!plan.contains("CartesianProduct"),
-          s"query $name plans a CartesianProduct:\n$plan")
-      val n = df.count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"query $name returned 0 rows")
-    }
+  test("every oracle key has a queries entry") {
+    val missing = SparkEntry.oracles.keySet.diff(SparkEntry.queries.keySet)
+    assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
   // the documented rows-only set: operators whose output has no SQL twin
   // (a deflate bitstream — cross-checked instead by InflateCodecSpec's
   // independent RFC-1951 decoder). Anything else missing an oracle is a gap.
-  // Declared AFTER the catalog sweep: the trained-artifact oracles are
-  // generated once the sweep has populated the artifact caches, exactly
-  // as Verify evaluates oracleSql after running the queries.
   private val rowsOnly = Set("text_compress_ratio")
 
   test("every query is SQL-oracled except the documented rows-only set") {
-    val unoracled = SparkEntry.queries.keySet.diff(SparkEntry.oracleSql.keySet)
+    val unoracled = SparkEntry.queries.keySet.diff(SparkEntry.oracles.keySet)
     assert(unoracled === rowsOnly,
       s"queries without an oracle beyond the documented set: ${unoracled.diff(rowsOnly)}")
+  }
+
+  test("each dir's generated oracles come from that dir's own artifacts") {
+    import graft.oracle.GeneratedOracles
+    // another dir trains first, so no oracle can fall back on it
+    assert(SparkEntry.queries("rq_assign")(spark, sf("0.001")).count() > 0)
+    val dir = sf("0.01")
+    val sql = SparkEntry.oracles.map { case (name, oracle) =>
+      name -> oracle(spark, dir)
+    }
+    assert(sql.keySet === SparkEntry.queries.keySet - "text_compress_ratio")
+    val rq = SparkEntry.rqCodebook(spark, dir)
+    GeneratedOracles.rqOracles(beams = 4, topK = 10, budget = 100,
+        maxChunk = graft.index.ClusterIndexBuilder.DefaultMaxChunk,
+        maxQueryId = 20).foreach { case (name, build) =>
+      assert(sql(name) == build(rq), s"$name is not built from $dir's codebook")
+    }
+    val ivf = SparkEntry.ivfOf(spark, dir).codebook
+    assert(sql("ivf_knn") ==
+      GeneratedOracles.ivfKnnSql(ivf, nprobe = 4, k = 10, maxQueryId = 20))
+    assert(sql("hkm_beam") == GeneratedOracles.hkmBeamSql(
+      SparkEntry.hkmNodes(spark, dir), k = 4, beams = 4, maxQueryId = 20))
+    assert(sql("dedup_semdedup_refined") ==
+      GeneratedOracles.semDeDupRefinedSql(ivf,
+        SparkEntry.semRefinedOf(spark, dir)._2, tau = 0.35, maxCell = 64))
+    // the two dirs train different codebooks, so the checks above can
+    // tell them apart
+    assert(sql("rq_assign") != SparkEntry.oracles("rq_assign")(spark, sf("0.001")))
+  }
+
+  // pair-mining queries are legitimately empty when the fixture has no
+  // near-duplicates at this sf (sf0.1 plants 8 exact dups)
+  private val mayBeEmpty = Set("dedup_minhash_pairs")
+
+  test("all queries run at sf0.001, return rows, and plan no unbroadcast cartesian") {
+    // the shared catalog pass (PlanSpec audits the same plans); a
+    // CartesianProduct in the pre-AQE plan means a corpus-sized
+    // shuffle-shuffle cross join at scale
+    CatalogSweep(spark, sf("0.001")).foreach { q =>
+      assert(!q.plan.toString.contains("CartesianProduct"),
+        s"query ${q.name} plans a CartesianProduct:\n${q.plan}")
+      if (!mayBeEmpty(q.name)) assert(q.rows > 0, s"query ${q.name} returned 0 rows")
+    }
   }
 
   test("funnel: stage 6 trims tokens with docs flat; stages 9/10 conserve tokenizer mass") {

@@ -348,56 +348,44 @@ class PlanSpec extends SparkSpec {
   }
 
   test("no query in the catalog plans an unbroadcast cartesian product") {
-    // full-catalog sweep: every SparkEntry query's physical plan at
-    // sf0.001 — the deliberate small-side crossJoins (BruteForceKNN's
+    // full-catalog sweep: every SparkEntry query's pre-AQE physical plan
+    // at sf0.001 — the deliberate small-side crossJoins (BruteForceKNN's
     // query batch, BM25's single-row stats, the containment theta join)
     // must all land as BroadcastNestedLoopJoin, never CartesianProduct
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val p = planString(fn(spark, sf("0.001")))
-      assert(!p.contains("CartesianProduct"),
-        s"query $name plans a cartesian product:\n$p")
+    CatalogSweep(spark, sf("0.001")).foreach { q =>
+      assert(!q.plan.toString.contains("CartesianProduct"),
+        s"query ${q.name} plans a cartesian product:\n${q.plan}")
     }
   }
 
   test("no catalog query plans a partition-less window beyond the documented bounded set") {
-    // mechanizes the r13 hand-audit: every "No Partition Defined for
-    // Window operation" in a Verify log must trace to one of exactly TWO
-    // bounded driver-sized frames — UniMax's cap table
-    // (Sampling.unimaxEpochs: ≤ maxGroups rows behind a fail-fast
-    // count guard) and NgramLM's cutoff sample (ccnetBuckets: the
-    // 300-row md5-rank sample). Queries whose plans reach those two
-    // sites are whitelisted BY NAME; any other partition-less WindowExec
-    // is a single-task global sort waiting to happen at scale and fails
-    // the sweep.
-    // the empirical whitelist (each name → which bounded site its final
-    // plan reaches; composed pipelines whose ccnetBuckets sample window
-    // runs in an INTERNAL action — pipeline_curate_corpus_full — do not
-    // appear here because this audit covers the final submitted plan):
+    // every "No Partition Defined for Window operation" in a Verify log
+    // must trace to one of the bounded, few-row frames below; queries
+    // whose final submitted plan reaches one are whitelisted BY NAME. Any
+    // other partition-less WindowExec is a single-task global sort waiting
+    // to happen at scale. (Composed pipelines whose ccnetBuckets sample
+    // window runs in an INTERNAL staged-write action — the funnel,
+    // pipeline_curate_corpus(_full) — are checkpoint-truncated and do not
+    // appear; the witness's shapes are pinned on curateWitnessTrimmed
+    // above.)
     val boundedWindowQueries = Set(
       "sample_unimax_epochs",     // UniMax cap table (≤ maxGroups, fail-fast)
       "text_ccnet_buckets",       // NgramLM 300-row md5-rank cutoff sample
-                                  // (the funnel left this list in r15 and
-                                  // pipeline_curate_corpus in r16: their
-                                  // ccnet sample windows now run in
-                                  // INTERNAL staged-write actions, so the
-                                  // submitted plans are checkpoint-
-                                  // truncated; the witness's shapes are
-                                  // pinned on curateWitnessTrimmed above)
       "sketch_topk_merge")        // MG count-of-counts histogram (distinct
                                   // count VALUES per group, Zipf-bounded)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val noPart = fn(spark, sf("0.001")).queryExecution.sparkPlan.collect {
+    CatalogSweep(spark, sf("0.001")).foreach { q =>
+      val noPart = q.plan.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec
             if w.partitionSpec.isEmpty => w
         case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
             if w.partitionSpec.isEmpty => w
       }
-      if (boundedWindowQueries(name))
+      if (boundedWindowQueries(q.name))
         assert(noPart.nonEmpty,
-          s"whitelist entry $name no longer plans a partition-less window — prune it")
+          s"whitelist entry ${q.name} no longer plans a partition-less window — prune it")
       else
         assert(noPart.isEmpty,
-          s"query $name plans ${noPart.size} partition-less window(s) — " +
+          s"query ${q.name} plans ${noPart.size} partition-less window(s) — " +
             s"a single-task global sort at scale:\n${noPart.headOption.getOrElse("")}")
     }
   }

@@ -20,19 +20,25 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf(scale: String): String = s"/root/testdata/sf$scale"
 
-  /** Spark jobs started while `body` runs, counted by a listener that
-    * is read only after the listener bus has delivered every event. */
-  def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
+  /** Runs `body` with `listener` registered, returning only after the
+    * listener bus has delivered every event posted so far, so the
+    * listener can be read exactly. */
+  def withListener[T](listener: SparkListener)(body: => T): T = {
     ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
-      body
+      val out = body
       ListenerBusDrain(spark.sparkContext)
-      n.get()
+      out
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  def countJobs(body: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    withListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })(body)
+    n.get()
   }
 }

@@ -15,6 +15,20 @@ import org.apache.spark.sql.functions._
   */
 class StressSpec extends SparkSpec {
 
+  /** `body`'s result and the largest shuffle-read record count of any
+    * task it ran. */
+  private def withMaxTaskShuffleRead[T](body: => T): (T, Long) = {
+    val max = new java.util.concurrent.atomic.AtomicLong(0)
+    val out = withListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          max.accumulateAndGet(t.taskMetrics.shuffleReadMetrics.recordsRead,
+            (a: Long, b: Long) => math.max(a, b))
+    })(body)
+    (out, max.get)
+  }
+
   private def replicatedVecs(times: Int) = {
     val base = Tables.load(spark, sf("0.01"), "embeddings")
     (0 until times).map { i =>
@@ -559,37 +573,14 @@ class StressSpec extends SparkSpec {
     val queries = docs.where(col("doc_id") < 20)
       .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
 
-    // (c) task-metrics listener: record the largest per-task shuffle read
-    val maxShuffleRecords = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.recordsRead
-          var cur = maxShuffleRecords.get
-          while (r > cur && !maxShuffleRecords.compareAndSet(cur, r))
-            cur = maxShuffleRecords.get
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (out, sec) = {
+    // (c) record the largest per-task shuffle read
+    val ((out, sec), maxTask) = withMaxTaskShuffleRead {
       val t0 = System.nanoTime()
       val df = CoarseFineRetriever.retrieveBudgeted(
         queries, index, docs, cb, beams = 4, k = 10, budget = 500)
       val rows = df.collect()
       ((df, rows), (System.nanoTime() - t0) / 1e9)
     }
-    // listener delivery is async with no public flush — poll until the
-    // max stabilizes (two consecutive equal reads), bounded at 10 s
-    var stable = 0; var last = -1L; var waited = 0
-    while (stable < 2 && waited < 100) {
-      Thread.sleep(100); waited += 1
-      val cur = maxShuffleRecords.get
-      if (cur == last) stable += 1 else { stable = 0; last = cur }
-    }
-    spark.sparkContext.removeSparkListener(listener)
 
     assert(out._2.length === 20 * 10)
     // every query sits inside the blob → all top hits must be blob members
@@ -604,7 +595,6 @@ class StressSpec extends SparkSpec {
       s"candidate join did not broadcast the kept-clusters side:\n${plan.take(2000)}")
     // (c) no task read the whole hot cluster through one shuffle: the
     // chunk fan-out caps any single shuffle partition far below csize
-    val maxTask = maxShuffleRecords.get
     assert(maxTask < hot,
       s"a task shuffle-read $maxTask records >= hot csize $hot — skew bomb")
     info(f"skew probe: hot=$hot chunks=$nChunks maxChunkRow=$maxArr " +
@@ -652,19 +642,6 @@ class StressSpec extends SparkSpec {
     assert(skipped.exists(r => r.getLong(1) == hotSize),
       s"hot cell missing from the skip accounting: ${skipped.toSeq}")
 
-    val maxShuffleRecords = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.recordsRead
-          var cur = maxShuffleRecords.get
-          while (r > cur && !maxShuffleRecords.compareAndSet(cur, r))
-            cur = maxShuffleRecords.get
-        }
-      }
-    }
     // AQE partition coalescing merges many small shuffle partitions
     // into one task, which makes per-task shuffle reads meaningless as
     // a skew witness — disable it HERE so a task's read maps 1:1 to a
@@ -673,23 +650,17 @@ class StressSpec extends SparkSpec {
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val prevCoalesce = spark.conf.get(coalesceKey, "true")
     spark.conf.set(coalesceKey, "false")
-    spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val (keptByCell, sec) = try {
-      val out0 = Dedup.semDeDup(emb, cells, ivf.codebook, tau = 0.95,
-        maxCell = maxCell)
-      val k0 = out0.groupBy("cell", "kept").count().collect()
-      (k0, (System.nanoTime() - t0) / 1e9)
-    } finally spark.conf.set(coalesceKey, prevCoalesce)
+    val ((keptByCell, sec), maxTask) = withMaxTaskShuffleRead {
+      try {
+        val out0 = Dedup.semDeDup(emb, cells, ivf.codebook, tau = 0.95,
+          maxCell = maxCell)
+        val k0 = out0.groupBy("cell", "kept").count().collect()
+        (k0, (System.nanoTime() - t0) / 1e9)
+      } finally spark.conf.set(coalesceKey, prevCoalesce)
+    }
     val out = Dedup.semDeDup(emb, cells, ivf.codebook, tau = 0.95,
       maxCell = maxCell).cache()
-    var stable = 0; var last = -1L; var waited = 0
-    while (stable < 2 && waited < 100) {
-      Thread.sleep(100); waited += 1
-      val cur = maxShuffleRecords.get
-      if (cur == last) stable += 1 else { stable = 0; last = cur }
-    }
-    spark.sparkContext.removeSparkListener(listener)
 
     // (a) capped cell fails OPEN: every member kept
     val hotKeptFalse = keptByCell.exists(r =>
@@ -705,7 +676,6 @@ class StressSpec extends SparkSpec {
     assert(out.count() == nDocs)
     // (c) hot cell never entered the pair join: no task shuffle-read
     // anywhere near the hot cell's membership, let alone its square
-    val maxTask = maxShuffleRecords.get
     assert(maxTask < hotSize,
       s"a task shuffle-read $maxTask records >= hot cell $hotSize — " +
         "the capped cell leaked into the pair join")
@@ -828,43 +798,24 @@ class StressSpec extends SparkSpec {
     d.count()
     val gridM = 4096L
 
-    val maxShuffleRecords = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.recordsRead
-          var cur = maxShuffleRecords.get
-          while (r > cur && !maxShuffleRecords.compareAndSet(cur, r))
-            cur = maxShuffleRecords.get
-        }
-      }
-    }
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val prevCoalesce = spark.conf.get(coalesceKey, "true")
     spark.conf.set(coalesceKey, "false")
-    spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val (nMix, tokSums) = try {
-      val mix = Sampling.temperatureMixGrid(d, "grp", total = 20000L,
-        alpha = 0.3, idCol = "doc_id", seed = 42L, gridM = gridM)
-      val mixCounts = mix.groupBy("grp").count()
-        .as[(String, Long)].collect().toMap
-      val bud = Sampling.tokenBudgetGrid(d, "grp", budget = 100000L,
-        nTokCol = "n_tokens", idCol = "doc_id", seed = 42L, gridM = gridM)
-      val budSums = bud.groupBy("grp").agg(sum("n_tokens").as("s"))
-        .as[(String, Long)].collect().toMap
-      (mixCounts, budSums)
-    } finally spark.conf.set(coalesceKey, prevCoalesce)
-    val sec = (System.nanoTime() - t0) / 1e9
-    var stable = 0; var last = -1L; var waited = 0
-    while (stable < 2 && waited < 100) {
-      Thread.sleep(100); waited += 1
-      val cur = maxShuffleRecords.get
-      if (cur == last) stable += 1 else { stable = 0; last = cur }
+    val ((nMix, tokSums), maxTask) = withMaxTaskShuffleRead {
+      try {
+        val mix = Sampling.temperatureMixGrid(d, "grp", total = 20000L,
+          alpha = 0.3, idCol = "doc_id", seed = 42L, gridM = gridM)
+        val mixCounts = mix.groupBy("grp").count()
+          .as[(String, Long)].collect().toMap
+        val bud = Sampling.tokenBudgetGrid(d, "grp", budget = 100000L,
+          nTokCol = "n_tokens", idCol = "doc_id", seed = 42L, gridM = gridM)
+        val budSums = bud.groupBy("grp").agg(sum("n_tokens").as("s"))
+          .as[(String, Long)].collect().toMap
+        (mixCounts, budSums)
+      } finally spark.conf.set(coalesceKey, prevCoalesce)
     }
-    spark.sparkContext.removeSparkListener(listener)
+    val sec = (System.nanoTime() - t0) / 1e9
 
     // selection correctness on the hot group: quota met exactly /
     // budget never exceeded (the boundary trim did its job)
@@ -873,7 +824,6 @@ class StressSpec extends SparkSpec {
     assert(tokSums("en") <= 100000L && tokSums("en") > 99000L,
       s"en budget fill ${tokSums("en")} not within (99k, 100k]")
     // the witness: nothing saw the hot group whole
-    val maxTask = maxShuffleRecords.get
     assert(maxTask < hotN / 10,
       s"a task shuffle-read $maxTask records — the hot group leaked " +
         s"into a single-task structure (hot=$hotN)")
@@ -1165,20 +1115,6 @@ class StressSpec extends SparkSpec {
         ((hot + i).toLong, (0 until 12).map(j => s"u${i}x$j").mkString(" "))))
       .toDF("doc_id", "text")
 
-    val maxShuffleRecords = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.recordsRead
-          var cur = maxShuffleRecords.get
-          while (r > cur && !maxShuffleRecords.compareAndSet(cur, r))
-            cur = maxShuffleRecords.get
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     // the fixture's suffix shuffle COMPRESSES to a few KB (3000
     // identical docs — lz4 eats the repetition), so AQE's partition
     // coalescing correctly folds it into ONE post-shuffle partition at
@@ -1193,7 +1129,7 @@ class StressSpec extends SparkSpec {
     val prevCoalesce = spark.conf.getOption(coalesceKey)
     spark.conf.set(coalesceKey, "false")
     var out: org.apache.spark.sql.DataFrame = null
-    val (total, sec) =
+    val ((total, sec), maxTask) = withMaxTaskShuffleRead {
       try {
         val t0 = System.nanoTime()
         out = Dedup.suffixDupLengths(docs, minLen = minLen, cap = cap)
@@ -1203,13 +1139,7 @@ class StressSpec extends SparkSpec {
         case Some(v) => spark.conf.set(coalesceKey, v)
         case None => spark.conf.unset(coalesceKey)
       }
-    var stable = 0; var last = -1L; var waited = 0
-    while (stable < 2 && waited < 100) {
-      Thread.sleep(100); waited += 1
-      val cur = maxShuffleRecords.get
-      if (cur == last) stable += 1 else { stable = 0; last = cur }
     }
-    spark.sparkContext.removeSparkListener(listener)
 
     // exact expected output: every copy flags positions p <= L - minLen
     // with dup_len = min(cap, L - p); the unique docs flag nothing
@@ -1225,7 +1155,6 @@ class StressSpec extends SparkSpec {
     // whole table there. The 8-partition sort must keep every task well
     // under half of it.
     val suffixRows = hot.toLong * L + 500L * 12
-    val maxTask = maxShuffleRecords.get
     assert(maxTask < suffixRows / 2,
       s"a task shuffle-read $maxTask of $suffixRows suffix rows — equal-run skew")
     assert(sec < 120, s"hot-suffix probe took $sec s")

@@ -102,6 +102,29 @@ class NgramLMSpec extends SparkSpec {
     assert(r2.length == 9 && r2.forall(_.getString(2) == "head"))
   }
 
+  test("ccnetBucketsOf: a duplicated id is bucketed once, on its rows' pooled bigrams") {
+    // ids are meant to be unique (documented, unchecked); this pins what
+    // a repeated id does instead of failing: doc 5 appears twice, once
+    // with 28 bigrams and once with 3
+    val fluent = Seq.fill(4)("the cat sat on the mat").mkString(" ")
+    val docs = ((0L until 30L).map { id =>
+      (id, fluent + (0 until id.toInt).map(j => s" zq${id}x$j").mkString)
+    } :+ ((5L, "zz yy xx ww"))).toDF("doc_id", "text")
+    val m = NgramLM.train(docs)
+    val rows = NgramLM.ccnetBucketsOf(docs, m, sampleK = 300).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2)))
+    assert(rows.length == 30, "one output row per distinct id")
+    val (nBigrams, avg) = NgramLM.score(docs, m).where($"doc_id" === 5L)
+      .select("n_bigrams", "avg_logp").as[(Long, Double)].head()
+    assert(nBigrams == 31L)
+    assert(rows.toMap.apply(5L)._1 == math.floor(avg * 1000000.0 + 0.5).toLong)
+    // with a sample covering the corpus, the cutoffs agree with
+    // ccnetBuckets over the same pooled scores
+    val viaScored = NgramLM.ccnetBuckets(NgramLM.score(docs, m), sampleK = 300)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2)))
+    assert(rows.toMap == viaScored.toMap)
+  }
+
   test("cutoffsMicro: the frozen (t1, t2) reproduce ccnetBuckets exactly") {
     // the artifact-production API the streaming door's FrozenArtifacts
     // consume: bucketing every doc by the frozen cutoffs must equal the
