@@ -1,29 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Driver-run benchmark: times every `SparkEntry.queries` entry (noop sink
   * = true materialization), then reports the engine metrics BASELINE.md
   * asks for — index-build time, brute-force-KNN and coarse→fine throughput,
   * Recall/MRR vs the label ground truth, and ndoc@cluster-R.
-  * Output: ONE JSON line on stdout.
+  * Output on stdout: the full JSON record, then a compact one.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the machine, not a fixed 4 — an unset env var must not
     // benchmark the engine at 1/8th of the available cores
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.envCpus()
+    val spark = LocalSession(cpus)
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -34,35 +30,22 @@ object Bench {
     def bestOf2(f: => Unit): Double = {
       val (_, s1) = timed(f); val (_, s2) = timed(f); math.min(s1, s2)
     }
-    // interleaved A/B(/C) layout arms (VERDICT r14 #4): one loop, `iters`
-    // rounds, each arm timed once per round — a contention window hits
-    // all arms of a round alike instead of landing wholly on whichever
-    // arm happened to run in it (the r14 driver record measured the
-    // cf-serve pair INVERTED for exactly that reason). Returns (best-of
-    // per arm, winner-stable, per-arm round wins): stable = the
-    // overall-best arm won a strict MAJORITY of rounds (r16 — the r15
-    // form required unanimity, which at the 5-round record-cut setting
-    // is a strictly harder bar than the 3 rounds it was designed for:
-    // one GC-jitter round flips it even when 4/5 rounds agree; the vote
-    // is recorded so a 3–2 squeaker reads differently from 5–0). A
-    // false flag still means the ordering is a noise sample, not a
-    // conclusion; the arm-spread field disambiguates tie vs noise.
-    def interleaved(arms: Seq[() => Unit],
-        iters: Int): (Seq[Double], Boolean, Seq[Int]) = {
-      val best = Array.fill(arms.size)(Double.MaxValue)
-      val winners = (1 to iters).map { _ =>
-        val ts = arms.map(a => timed(a())._2)
-        ts.zipWithIndex.foreach { case (t, i) => best(i) = math.min(best(i), t) }
-        ts.indexOf(ts.min)
+    // one run of a catalog query into the noop sink, which materializes
+    // every output column (count() would let Catalyst prune the
+    // projection and understate the real work): its seconds, or None
+    // (named on stderr) when it threw
+    val catalog = SparkEntry.queries
+    def runQuery(name: String, what: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        catalog(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name $what failed: ${e.getMessage}")
+        None
       }
-      val wins = arms.indices.map(i => winners.count(_ == i))
-      val bestArm = best.indexOf(best.min)
-      (best.toSeq, 2 * wins(bestArm) > iters, wins)
     }
-    // Locale.ROOT formatting: the f"" interpolator is locale-sensitive
-    // and a comma-decimal default locale would emit invalid JSON
-    def d(v: Double, digits: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
     // session warmup: pay JIT/codegen/scheduler spin-up before timing
     // (cold-start otherwise lands on whichever query runs first)
@@ -87,19 +70,10 @@ object Bench {
     val loadStart = osBean.getSystemLoadAverage
     val nCpus = Runtime.getRuntime.availableProcessors
 
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     // best-of-N per query (default 2): single-shot timings at this scale
     // carry multi-second GC/scheduler noise, which round-over-round diffs
     // would misread as regressions; min-of-iters is the stable statistic
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
-    // interleave rounds for the layout A/B blocks (ADVICE r15: the fast
-    // ITERS=1 pass used to still run 3 interleaved rounds per arm).
-    // Tracks the bench iters setting, floored at 2 so the winner-
-    // stability check stays meaningful; a record cut overrides with
-    // SPARK_GRAFT_BENCH_LAYOUT_ITERS=5 (VERDICT r15 #4) so the
-    // stability flags get five chances to catch a flipping winner.
-    val layoutIters = sys.env.get("SPARK_GRAFT_BENCH_LAYOUT_ITERS")
-      .map(_.toInt).getOrElse(iters.min(3)).max(2)
     // iteration aid: SPARK_GRAFT_BENCH_ONLY=<anchored regex> times just
     // the matching catalog queries and skips the engine/clustered blocks.
     // A filtered record is for local iteration only — never commit one.
@@ -107,32 +81,16 @@ object Bench {
     if (only.isDefined)
       System.err.println(s"[bench] PARTIAL run (filter ${only.get}) — not a committable record")
     // (best, worst) per query — the spread across iterations is the
-    // per-query noise witness the suspect flag below reads
-    val results = SparkEntry.queries
+    // per-query noise witness the suspect flag below reads. A query
+    // fails (-1) only when NO iteration succeeded: a later flake must
+    // not discard a valid earlier measurement
+    val results = catalog
       .filter { case (name, _) => only.forall(name.matches) }
-      .map { case (name, fn) =>
-      var best = Double.MaxValue
-      var worst = 0.0
-      var i = 0
-      while (i < iters) {
-        val (okRun, sec) = timed {
-          // noop sink: materializes every output column (count() would let
-          // Catalyst prune the projection and understate the real work)
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name iter $i failed: ${e.getMessage}")
-            false
-          }
-        }
-        if (okRun) { best = math.min(best, sec); worst = math.max(worst, sec) }
-        i += 1
+      .map { case (name, _) =>
+        val secs = (0 until iters).flatMap(i => runQuery(name, s"iter $i"))
+        name -> (if (secs.isEmpty) (-1.0, -1.0) else (secs.min, secs.max))
       }
-      // a query only counts as failed when NO iteration succeeded — a
-      // transient flake on a later iteration must not discard a valid
-      // earlier measurement
-      if (best == Double.MaxValue) failed += name
-      name -> (if (best == Double.MaxValue) (-1.0, -1.0) else (best, worst))
-    }
+    val failed = results.collect { case (name, (best, _)) if best < 0 => name }
     // a >3× iteration spread that costs real time means something other
     // than this query had the machine. Don't just name it — SELF-HEAL:
     // run one extra iteration and judge the spread on the best two of
@@ -140,25 +98,15 @@ object Bench {
     // two agreeing runs are the query). The record flags a query only
     // when even the healed spread stays >3× — i.e. the timing genuinely
     // bimodal, not a one-off neighbor.
-    def isSuspect(best: Double, worst: Double): Boolean =
-      best > 0.0 && worst - best > 0.5 && worst / best > 3.0
     val healed = results.map { case (name, (best, worst)) =>
       if (!isSuspect(best, worst)) name -> (best, worst)
       else {
         System.err.println(s"[bench] re-timing load-suspect $name (spread ${d(worst / best, 1)}x)")
-        val (okRun, sec) = timed {
-          try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save(); true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name heal iter failed: ${e.getMessage}")
-            false
-          }
-        }
-        if (!okRun) name -> (best, worst)
-        else {
-          val two = Seq(best, worst, sec).sorted.take(2)
-          name -> (two(0), two(1))
+        runQuery(name, "heal iter") match {
+          case None => name -> (best, worst)
+          case Some(sec) =>
+            val two = Seq(best, worst, sec).sorted.take(2)
+            name -> (two(0), two(1))
         }
       }
     }
@@ -168,130 +116,63 @@ object Bench {
     if (suspects.nonEmpty)
       System.err.println(s"[bench] WARNING load-suspect queries (spread >3x after re-time): ${suspects.mkString(", ")}")
 
-    // per-query drift flag vs the COMMITTED record (VERDICT r10 #5):
-    // the within-run spread check above is blind to SYSTEMATIC load —
-    // r10's driver record ran both iterations under sustained
-    // contention and carried 3-10x outliers (hkm_beam_dist 3.90 s vs
-    // 0.34 s clean) with an EMPTY suspect list. So: compare every
-    // healed best against the committed BENCH_FULL map (the same
-    // baseline the serve-drift pin reads); >2x AND >0.5 s absolute
-    // gets ONE re-time, and a survivor lands in drift_vs_committed —
-    // a tainted record now names its own casualties, and a genuine
-    // regression (or a deliberate trade, like r11's temperatureMix
-    // histogram form) surfaces as a named diff to adjudicate instead
-    // of silent drift.
-    // a run at a non-default core count (the driver's scaling pass) is
-    // not comparable to the committed 32-core record: its times are
-    // legitimately ~2x slower, so every drift gate would fire and burn
-    // re-time iterations on phantom "regressions" (r17: the 8-core run
-    // re-timed drift pairs against the 32-core baseline). Skip the
-    // drift machinery entirely for those runs — the scaling comparison
-    // is the DRIVER's job, across its two records.
-    val defaultCpus = math.min(32, Runtime.getRuntime.availableProcessors)
-    val scalingRun = cpus.toInt != defaultCpus
-    val prevQueryTimes: Map[String, Double] = if (scalingRun) {
-      System.err.println(s"[bench] drift check skipped: local[$cpus] run, " +
-        s"committed record is local[$defaultCpus]")
-      Map.empty
-    } else try {
-      val prevPath = java.nio.file.Paths.get(
-        sys.props.getOrElse("user.dir", "."), "BENCH_FULL.json")
-      if (java.nio.file.Files.exists(prevPath)) {
-        val prev = new String(
-          java.nio.file.Files.readAllBytes(prevPath), "UTF-8")
-        // a record measured at a different scale factor is not a
-        // baseline — skip (loudly) rather than flag cross-sf "drift"
-        val prevSf = """"sf":"([^"]+)"""".r
-          .findFirstMatchIn(prev).map(_.group(1))
-        if (prevSf.exists(_ != sfDir)) {
-          System.err.println(s"[bench] drift check skipped: committed " +
-            s"record sf ${prevSf.get} != $sfDir")
-          Map.empty
-        } else {
-          val body = """"queries":\{([^}]*)\}""".r
-            .findFirstMatchIn(prev).map(_.group(1)).getOrElse("")
-          val parsed = """"([A-Za-z0-9_]+)":([0-9.]+)""".r
-            .findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          // a committed record that parses to ZERO query times means the
-          // format evolved past this regex — the drift check would
-          // silently disappear; say so instead (ADVICE r12)
-          if (parsed.isEmpty)
-            System.err.println("[bench] WARNING committed BENCH_FULL.json " +
-              "exists but no query times parsed — drift check is DEAD; " +
-              "fix the \"queries\":{...} extraction regex")
-          parsed
+    // the committed record is the baseline of both drift checks (per
+    // query below, serve latency in the engine block): BENCH_FULL.json in
+    // the work tree is the PREVIOUS committed record when this runs (the
+    // bench overwrites it afterwards). It is a baseline only when it was
+    // measured like this run — a run at another local[N] (the driver's
+    // scaling pass) or another sf is legitimately slower or faster, and
+    // every drift gate would fire on phantom "regressions".
+    val committed: Option[Record] = {
+      val path = Paths.get(sys.props.getOrElse("user.dir", "."), "BENCH_FULL.json")
+      if (!Files.exists(path)) None
+      else try {
+        val rec = Record.parse(Files.readString(path))
+        if (rec.comparable(cpus, sfDir)) Some(rec)
+        else {
+          System.err.println(s"[bench] drift checks skipped: committed record is " +
+            s"local[${rec.cpus.getOrElse("?")}] at ${rec.sf.getOrElse("?")}, " +
+            s"this run local[$cpus] at $sfDir")
+          None
         }
-      } else Map.empty
-    } catch { case _: Throwable => Map.empty }
-    def isDrift(cur: Double, prev: Double): Boolean =
-      cur > 0.0 && prev > 0.0 && cur > 2.0 * prev && cur - prev > 0.5
-    val driftHealed = healed.map { case (name, (best, worst)) =>
-      if (!prevQueryTimes.get(name).exists(p => isDrift(best, p)))
-        name -> (best, worst)
-      else {
-        System.err.println(f"[bench] re-timing drift suspect $name " +
-          f"($best%.3f s vs committed ${prevQueryTimes(name)}%.3f s)")
-        val (okRun, sec) = timed {
-          try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save(); true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name drift re-time failed: ${e.getMessage}")
-            false
-          }
-        }
-        if (okRun) name -> (math.min(best, sec), worst)
-        else name -> (best, worst)
+      } catch { case e: Exception =>
+        System.err.println(s"[bench] drift checks skipped: committed record unreadable: ${e.getMessage}")
+        None
       }
     }
-    val driftFlags = driftHealed.collect {
-      case (name, (best, _))
-          if prevQueryTimes.get(name).exists(p => isDrift(best, p)) =>
-        name -> (best, prevQueryTimes(name))
+    // per-query drift vs the committed record (VERDICT r10 #5): the
+    // within-run spread check above is blind to SYSTEMATIC load — r10's
+    // driver record ran both iterations under sustained contention and
+    // carried 3-10x outliers with an EMPTY suspect list. A query in the
+    // gate tier gets ONE re-time; a survivor is listed, so a tainted
+    // record names its own casualties and a genuine regression surfaces
+    // as a named diff to adjudicate instead of silent drift.
+    val prevTimes = committed.fold(Map.empty[String, Double])(_.queries)
+    def tierOf(name: String, best: Double): Option[String] =
+      prevTimes.get(name).flatMap(driftTier(best, _))
+    val driftHealed = healed.map { case (name, (best, worst)) =>
+      if (!tierOf(name, best).contains(DriftGate)) name -> (best, worst)
+      else {
+        System.err.println(f"[bench] re-timing drift suspect $name " +
+          f"($best%.3f s vs committed ${prevTimes(name)}%.3f s)")
+        name -> (runQuery(name, "drift re-time").fold(best)(math.min(best, _)), worst)
+      }
     }
-    if (driftFlags.nonEmpty)
+    // (current, committed) per query, grouped by drift tier
+    val tiers = driftHealed.toSeq.flatMap { case (name, (best, _)) =>
+      tierOf(name, best).map(_ -> (name, (best, prevTimes(name))))
+    }.groupMap(_._1)(_._2)
+    def listed(tier: String): String = tiers(tier)
+      .map { case (n, (c, p)) => f"$n $c%.3f/$p%.3f" }.mkString(", ")
+    if (tiers.contains(DriftGate))
       System.err.println("[bench] WARNING drift vs committed record " +
-        "(>2x after re-time): " + driftFlags.map { case (n, (c, p)) =>
-          f"$n $c%.3f/$p%.3f" }.mkString(", "))
-    // second, tighter tier (VERDICT r12 #3): >1.5x AND >0.3 s moves sit
-    // under the hard gate but are exactly where sub-gate creep hides —
-    // r12's sample_dsir 0.68→0.90 spread turned out to be residual-load
-    // sensitivity (time correlates monotonically with loadavg_start
-    // across five records: 0.68@1.3, 0.74@2.2, 0.82@3.5, 0.90@4.1,
-    // 1.19@~5), but it went unlisted for a round. Note, don't re-time;
-    // recorded as drift_note in the JSON so the round diff starts named.
-    val driftNotes = driftHealed.collect {
-      case (name, (best, _))
-          if prevQueryTimes.get(name).exists(p =>
-            best > 0 && p > 0 && !isDrift(best, p) &&
-              best > 1.5 * p && best - p > 0.3) =>
-        name -> (best, prevQueryTimes(name))
-    }
-    if (driftNotes.nonEmpty)
+        "(>2x after re-time): " + listed(DriftGate))
+    if (tiers.contains(DriftNote))
       System.err.println("[bench] note: sub-gate drift (>1.5x, >0.3s) — " +
-        "check loadavg before reading as regression: " +
-        driftNotes.map { case (n, (c, p)) =>
-          f"$n $c%.3f/$p%.3f" }.mkString(", "))
-    // inverse tier (VERDICT r13 "what's wrong"): the gate above is
-    // asymmetric — a committed entry cut under load can never flag
-    // again, because current < committed always passes, so an inflated
-    // baseline silently weakens the gate up to its own noise level
-    // (r13's text_gopher_rules sat at 2.87 s committed vs 1.5 s
-    // honest). Surface the inversion: a committed time >2x SLOWER than
-    // this run's best means the BASELINE is the outlier — re-cut the
-    // record on a quiet box instead of banking the free headroom.
-    val inflatedBaseline = driftHealed.collect {
-      case (name, (best, _))
-          if prevQueryTimes.get(name).exists(p =>
-            best > 0 && p > 0 && p > 2.0 * best && p - best > 0.5) =>
-        name -> (best, prevQueryTimes(name))
-    }
-    if (inflatedBaseline.nonEmpty)
+        "check loadavg before reading as regression: " + listed(DriftNote))
+    if (tiers.contains(Inflated))
       System.err.println("[bench] note: committed baseline looks INFLATED " +
-        "(>2x slower than this run): " +
-        inflatedBaseline.map { case (n, (c, p)) =>
-          f"$n $c%.3f/$p%.3f" }.mkString(", ") +
+        "(>2x slower than this run): " + listed(Inflated) +
         " — re-cut BENCH_FULL.json on a quiet box")
 
     // ---- engine metrics (BASELINE.md protocol) ----
@@ -402,11 +283,6 @@ object Bench {
       }
       serveQ.unpersist()
       def msq(sec: Double): String = d(sec * 1000.0 / nServe, 3)
-      // drift pin vs the committed record: BENCH_FULL.json in the work
-      // tree is the PREVIOUS round's committed record at the time the
-      // driver runs this (the bench overwrites it afterwards). >15%
-      // drift on a median-of-5 2000-query batch is signal, not noise —
-      // flag it on stderr so the round diff starts from a named suspect.
       val serveJson =
         s""""serve_batch_n":$nServe,""" +
           s""""serve_knn_ms_per_query_med":${msq(knnMed)},""" +
@@ -417,39 +293,27 @@ object Bench {
           s""""serve_budgeted_ms_per_query_max":${msq(cfbMax)},""" +
           s""""serve_hkm_beam_ms_per_query_med":${msq(hkmMed)},""" +
           s""""serve_hkm_beam_ms_per_query_max":${msq(hkmMax)},"""
-      try {
-        val prevPath = java.nio.file.Paths.get(
-          sys.props.getOrElse("user.dir", "."), "BENCH_FULL.json")
-        if (scalingRun)
+      // drift pin vs the committed record: >15% drift on a median-of-5
+      // 2000-query batch is signal, not noise — flag it on stderr so the
+      // round diff starts from a named suspect. ms/query is amortized
+      // over the batch, so a committed record measured under a DIFFERENT
+      // batch size is skipped (loudly) rather than compared.
+      committed.foreach { rec =>
+        val prevN = rec.engine.get("serve_batch_n").map(_.toInt)
+        if (prevN.exists(_ != nServe))
           System.err.println(s"[bench] serve drift check skipped: " +
-            s"local[$cpus] run is not comparable to the committed record")
-        else if (java.nio.file.Files.exists(prevPath)) {
-          val prev = new String(java.nio.file.Files.readAllBytes(prevPath), "UTF-8")
-          def prevVal(key: String): Option[Double] =
-            s""""$key":([0-9.]+)""".r.findFirstMatchIn(prev)
-              .map(_.group(1).toDouble)
-          // ms/query is amortized over the batch: a committed record
-          // measured under a DIFFERENT batch size is not comparable —
-          // skip (loudly) rather than flag spurious drift or mask real
-          // drift against numbers with different amortization
-          val prevN = prevVal("serve_batch_n")
-          if (prevN.exists(_.toInt != nServe))
-            System.err.println(s"[bench] serve drift check skipped: " +
-              s"committed serve_batch_n ${prevN.get.toInt} != $nServe")
-          else Seq(("serve_knn_ms_per_query_med", knnMed),
-            ("serve_coarse_fine_ms_per_query_med", cfMed),
-            ("serve_budgeted_ms_per_query_med", cfbMed),
-            ("serve_hkm_beam_ms_per_query_med", hkmMed)).foreach {
-            case (key, cur) => prevVal(key).foreach { p =>
-              val ratio = (cur * 1000.0 / nServe) / p
-              if (ratio > 1.15 || ratio < 1.0 / 1.15)
-                System.err.println(f"[bench] WARNING serve drift $key: " +
-                  f"${cur * 1000.0 / nServe}%.3f ms/q vs committed $p%.3f (x$ratio%.2f)")
-            }
+            s"committed serve_batch_n ${prevN.get} != $nServe")
+        else Seq(("serve_knn_ms_per_query_med", knnMed),
+          ("serve_coarse_fine_ms_per_query_med", cfMed),
+          ("serve_budgeted_ms_per_query_med", cfbMed),
+          ("serve_hkm_beam_ms_per_query_med", hkmMed)).foreach {
+          case (key, cur) => rec.engine.get(key).foreach { p =>
+            val msPerQ = cur * 1000.0 / nServe
+            if (serveDrift(msPerQ, p))
+              System.err.println(f"[bench] WARNING serve drift $key: " +
+                f"$msPerQ%.3f ms/q vs committed $p%.3f (x${msPerQ / p}%.2f)")
           }
         }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] serve drift check failed: ${e.getMessage}")
       }
 
       s"""{$serveJson"index_build_sec":${d(buildSec, 3)},""" +
@@ -547,7 +411,12 @@ object Bench {
         // this fixture size AQE broadcasts the 4k-doc corpus and the
         // bucketed layout never gets to elide its Exchange — at corpus
         // scale nothing broadcasts and SMJ is what runs, so that is the
-        // regime worth timing
+        // regime worth timing. Stock AQE below the threshold is the
+        // other regime, and there it is right to broadcast: walk and
+        // coarse-fine layout pairs at 30x this corpus (120k docs, 60k-
+        // 180k queries) measured the bucketed store as a tie or pure
+        // overhead, because its side still broadcast. A bucketed store
+        // pays only once its side outgrows the broadcast threshold.
         val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try {
@@ -572,181 +441,6 @@ object Bench {
           spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       }
 
-      // ---- stock-AQE layout pair at 30x the corpus (VERDICT r12 #6) ----
-      // The pair above runs with auto-broadcast DISABLED to simulate
-      // corpus scale (at 4k docs AQE otherwise broadcasts everything and
-      // the bucketed layout never gets to elide its Exchange). This pair
-      // re-measures the same layout question WITHOUT the override, at
-      // 120k docs x dim 48 / 960k ring edges / 60k queries. Measured
-      // finding (r13 probe, this geometry): stock AQE still broadcasts —
-      // the walk's frontier/entry sides are (long, long) rows that stay
-      // under the 10 MB threshold even at a 250k-query batch — and that
-      // choice is RIGHT (forcing SMJ costs 2.0x: 4.2 -> 8.5 s at 60k
-      // queries, 4.9 -> 9.7 s at 250k), while the bucketed scan is pure
-      // overhead when nothing shuffles on the graph side (+25%). So the
-      // committed pair documents the honest boundary: the bucketed
-      // adjacency store pays exactly when the probe side outgrows the
-      // broadcast threshold (the forced-SMJ pair above, i.e. multi-M-row
-      // frontiers), and stock AQE should be left to broadcast below it.
-      // Structure is synthetic (ring edges inside planted 60-doc
-      // clusters; entries 30 ring-hops from the answer) because only
-      // the LAYOUT is under test — graph quality is the block above.
-      val (bigPlainSec, bigBucketedSec, bigNDocs, bigNQ,
-          cfServePlainSec, cfServeBucketedIndexSec, cfServeBucketedDocsSec,
-          bigwalkStable, cfServeStable, cfServeNQ,
-          bigwalkWins, cfServeWins) = {
-        val bDocs = 120000L; val bDim = 48; val clusterSz = 60L
-        val bQ = 60000L
-        val bgen = udf { (id: Long) =>
-          val c = id / clusterSz
-          val rng = new scala.util.Random(id * 0x9E3779B97F4A7C15L)
-          val v = Array.tabulate(bDim)(j =>
-            (math.sin((c * bDim + j).toDouble) + 0.08 * rng.nextGaussian()).toFloat)
-          val n = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
-          v.map(_ / n)
-        }
-        val bdocs = spark.range(bDocs)
-          .select(col("id").as("doc_id"), bgen(col("id")).as("vec"))
-          .localCheckpoint()
-        // ring edges within each cluster: i -> start + (i±1..4 mod 60)
-        val base60 = (col("doc_id") / clusterSz).cast("long") * clusterSz
-        val bedges = bdocs.select(col("doc_id"),
-            explode(array((1 to 4).flatMap(d => Seq(lit(d.toLong), lit(60L - d))): _*)).as("__d"))
-          .select(col("doc_id").as("src"),
-            ((col("doc_id") - base60 + col("__d")) % clusterSz + base60).as("dst"))
-        val bq = spark.range(bQ)
-          .select(col("id").as("query_id"),
-            ((col("id") * 2L) % bDocs).as("__src"))
-          .join(bdocs.select(col("doc_id").as("__src"), col("vec")), Seq("__src"))
-          .select(col("query_id"),
-            transform(col("vec"), (x, i) =>
-              (x + lit(1e-3f) * sin(col("query_id") * lit(31) + i)).cast("float"))
-              .as("qvec"), col("__src"))
-          .localCheckpoint()
-        // entries: 30 ring-hops away in the same cluster — the walk has
-        // to traverse, not just confirm
-        val bcluster = (col("__src") / clusterSz).cast("long")
-        val bentries = bq.select(col("query_id"),
-          ((col("__src") - bcluster * clusterSz + 30L) %
-            clusterSz + bcluster * clusterSz).as("doc_id"))
-        val bqv = bq.select("query_id", "qvec")
-        val pDir = "target/tmp/bench_biggraph_plain"
-        bedges.write.mode("overwrite").parquet(pDir)
-        val pGraph = spark.read.parquet(pDir)
-        graft.io.Bucketing.writeBucketed(bedges, "bench_biggraph_bucketed",
-          "target/tmp/bench_biggraph_bucketed", "src", buckets = 32)
-        val bGraph = graft.io.Bucketing.readBucketed(spark, "bench_biggraph_bucketed")
-        // both layouts written BEFORE any timing, arms interleaved
-        // (VERDICT r14 #4 — see the helper's comment)
-        def walkArm(g: org.apache.spark.sql.DataFrame): Unit =
-          KnnGraph.walk(bqv, g, bdocs, k = 10, beam = 8,
-            rounds = 2, entries = bentries)
-            .write.format("noop").mode("overwrite").save()
-        val (bwTimes, bwStable, bwWins) = interleaved(Seq(
-          () => walkArm(pGraph), () => walkArm(bGraph)), layoutIters)
-        val (pSec, bSec) = (bwTimes(0), bwTimes(1))
-        // ---- coarse-fine serving twin of the layout pair (r14,
-        // VERDICT r13 #7): same planted corpus, stock AQE, serving
-        // shape = J3 (probe → cluster index) + J4 (candidates →
-        // embedding fetch) + exact re-rank + bounded top-k. Layout
-        // variables, one at a time: (a) the cluster-index store, J3's
-        // static side, bucketed on the cluster key; (b) the embedding
-        // store, J4's static side, bucketed on doc_id. Probe side:
-        // each query probes its own cluster and the next (nprobe=2) →
-        // 120 candidates/query, 7.2M scored rows at 60k queries. The
-        // index here is keyed by a LONG cluster id (the 1-level/IVF
-        // J3 form; the RQ form's ARRAY<INT> codes key hashes the same
-        // way once serialized). Only the LAYOUT is under test — the
-        // retrieval quality of the real operator chain is the
-        // coarse_fine recall block above. Measured history: the r14
-        // record showed bucketed-index ~2x ahead at 60k queries, but
-        // the r15 driver and judge runs both measured the OTHER
-        // ordering inside contention noise — at 180k queries (r16, 3x
-        // probe side so absolute deltas clear the noise floor) the
-        // three arms land within ~6% of each other: the ~1 MB cluster
-        // index BROADCASTS under stock AQE, so there is no index-side
-        // exchange for bucketing to elide, and the r14 "2x win" was a
-        // noise sample (the same boundary as the bigwalk pair: a
-        // bucketed static store pays exactly when its side outgrows
-        // the broadcast threshold). The cf_serve_arm_spread_pct field
-        // disambiguates the stability flag: small spread = genuine
-        // tie, large spread + flipped winner = noise.
-        val nClusters = bDocs / clusterSz
-        val cIdx = bdocs
-          .select((col("doc_id") / clusterSz).cast("long").as("cluster"),
-            col("doc_id"))
-          .groupBy("cluster").agg(collect_list(col("doc_id")).as("doc_ids"))
-        // probe side scaled 3x past the walk's query batch (VERDICT r15
-        // #5): at 60k queries the three cf-serve arms ran ~2.5 s each and
-        // three independent records disagreed inside contention noise —
-        // 180k queries / ~21.6M scored rows puts the layout effect's
-        // absolute delta above the neighbor-noise floor
-        val cfQ = 3L * bQ
-        val cfq = (0 until 3).map(r => bq.select(
-            (col("query_id") + lit(r * bQ)).as("query_id"),
-            col("qvec"), col("__src")))
-          .reduce(_.unionByName(_)).localCheckpoint()
-        val cfqv = cfq.select("query_id", "qvec")
-        val probes = cfq.select(col("query_id"),
-          explode(array(
-            (col("__src") / clusterSz).cast("long"),
-            pmod((col("__src") / clusterSz).cast("long") + 1L,
-              lit(nClusters)))).as("cluster"))
-          .localCheckpoint()
-        val dot = graft.functions.VectorFunctions.float_dot(
-          col("qvec"), col("vec"))
-        def cfServeOnce(index: org.apache.spark.sql.DataFrame,
-            docsT: org.apache.spark.sql.DataFrame): Unit = {
-          val cand = probes.join(index, Seq("cluster"))
-            .select(col("query_id"), explode(col("doc_ids")).as("doc_id"))
-          val scored = cand.join(docsT, Seq("doc_id"))
-            .join(cfqv, Seq("query_id"))
-            .select(col("query_id"), col("doc_id"),
-              dot.cast("double").as("score"))
-          graft.search.TopK.ranked(scored, 10)
-            .write.format("noop").mode("overwrite").save()
-        }
-        val ciDir = "target/tmp/bench_cf_index_plain"
-        cIdx.write.mode("overwrite").parquet(ciDir)
-        val dDir = "target/tmp/bench_cf_docs_plain"
-        bdocs.write.mode("overwrite").parquet(dDir)
-        val pIdx = spark.read.parquet(ciDir)
-        val pD = spark.read.parquet(dDir)
-        graft.io.Bucketing.writeBucketed(cIdx, "bench_cf_index_bucketed",
-          "target/tmp/bench_cf_index_bucketed", "cluster", buckets = 32)
-        val bIdx = graft.io.Bucketing.readBucketed(spark, "bench_cf_index_bucketed")
-        graft.io.Bucketing.writeBucketed(bdocs, "bench_cf_docs_bucketed",
-          "target/tmp/bench_cf_docs_bucketed", "doc_id", buckets = 32)
-        val bD = graft.io.Bucketing.readBucketed(spark, "bench_cf_docs_bucketed")
-        // all three layouts on disk, arms interleaved (VERDICT r14 #4)
-        val (cfTimes, cfStable, cfWins) = interleaved(Seq(
-          () => cfServeOnce(pIdx, pD),
-          () => cfServeOnce(bIdx, pD),
-          () => cfServeOnce(pIdx, bD)), layoutIters)
-        val (cfPlainSec, cfBIdxSec, cfBDocsSec) =
-          (cfTimes(0), cfTimes(1), cfTimes(2))
-        bdocs.unpersist(); bq.unpersist()
-        (pSec, bSec, bDocs, bQ, cfPlainSec, cfBIdxSec, cfBDocsSec,
-          bwStable, cfStable, cfQ, bwWins, cfWins)
-      }
-
-      // arm spread (max/min − 1): disambiguates a FALSE stability flag —
-      // a few-% spread means the arms genuinely TIE at this geometry (no
-      // ordering conclusion exists and the flag is honestly false), a
-      // large spread with a flipping winner means the sample is noise
-      def spreadPct(ts: Double*): Double =
-        if (ts.exists(_ <= 0)) -1.0 else (ts.max / ts.min - 1.0) * 100.0
-      val bigwalkSpread = spreadPct(bigPlainSec, bigBucketedSec)
-      val cfServeSpread = spreadPct(cfServePlainSec,
-        cfServeBucketedIndexSec, cfServeBucketedDocsSec)
-      if (!bigwalkStable)
-        System.err.println(f"[bench] WARNING bigwalk layout winner flipped " +
-          f"across interleaved rounds (arm spread $bigwalkSpread%.1f%%) — " +
-          "a small spread is a tie, a large one a noise sample")
-      if (!cfServeStable)
-        System.err.println(f"[bench] WARNING cf-serve layout winner flipped " +
-          f"across interleaved rounds (arm spread $cfServeSpread%.1f%%) — " +
-          "a small spread is a tie, a large one a noise sample")
       // spec-level floors (KnnGraphSpec pins the graph path; IVF/coarse
       // probe the same planted structure) — a breach is a red flag even
       // though only the specs hard-fail
@@ -763,19 +457,6 @@ object Bench {
         s""""graph_ann_qps":${d(nCq / gSec, 2)},""" +
         s""""walk_parquet_qps":${d(nCq / plainWalkSec, 2)},""" +
         s""""bucketed_walk_qps":${d(nCq / bucketedWalkSec, 2)},""" +
-        s""""bigwalk_n_docs":$bigNDocs,"bigwalk_n_queries":$bigNQ,""" +
-        s""""bigwalk_parquet_sec":${d(bigPlainSec, 3)},""" +
-        s""""bigwalk_bucketed_sec":${d(bigBucketedSec, 3)},""" +
-        s""""bigwalk_conclusion_stable":$bigwalkStable,""" +
-        s""""bigwalk_arm_spread_pct":${d(bigwalkSpread, 1)},""" +
-        s""""bigwalk_round_wins":${bigwalkWins.mkString("[", ",", "]")},""" +
-        s""""cf_serve_n_queries":$cfServeNQ,""" +
-        s""""cf_serve_parquet_sec":${d(cfServePlainSec, 3)},""" +
-        s""""cf_serve_bucketed_index_sec":${d(cfServeBucketedIndexSec, 3)},""" +
-        s""""cf_serve_bucketed_docs_sec":${d(cfServeBucketedDocsSec, 3)},""" +
-        s""""cf_serve_conclusion_stable":$cfServeStable,""" +
-        s""""cf_serve_arm_spread_pct":${d(cfServeSpread, 1)},""" +
-        s""""cf_serve_round_wins":${cfServeWins.mkString("[", ",", "]")},""" +
         s""""graph_recall_at_10":${d(gRecall, 4)}}"""
     } catch {
       case e: Throwable =>
@@ -783,31 +464,11 @@ object Bench {
         "{}"
     }
 
-    // 3-decimal seconds: a full Double repr per query made the record
-    // ~2.5 KB and the driver's tail-capture truncated its head
-    // (BENCH_r03 "parsed: null"); ms resolution is all the diff needs
-    def sec3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = driftHealed.map { case (k, (best, _)) => "\"" + k + "\":" + sec3(best) }
       .mkString("{", ",", "}")
     // spreads only for the flagged queries — the full map would double
     // the record for numbers that only matter when they're anomalous
-    val spreadJson = suspects.map { name =>
-      val (best, worst) = driftHealed(name)
-      "\"" + name + "\":[" + sec3(best) + "," + sec3(worst) + "]"
-    }.mkString("{", ",", "}")
-    // [current, committed] per surviving drift flag — empty when the
-    // run is consistent with the committed record
-    val driftJson = driftFlags.map { case (name, (cur, prev)) =>
-      "\"" + name + "\":[" + sec3(cur) + "," + sec3(prev) + "]"
-    }.mkString("{", ",", "}")
-    val driftNoteJson = driftNotes.map { case (name, (cur, prev)) =>
-      "\"" + name + "\":[" + sec3(cur) + "," + sec3(prev) + "]"
-    }.mkString("{", ",", "}")
-    // [current, committed] per inflated-baseline flag (see above)
-    val inflatedJson = inflatedBaseline.map { case (name, (cur, prev)) =>
-      "\"" + name + "\":[" + sec3(cur) + "," + sec3(prev) + "]"
-    }.mkString("{", ",", "}")
+    val spreadJson = pairsJson(suspects.map(name => name -> driftHealed(name)))
     val loadEnd = osBean.getSystemLoadAverage
     // taint flag (VERDICT r8 #7): a record captured on a box already
     // working (loadavg_start > cpus/4) embeds contention in its
@@ -830,32 +491,25 @@ object Bench {
         s""""curate_chain_build_sec":${d(curateChainSec, 3)},""" +
         s""""tainted":$tainted,""" +
         s""""suspect_spread":$spreadJson,""" +
-        s""""drift_vs_committed":$driftJson,""" +
-        s""""drift_note":$driftNoteJson,""" +
-        s""""baseline_inflated":$inflatedJson}"""
+        Seq(DriftGate, DriftNote, Inflated).map(t =>
+          s""""$t":${pairsJson(tiers.getOrElse(t, Nil))}""").mkString(",") + "}"
     val total = driftHealed.values.map(_._1).filter(_ >= 0).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"load":$loadJson,"engine":$engine,"clustered":$clustered,"sf":"$sfDir"}"""
     println(line)
-    // duplicate on stderr: survives even if a stdout tail-capture clips
-    System.err.println(line)
-    // The full line is ~3 KB — longer than the driver's 2000-char tail
-    // window, so every BENCH_r01-r17 record has "parsed": null (the old
-    // "compact" line still carried the full load/engine/clustered
-    // blocks). Fixes (VERDICT r17 #1/#2): (a) persist the full record as
-    // a file the judge reads directly — suffixed _c<N> when the run is
-    // at a non-default core count, so the driver's scaling pass can't
-    // clobber the main record (r17's 8-core run overwrote the 32-core
-    // per-query map); (b) END stdout with a genuinely compact line
-    // (<1 KB: totals, slowest-12 map, health flags) that fits any tail
-    // capture. A filtered (SPARK_GRAFT_BENCH_ONLY) run must never
-    // clobber the committed full record — it is the drift pin's baseline.
+    // The full line is ~3 KB — longer than a 2000-char tail capture — so
+    // (a) persist it as a file, suffixed _c<N> when the run is at a
+    // non-default core count so a scaling pass can't clobber the main
+    // record, and (b) END stdout with a compact line (<1 KB: totals,
+    // slowest-12 map, health flags) that fits any tail capture. A
+    // filtered (SPARK_GRAFT_BENCH_ONLY) run must never clobber the
+    // committed full record — it is the drift checks' baseline.
+    val scalingRun = cpus != LocalSession.defaultCpus
     if (only.isEmpty) try {
       val fname = if (scalingRun) s"BENCH_FULL_c$cpus.json" else "BENCH_FULL.json"
-      val out = java.nio.file.Paths.get(
-        sys.props.getOrElse("user.dir", "."), fname)
-      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+      val out = Paths.get(sys.props.getOrElse("user.dir", "."), fname)
+      Files.write(out, (line + "\n").getBytes("UTF-8"))
       System.err.println(s"[bench] full record -> $out")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
@@ -866,8 +520,79 @@ object Bench {
     val compact =
       s"""{"metric":"total","value":${sec3(total)},"unit":"sec","n_queries":${driftHealed.size},"queries":$slow,"queries_note":"slowest 12 of ${driftHealed.size}; full map in BENCH_FULL${if (scalingRun) s"_c$cpus" else ""}.json","failed":$failedJson,"cpus":$cpus,"iters":$iters,"loadavg_start":${d(loadStart, 2)},"tainted":$tainted,"curate_chain_build_sec":${d(curateChainSec, 3)},"sf":"$sfDir"}"""
     println(compact)
-    System.err.println(compact)
     spark.stop()
+  }
+
+  // Locale.ROOT formatting: the f"" interpolator is locale-sensitive
+  // and a comma-decimal default locale would emit invalid JSON
+  private def d(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+  // 3-decimal seconds: a full Double repr per query made the record
+  // ~2.5 KB and the driver's tail-capture truncated its head
+  // (BENCH_r03 "parsed: null"); ms resolution is all the diff needs
+  private def sec3(v: Double): String = d(v, 3)
+
+  /** `{"name":[a,b],...}` in 3-decimal seconds. */
+  private[graft] def pairsJson(pairs: Iterable[(String, (Double, Double))]): String =
+    pairs.map { case (name, (a, b)) =>
+      "\"" + name + "\":[" + sec3(a) + "," + sec3(b) + "]"
+    }.mkString("{", ",", "}")
+
+  /** A (best, worst) iteration spread over 3x that costs over 0.5 s. */
+  private[graft] def isSuspect(best: Double, worst: Double): Boolean =
+    best > 0.0 && worst - best > 0.5 && worst / best > 3.0
+
+  private[graft] val DriftGate = "drift_vs_committed"
+  private[graft] val DriftNote = "drift_note"
+  private[graft] val Inflated = "baseline_inflated"
+
+  /** The drift tier of a query's best time `cur` against its committed
+    * time `prev` (seconds), named by the record field that lists it; a
+    * failed side (<= 0) has none.
+    *  - [[DriftGate]]: over 2x and 0.5 s slower. Re-timed once, and a
+    *    survivor is flagged.
+    *  - [[DriftNote]]: under the gate but over 1.5x and 0.3 s slower —
+    *    where sub-gate creep hides (r12's sample_dsir tracked loadavg
+    *    across five records). Noted, not re-timed.
+    *  - [[Inflated]]: the committed time is over 2x and 0.5 s SLOWER. The
+    *    gate is asymmetric, so a baseline cut under load would otherwise
+    *    weaken it silently; re-cut the record on a quiet box instead. */
+  private[graft] def driftTier(cur: Double, prev: Double): Option[String] =
+    if (cur <= 0 || prev <= 0) None
+    else if (cur > 2.0 * prev && cur - prev > 0.5) Some(DriftGate)
+    else if (cur > 1.5 * prev && cur - prev > 0.3) Some(DriftNote)
+    else if (prev > 2.0 * cur && prev - cur > 0.5) Some(Inflated)
+    else None
+
+  /** A serve median drifts from its committed value (both ms/query) when
+    * they differ by more than 15% either way. */
+  private[graft] def serveDrift(cur: Double, prev: Double): Boolean = {
+    val ratio = cur / prev
+    ratio > 1.15 || ratio < 1.0 / 1.15
+  }
+
+  /** The parts of a bench record the drift checks read: `load.cpus`,
+    * `sf`, and the numeric fields of `queries` and `engine`. */
+  private[graft] final case class Record(cpus: Option[Int], sf: Option[String],
+      queries: Map[String, Double], engine: Map[String, Double]) {
+    /** Measured like a run at local[`runCpus`] over `runSf`. */
+    def comparable(runCpus: Int, runSf: String): Boolean =
+      cpus.contains(runCpus) && sf.contains(runSf)
+  }
+
+  private[graft] object Record {
+    private implicit val formats: Formats = DefaultFormats
+
+    def parse(text: String): Record = {
+      val j = JsonMethods.parse(text)
+      def numbers(v: JValue): Map[String, Double] = v match {
+        case JObject(fields) =>
+          fields.flatMap { case (k, x) => x.extractOpt[Double].map(k -> _) }.toMap
+        case _ => Map.empty
+      }
+      Record((j \ "load" \ "cpus").extractOpt[Int], (j \ "sf").extractOpt[String],
+        numbers(j \ "queries"), numbers(j \ "engine"))
+    }
   }
 
   /** The serve block's query batch: `n` distinct query ids over the

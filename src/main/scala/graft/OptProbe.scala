@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: empirical per-query breakdown for optimization work — for
   * each named catalog query, a warm run then a measured run with a
@@ -11,6 +11,12 @@ import org.apache.spark.sql.SparkSession
   * notes: fixture-scale cost splits into per-job fixed overhead
   * (jobs × ~50-200 ms) vs genuine task work (task_sec), and the two
   * demand different fixes.
+  *
+  * Prints one JSON line per query on stdout, and one `[stage]` line per
+  * completed stage (warm and measured runs) on stderr. The warm run of
+  * `pipeline_curate_export` builds the session-memoized curation chain
+  * and its token export, so with `SPARK_GRAFT_CHAIN_TRACE=1` it also
+  * prints that build's per-stage `[chain]` lines.
   *
   * Usage: runMain graft.OptProbe <sfDir> <queryRegex> [planOutDir]
   */
@@ -23,18 +29,7 @@ object OptProbe {
     val sfDir = args(0)
     val pattern = args(1)
     val planDir = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // A/B toggle for the coalesce policy experiment (r17)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PF", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCpus())
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -44,21 +39,18 @@ object OptProbe {
     val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
     val shufRead = new java.util.concurrent.atomic.AtomicLong(0L)
     val shufWrite = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stageLog = sys.env.contains("SPARK_GRAFT_PROBE_STAGES")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
-        if (stageLog) {
-          val i = s.stageInfo
-          val m = i.taskMetrics
-          System.err.println(f"[stage] ${i.stageId}%4d tasks=${i.numTasks}%4d " +
-            f"run=${m.executorRunTime / 1e3}%7.2fs cpu=${m.executorCpuTime / 1e9}%7.2fs " +
-            f"gc=${m.jvmGCTime / 1e3}%5.2fs fetchWait=${m.shuffleReadMetrics.fetchWaitTime / 1e3}%5.2fs " +
-            f"ser=${m.resultSerializationTime / 1e3}%5.2fs deser=${m.executorDeserializeTime / 1e3}%6.2fs " +
-            i.name.take(90))
-        }
+        val i = s.stageInfo
+        val m = i.taskMetrics
+        System.err.println(f"[stage] ${i.stageId}%4d tasks=${i.numTasks}%4d " +
+          f"run=${m.executorRunTime / 1e3}%7.2fs cpu=${m.executorCpuTime / 1e9}%7.2fs " +
+          f"gc=${m.jvmGCTime / 1e3}%5.2fs fetchWait=${m.shuffleReadMetrics.fetchWaitTime / 1e3}%5.2fs " +
+          f"ser=${m.resultSerializationTime / 1e3}%5.2fs deser=${m.executorDeserializeTime / 1e3}%6.2fs " +
+          i.name.take(90))
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
@@ -90,14 +82,16 @@ object OptProbe {
           fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
       }
-      Thread.sleep(300)
+      // drain before the reset and after the measured run, so the counts
+      // hold exactly the measured run's events
+      ListenerBusDrain(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0)
       taskMs.set(0L); cpuNs.set(0L); gcMs.set(0L)
       shufRead.set(0L); shufWrite.set(0L)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // let task-end events drain
+      ListenerBusDrain(spark.sparkContext)
       println(f"""{"query":"$name","sec":$sec%.3f,"jobs":${jobs.get()},"stages":${stages.get()},"tasks":${tasks.get()},"task_sec":${taskMs.get() / 1e3}%.2f,"cpu_sec":${cpuNs.get() / 1e9}%.2f,"gc_sec":${gcMs.get() / 1e3}%.2f,"shuf_read_mb":${shufRead.get() / 1e6}%.1f,"shuf_write_mb":${shufWrite.get() / 1e6}%.1f}""")
     }
     spark.stop()

@@ -142,7 +142,8 @@ object SparkEntry {
     * (`SPARK_GRAFT_CHAIN_TRACE=1`): the chain's staged writes
     * materialize at construction, so per-stage attribution of
     * `curate_chain_build_sec` is exactly the wall-clock inside each
-    * checkpoint call. Dev aid (see [[ChainProbe]]); free when unset. */
+    * checkpoint call. Dev aid (`OptProbe <sfDir> pipeline_curate_export`
+    * builds the chain in its warm run); free when unset. */
   private[graft] def ckTraced(name: String, df: => DataFrame): DataFrame =
     traced(name)(df.localCheckpoint())
 
@@ -196,7 +197,7 @@ object SparkEntry {
       val canon = ckTraced("exact_dedup", graft.pipeline.Dedup.exactDedup(kept))
       // fuzzy near-dup among the exact-dedup survivors. The cands
       // checkpoint is MEASURED load-bearing (r14, VERDICT #5 asked to
-      // try dropping it — JobProbe, sf0.1/local[32], steady-state,
+      // try dropping it — job-count probe, sf0.1/local[32], steady-state,
       // interleaved A/B): with it 63 jobs / 7.9-10.6 s; without it 57
       // jobs but 9.7-12.3 s — the candidate list feeds FOUR subplans
       // inside jaccardPairsByHash (the id semi-join side and three pair

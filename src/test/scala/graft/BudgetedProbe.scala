@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Ad-hoc probe (test scope): `graft.Bench`'s coarse-fine serve block on
   * its own — the same sf fixtures, codebook, index and 2000-query batch
   * ([[Bench.serveBatch]]), nothing else running in the session. The batch
@@ -17,14 +14,7 @@ object BudgetedProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 5
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCpus())
     import graft.index.{RQTrainer, CodeAssigner, ClusterIndexBuilder}
     import graft.search.CoarseFineRetriever
     def timed(f: => Unit): Double = {
