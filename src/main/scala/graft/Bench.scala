@@ -20,6 +20,14 @@ object Bench {
     // benchmark the engine at 1/8th of the available cores
     val cpus = LocalSession.envCpus()
     val spark = LocalSession(cpus)
+    // machine-load fingerprint: BENCH_r06's 163 s record was a loaded-box
+    // artifact (18× single-query outliers) that read as a 3× regression —
+    // the record must carry enough context to self-identify as noise.
+    // Read before Bench's own warm-up: the 1-minute average would
+    // otherwise count that all-core work as foreign load.
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    val loadStart = osBean.getSystemLoadAverage
+    val nCpus = Runtime.getRuntime.availableProcessors
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -62,13 +70,6 @@ object Bench {
     // build cost would silently vanish from the record
     val (_, curateChainSec) = timed(SparkEntry.warmCurateChain(spark, sfDir))
     System.err.println(f"[bench] curate chain build ${curateChainSec}%.1f s")
-
-    // machine-load fingerprint: BENCH_r06's 163 s record was a loaded-box
-    // artifact (18× single-query outliers) that read as a 3× regression —
-    // the record must carry enough context to self-identify as noise
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val loadStart = osBean.getSystemLoadAverage
-    val nCpus = Runtime.getRuntime.availableProcessors
 
     // best-of-N per query (default 2): single-shot timings at this scale
     // carry multi-second GC/scheduler noise, which round-over-round diffs

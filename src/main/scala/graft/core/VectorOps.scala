@@ -30,6 +30,40 @@ object VectorOps {
     math.sqrt(s)
   }
 
+  /** log Σ exp over `raw(from until from + n)` (n ≥ 1) — the log-softmax
+    * normalizer of the RQ and HKM beam searches, whose oracles replay
+    * this fold: the max under `java.lang.Double.compare` (NaN above all,
+    * the first of equal values kept, as Scala's `Array[Double].max`),
+    * then Σ exp(r − max) in index order, then max + log Σ. */
+  def logSumExp(raw: Array[Double], from: Int, n: Int): Double = {
+    var mx = raw(from)
+    var i = from + 1
+    while (i < from + n) {
+      if (java.lang.Double.compare(mx, raw(i)) < 0) mx = raw(i)
+      i += 1
+    }
+    var sum = 0.0
+    i = from
+    while (i < from + n) { sum += math.exp(raw(i) - mx); i += 1 }
+    mx + math.log(sum)
+  }
+
+  /** Spark's order for a window sorted by (score DESC, codes ASC): the
+    * score as Spark sorts doubles (NaN first, −0.0 equal to 0.0), then the
+    * codes element by element, shorter first. The driver plans replay the
+    * HKM beam's and the budget prune's windows with it. */
+  def windowOrder(s1: Double, c1: IndexedSeq[Int], s2: Double, c2: IndexedSeq[Int]): Int = {
+    val c = if (s1 == s2) 0 else java.lang.Double.compare(s2, s1)
+    if (c != 0) c
+    else {
+      val n = math.min(c1.length, c2.length)
+      var i = 0
+      while (i < n && c1(i) == c2(i)) i += 1
+      if (i < n) Integer.compare(c1(i), c2(i))
+      else Integer.compare(c1.length, c2.length)
+    }
+  }
+
   /** q · p — inner product (reference `ip` metric, document_encoder.py:129). */
   def vecDot(a: Column, b: Column): Column =
     aggregate(

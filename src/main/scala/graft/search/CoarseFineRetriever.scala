@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.util.SizeEstimator
+import graft.core.VectorOps
 import graft.index.Codebook
 
 /** Coarse→fine retrieval: the reference's core serving shape
@@ -39,10 +40,12 @@ import graft.index.Codebook
   * doc → query map) and scores it with the distributed plan's own
   * [[BruteForceKNN.score]] expression, and the top-k runs on the driver
   * in [[TopKHeap]]'s distinct mode — the primitive [[BoundedTopK]] runs.
-  * The output is a local frame with the distributed plan's schema, so
-  * both plans give the same rows, scores equal to the bit. A cached or
-  * table-backed batch (the catalog's, `graft.Bench`'s) takes the
-  * distributed plan, and so does any other call.
+  * The output is a local frame with the distributed plan's schema
+  * ([[TopK.rankedSchema]]), so both plans give the same rows, scores
+  * equal to the bit. A cached or table-backed batch (the catalog's,
+  * `graft.Bench`'s) takes the distributed plan, and so does any other
+  * call. The distributed plan is built only on the branch that returns
+  * it: a driver-plan call analyzes no plan it does not run.
   *
   * The driver plan runs when it is called: `retrieve` and
   * `retrieveBudgeted` return a materialized frame for a driver-resident
@@ -141,6 +144,26 @@ object CoarseFineRetriever {
     if (dedup != "max" && dedup != "sum")
       throw new IllegalArgumentException(
         s"""dedup must be "max" or "sum", got "$dedup"""")
+    def distributed = retrievePlan(queries, clusterIndex, docs, codebook,
+      beams, k, metric, dedup, topicMix, topicRatio)
+    if (dedup == "max" && topicMix.isEmpty)
+      onDriver(queries, clusterIndex, docs, codebook, beams, k, metric,
+        budget = None).getOrElse(distributed)
+    else distributed
+  }
+
+  /** [[retrieve]]'s distributed plan. */
+  private def retrievePlan(
+      queries: DataFrame,
+      clusterIndex: DataFrame,
+      docs: DataFrame,
+      codebook: Codebook,
+      beams: Int,
+      k: Int,
+      metric: String,
+      dedup: String,
+      topicMix: Option[DataFrame],
+      topicRatio: Double): DataFrame = {
     val coarse = CodebookBeamSearch.searchKeepingVec(
       queries.where(col("query_id").isNotNull), codebook, beams)
 
@@ -187,13 +210,7 @@ object CoarseFineRetriever {
           array_sort(collect_list(struct(col("codes"), col("score")))),
           lit(0.0),
           (acc, s) => acc + s.getField("score")).as("score")), k)
-    else {
-      val distributed = TopK.ranked(scored, k, distinctIds = true)
-      if (topicMix.isEmpty)
-        onDriver(queries, clusterIndex, docs, codebook, beams, k, metric,
-          budget = None, distributed)
-      else distributed
-    }
+    else TopK.ranked(scored, k, distinctIds = true)
   }
 
   /** Budgeted variant: before fetching ANY embeddings, re-score candidate
@@ -226,10 +243,22 @@ object CoarseFineRetriever {
       beams: Int = 10,
       k: Int = 100,
       budget: Int = 1000,
-      metric: String = "ip"): DataFrame = {
+      metric: String = "ip"): DataFrame =
+    onDriver(queries, clusterIndex, docs, codebook, beams, k, metric,
+      budget = Some(budget)).getOrElse(
+      budgetedPlan(queries, clusterIndex, docs, codebook, beams, k, budget, metric))
 
-    val spark = queries.sparkSession
-    val bc = spark.sparkContext.broadcast(codebook)
+  /** [[retrieveBudgeted]]'s distributed plan. */
+  private def budgetedPlan(
+      queries: DataFrame,
+      clusterIndex: DataFrame,
+      docs: DataFrame,
+      codebook: Codebook,
+      beams: Int,
+      k: Int,
+      budget: Int,
+      metric: String): DataFrame = {
+    val bc = queries.sparkSession.sparkContext.broadcast(codebook)
     val rscore = udf { (qvec: Array[Float], codes: Seq[Int]) =>
       reconScore(bc.value, metric, qvec, codes.toArray)
     }
@@ -255,8 +284,7 @@ object CoarseFineRetriever {
 
     // a doc in several kept clusters repeats with the same dot product:
     // the distinct-id top-k keeps one copy (= max), no extra shuffle
-    onDriver(queries, clusterIndex, docs, codebook, beams, k, metric,
-      budget = Some(budget), TopK.ranked(scored, k, distinctIds = true))
+    TopK.ranked(scored, k, distinctIds = true)
   }
 
   /** The budget prune's cluster score: the query against the cluster's RQ
@@ -283,24 +311,14 @@ object CoarseFineRetriever {
     * `size(doc_ids)` and its non-NULL members. */
   private final case class Chunk(csize: java.lang.Long, size: Int, docs: Array[Long])
 
-  /** Spark's window order for the budget prune: rscore descending as
-    * Spark sorts doubles (NaN first, -0.0 equal to 0.0), then codes
-    * ascending (element by element, then shorter first). */
-  private def pruneOrder(a: (Double, Vector[Int]), b: (Double, Vector[Int])): Int = {
-    val c = if (a._1 == b._1) 0 else java.lang.Double.compare(b._1, a._1)
-    if (c != 0) c
-    else {
-      val n = math.min(a._2.length, b._2.length)
-      var i = 0
-      while (i < n && a._2(i) == b._2(i)) i += 1
-      if (i < n) Integer.compare(a._2(i), b._2(i))
-      else Integer.compare(a._2.length, b._2.length)
-    }
-  }
+  /** Spark's window order for the budget prune: (rscore DESC, codes
+    * ASC). */
+  private def pruneOrder(a: (Double, Vector[Int]), b: (Double, Vector[Int])): Int =
+    VectorOps.windowOrder(a._1, a._2, b._1, b._2)
 
-  /** The driver plan (see the object scaladoc). Returns `distributed`
-    * unchanged when the batch is not driver-resident or the guard trips;
-    * `budget` selects the budgeted prune. */
+  /** The driver plan (see the object scaladoc), or None — before any
+    * distributed plan is built — when the batch is not driver-resident or
+    * the guard trips; `budget` selects the budgeted prune. */
   private def onDriver(
       queries: DataFrame,
       clusterIndex: DataFrame,
@@ -309,21 +327,20 @@ object CoarseFineRetriever {
       beams: Int,
       k: Int,
       metric: String,
-      budget: Option[Int],
-      distributed: DataFrame): DataFrame = {
+      budget: Option[Int]): Option[DataFrame] = {
     val spark = queries.sparkSession
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val driverResident =
       queries.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] &&
-        (queries.schema("qvec").dataType match {
+        queries.schema.exists(f => f.name == "qvec" && (f.dataType match {
           case ArrayType(FloatType, _) => true
           case _ => false
-        })
-    if (!driverResident || threshold <= 0) return distributed
+        }))
+    if (!driverResident || threshold <= 0) return None
     import spark.implicits._
     val sc = spark.sparkContext
-    def answer(rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), distributed.schema)
+    def answer(rows: Seq[Row]): Option[DataFrame] = Some(spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), TopK.rankedSchema(queries.schema("query_id").dataType)))
 
     // the batch: rows of a LocalRelation, no job. The beam reads `qvec`
     // through the encoder the beam UDF uses; scoring reads it as is.
@@ -405,7 +422,7 @@ object CoarseFineRetriever {
     val qvecs: Array[Array[java.lang.Float]] = batch.indices.map(i =>
       if (scoredRows(i)) batch(i).getSeq[java.lang.Float](1).toArray else null).toArray
     val plan = (want.map { case (d, rs) => d -> rs.toArray }, qvecs)
-    if (SizeEstimator.estimate(plan) > threshold) return distributed
+    if (SizeEstimator.estimate(plan) > threshold) return None
 
     // job 2: one docs scan, each doc expanded into its query rows and
     // scored with the distributed plan's expression

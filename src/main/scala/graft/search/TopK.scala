@@ -288,6 +288,16 @@ object TopK {
         col("sd.id").as("doc_id"), col("sd.score").as("score"))
   }
 
+  /** [[ranked]]'s output schema over a `query_id` of type `queryId`, as
+    * Spark derives it for the retrievers' plans (every column nullable
+    * but `rank`): the schema a driver-side ranking declares for its
+    * [[rankedRows]]. */
+  private[search] def rankedSchema(queryId: DataType): StructType = StructType(Seq(
+    StructField("query_id", queryId, nullable = true),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("doc_id", LongType, nullable = true),
+    StructField("score", DoubleType, nullable = true)))
+
   /** [[ranked]]'s rows for one query's heap built on the driver: the
     * same column order and rank base, so a driver-side ranking keeps the
     * contract by construction. */

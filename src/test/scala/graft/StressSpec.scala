@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * bounded loosely — the point is completion and sane output, not timing
   * precision.
   */
-class StressSpec extends SparkSpec {
+class StressSpec extends SparkSpec with graft.index.HkmBeamPlans {
 
   /** `body`'s result and the largest shuffle-read record count of any
     * task it ran. */
@@ -298,21 +298,6 @@ class StressSpec extends SparkSpec {
     assert(out.count() >= 2000L * 4)
   }
 
-  /** (query, rank) → (path, score bits) of the plain-Scala reference
-    * beam over a fitLevels frame's collected nodes. */
-  private def referenceBeams(levels: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame, beams: Int)
-      : Map[(Long, Long), (Seq[Int], Long)] = {
-    import spark.implicits._
-    val nodes = graft.index.HkmReference.nodes(levels)
-    queries.as[(Long, Array[Float])].collect().flatMap { case (q, v) =>
-      graft.index.HkmReference.beam(nodes, v, beams).zipWithIndex.map {
-        case ((p, sc), i) =>
-          (q, i + 1L) -> (p, java.lang.Double.doubleToLongBits(sc))
-      }
-    }.toMap
-  }
-
   test("hkm fit job count grows with depth, not node count") {
     import graft.index.HierarchicalKMeans
     import spark.implicits._
@@ -383,10 +368,9 @@ class StressSpec extends SparkSpec {
       (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
       .toDF("doc_id", "vec").repartition(16).cache()
     df.count()
-    val queries = (0 until 64).map(i =>
-      (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
-      .toDF("query_id", "qvec").cache()
-    queries.count()
+    val batch = (0 until 64).map(i =>
+      (java.lang.Long.valueOf(i.toLong), Array.fill(8)(rng.nextGaussian().toFloat)))
+    val queries = localQueries(batch).repartition(3) // the distributed plan
 
     val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 32, depth = 2,
       seed = 2L, maxIter = 10)
@@ -398,16 +382,8 @@ class StressSpec extends SparkSpec {
       "distributed beam should leave join strategy to AQE")
     assert(!dist.queryExecution.executedPlan.toString
       .contains("CartesianProduct"))
-    val byLevels = dist
-      .as[(Long, Long, Seq[Int], Double)].collect()
-      .map { case (q, r, p, sc) =>
-        (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
-      }.toMap
-
-    val byRef = referenceBeams(levels, queries, beams = 6)
-    assert(byLevels.size == byRef.size)
-    assert(byLevels == byRef,
-      "distributed beam diverged from the reference beam (bit compare)")
+    // both plans equal the reference beam (bit compare)
+    assert(beamBothPlans(batch, levels, depth = 2, beams = 6).length == 64 * 6)
   }
 
   test("hkm distributed beam: leaf beams carry and compete (variable-depth trie)") {
@@ -428,10 +404,8 @@ class StressSpec extends SparkSpec {
       (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
     val df = (dense ++ scatter).toDF("doc_id", "vec").repartition(16).cache()
     df.count()
-    val queries = (0 until 48).map(i =>
-      (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
-      .toDF("query_id", "qvec").cache()
-    queries.count()
+    val batch = (0 until 48).map(i =>
+      (java.lang.Long.valueOf(i.toLong), Array.fill(8)(rng.nextGaussian().toFloat)))
 
     val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 32, depth = 2,
       seed = 5L, maxIter = 10)
@@ -441,19 +415,12 @@ class StressSpec extends SparkSpec {
     assert(trained < 32 && trained >= 1,
       s"fixture should leave SOME root cells leaves, got $trained/32 trained")
 
-    val dist = HierarchicalKMeans.beamSearchByLevels(
-      queries, levels, depth = 2, beams = 8)
-      .as[(Long, Long, Seq[Int], Double)].collect()
+    // both plans equal the reference beam on a variable-depth trie
+    val rows = beamBothPlans(batch, levels, depth = 2, beams = 8)
     // the carried branch must actually appear in results
-    assert(dist.exists(_._3.length == 1),
+    assert(rows.exists(_._3.length == 1),
       "no length-1 path survived — the leaf-carry branch never engaged")
-    assert(dist.exists(_._3.length == 2))
-
-    val byLevels = dist.map { case (q, r, p, sc) =>
-      (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
-    }.toMap
-    assert(byLevels == referenceBeams(levels, queries, beams = 8),
-      "distributed beam diverged from the reference beam on a variable-depth trie")
+    assert(rows.exists(_._3.length == 2))
   }
 
   test("hkm distributed beam: plan grows linearly in depth, parity holds at depth 4") {
@@ -468,10 +435,9 @@ class StressSpec extends SparkSpec {
       (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
       .toDF("doc_id", "vec").repartition(16).cache()
     df.count()
-    val queries = (0 until 48).map(i =>
-      (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
-      .toDF("query_id", "qvec").cache()
-    queries.count()
+    val batch = (0 until 48).map(i =>
+      (java.lang.Long.valueOf(i.toLong), Array.fill(8)(rng.nextGaussian().toFloat)))
+    val queries = localQueries(batch).repartition(3) // the distributed plan
 
     val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 32, depth = 4,
       seed = 7L, maxIter = 5).cache()
@@ -487,14 +453,8 @@ class StressSpec extends SparkSpec {
     assert(increments.distinct.size == 1,
       s"plan growth must be linear in depth, got node counts $counts")
 
-    val dist = HierarchicalKMeans.beamSearchByLevels(
-      queries, levels, depth = 4, beams = 6)
-      .as[(Long, Long, Seq[Int], Double)].collect()
-      .map { case (q, r, p, sc) =>
-        (q, r) -> (p, java.lang.Double.doubleToLongBits(sc))
-      }.toMap
-    assert(dist == referenceBeams(levels, queries, beams = 6),
-      "depth-4 distributed beam diverged from the reference beam (bit compare)")
+    // depth-4 parity on both plans (bit compare)
+    assert(beamBothPlans(batch, levels, depth = 4, beams = 6).nonEmpty)
   }
 
   test("hkm fit handles the reference's fan-out (k=32) in seconds") {

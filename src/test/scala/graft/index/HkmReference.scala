@@ -59,33 +59,43 @@ object HkmReference {
     path.toSeq
   }
 
-  /** Top-`beams` (path, score): per node the log-softmax of −‖q − child‖²
-    * over that node's children, raws / max / Σexp folded in code order,
-    * accumulated as `(cum + r) − logz`; a beam on a leaf carries
-    * unchanged. Ties → lexicographically smallest path. */
-  def beam(nodes: Nodes, qvec: Array[Float], beams: Int)
-      : Seq[(Seq[Int], Double)] = {
+  /** Score descending as Spark sorts doubles (NaN first, −0.0 equal to
+    * 0.0), then path ascending — the beam window's order. */
+  private def before(a: (Seq[Int], Double), b: (Seq[Int], Double)): Boolean = {
     import scala.math.Ordering.Implicits.seqOrdering
+    if (a._2 == b._2 || (a._2.isNaN && b._2.isNaN)) Ordering[Seq[Int]].lt(a._1, b._1)
+    else a._2.isNaN || (!b._2.isNaN && a._2 > b._2)
+  }
+
+  /** Top-`beams` (path, score) of the rows that share one query id:
+    * per node the log-softmax of −‖q − child‖² over that node's children,
+    * raws / max / Σexp folded in code order, accumulated as
+    * `(cum + r) − logz`, each beam against its own row's vector `q`; a
+    * beam on a leaf carries unchanged. Every row's beams compete for the
+    * `beams` slots, ranked as [[before]]. */
+  def beam(nodes: Nodes, qvecs: Seq[Array[Float]], beams: Int)
+      : Seq[(Seq[Int], Double)] = {
     def live(path: Seq[Int]): Option[Array[Array[Float]]] =
       nodes.get(path.mkString(","))
-    var frontier: Seq[(Seq[Int], Double)] = Seq((Seq.empty, 0.0))
-    while (frontier.exists { case (p, _) => live(p).isDefined }) {
-      frontier = frontier.flatMap { case (path, cum) =>
+    var frontier: Seq[(Int, Seq[Int], Double)] =
+      qvecs.indices.map(i => (i, Seq.empty[Int], 0.0))
+    while (frontier.exists { case (_, p, _) => live(p).isDefined }) {
+      frontier = frontier.flatMap { case (row, path, cum) =>
         live(path) match {
           case Some(cents) =>
-            val raws = cents.map(c => -sqDist(qvec, c))
+            val raws = cents.map(c => -sqDist(qvecs(row), c))
             val mx = raws.max
             var sumExp = 0.0
             raws.foreach(r => sumExp += math.exp(r - mx))
             val logz = mx + math.log(sumExp)
             raws.toSeq.zipWithIndex.map { case (r, c) =>
-              (path :+ c, cum + r - logz)
+              (row, path :+ c, cum + r - logz)
             }
-          case None => Seq((path, cum))
+          case None => Seq((row, path, cum))
         }
-      }.sortBy { case (p, cum) => (-cum, p) }.take(beams)
+      }.sortWith((a, b) => before((a._2, a._3), (b._2, b._3))).take(beams)
     }
-    frontier
+    frontier.map { case (_, p, cum) => (p, cum) }
   }
 
   /** In-memory level fit: per level, every prefix with at least `minSize`

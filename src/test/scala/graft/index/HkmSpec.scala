@@ -3,7 +3,7 @@ package graft.index
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class HkmSpec extends SparkSpec {
+class HkmSpec extends SparkSpec with HkmBeamPlans {
   import spark.implicits._
 
   test("assignment is the per-node argmin walk (local replica check)") {
@@ -76,17 +76,17 @@ class HkmSpec extends SparkSpec {
     val levels = HierarchicalKMeans.fitLevels(df, "vec", k = k, depth = 2,
       seed = 42L, maxIter = 10)
     val nodes = HkmReference.nodes(levels)
-    val q = df.where(col("doc_id") < 25)
-      .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
+    val batch = data.take(25).map { case (id, v) => (java.lang.Long.valueOf(id), v) }
     val greedy = HierarchicalKMeans.assignByLevels(df, levels, depth = 2)
       .as[(Long, Seq[Int])].collect().toMap
-    val out = HierarchicalKMeans.beamSearchByLevels(q, levels, depth = 2,
+    val out = beamBothPlans(batch, levels, depth = 2,
       beams = k * k) // full width at depth 2
-      .as[(Long, Long, Seq[Int], Double)].collect().groupBy(_._1)
+      .groupBy(_._1.get)
     assert(out.size == 25)
     out.foreach { case (qid, rows) =>
-      val ranked = rows.sortBy(_._2).toSeq
-      assert(ranked.map(_._4).sliding(2).forall(s =>
+      val ranked = rows.sortBy(_._2)
+      val scores = ranked.map(r => java.lang.Double.longBitsToDouble(r._4))
+      assert(scores.sliding(2).forall(s =>
         s.length < 2 || s.head >= s(1)), "scores must be non-increasing")
       assert(ranked.map(_._3).contains(greedy(qid)),
         "greedy path must appear in the full-width beam")
@@ -102,19 +102,114 @@ class HkmSpec extends SparkSpec {
 
   test("beam keeps at most `beams` paths and is deterministic") {
     val rng = new scala.util.Random(23)
-    val df = (0 until 200).map(i =>
+    val data = (0 until 200).map(i =>
       (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
-      .toDF("doc_id", "vec").cache()
+    val df = data.toDF("doc_id", "vec").cache()
     val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 4, depth = 2,
       seed = 9L, maxIter = 10)
-    val q = df.limit(6)
-      .select(col("doc_id").as("query_id"), col("vec").as("qvec"))
-    val a = HierarchicalKMeans.beamSearchByLevels(q, levels, depth = 2,
-      beams = 3).collect()
-    assert(a.groupBy(_.getLong(0)).values.forall(_.length <= 3))
-    val b = HierarchicalKMeans.beamSearchByLevels(q.repartition(5), levels,
-      depth = 2, beams = 3).collect()
-    assert(a.map(_.toString).sorted.toSeq == b.map(_.toString).sorted.toSeq)
+    val batch = data.take(6).map { case (id, v) => (java.lang.Long.valueOf(id), v) }
+    // both plans, and the distributed one over 3 partitions, give the
+    // reference's rows
+    val a = beamBothPlans(batch, levels, depth = 2, beams = 3)
+    assert(a.groupBy(_._1).size == 6)
+    assert(a.groupBy(_._1).values.forall(_.length <= 3))
+  }
+
+  /** A trie whose far 3-point clump stays a leaf at depth 1. */
+  private lazy val leafyTrie = {
+    val rng = new scala.util.Random(43)
+    val far = (0 until 3).map(i => (1000L + i, Array(50f + i, 50f, 0f, 0f)))
+    val near = (0 until 300).map(i =>
+      (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
+    val df = (far ++ near).toDF("doc_id", "vec")
+    val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 3, depth = 2,
+      seed = 42L, maxIter = 10)
+    (far, near, levels)
+  }
+
+  test("a hostile batch gets the reference's beams on both plans") {
+    val (far, near, levels) = leafyTrie
+    val v = near.take(4).map(_._2)
+    val batch = Seq[(java.lang.Long, Array[Float])](
+      (1L, v(0)), (1L, v(1)), // one id, two vectors: ranked together
+      (2L, far(0)._2), // into the depth-1 leaf
+      (3L, Array.fill(4)(Float.NaN)),
+      (4L, null), // no vector, no beams
+      (null, v(2)), (null, v(3)), // the NULL id is one group
+      (5L, Array(0f, 0f, 0f, 0f)))
+    for (beams <- Seq(1, 4, 9)) {
+      val rows = beamBothPlans(batch, levels, depth = 2, beams = beams)
+      assert(rows.map(_._1).toSet == Set(Some(1L), Some(2L), Some(3L), None, Some(5L)))
+      assert(rows.count(_._1 == Some(1L)) == math.min(beams, 2 * 9))
+      assert(rows.exists(r => r._1 == Some(2L) && r._3.length == 1),
+        "the leaf beam did not carry")
+    }
+    assert(beamBothPlans(Nil, levels, depth = 2, beams = 4).isEmpty)
+    assert(beamBothPlans(Seq((7L, null)), levels, depth = 2, beams = 4).isEmpty)
+  }
+
+  test("a driver-resident beam batch runs one job, and falls back past the broadcast threshold") {
+    val (_, near, levels) = leafyTrie
+    val batch = near.take(8).map { case (id, v) => (java.lang.Long.valueOf(id), v) }
+    val local = localQueries(batch)
+    val want = referenceRows(levels, batch, beams = 4)
+    levels.count()
+    val jobs = countJobs {
+      assert(beamRows(HierarchicalKMeans.beamSearchByLevels(local, levels,
+        depth = 2, beams = 4)) == want)
+    }
+    assert(jobs <= 1, s"the driver plan ran $jobs jobs")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    // broadcasts off, then a threshold below the trie's size
+    try for (threshold <- Seq("-1", "100")) {
+      spark.conf.set(key, threshold)
+      val out = HierarchicalKMeans.beamSearchByLevels(local, levels, depth = 2, beams = 4)
+      assert(!isLocal(out), s"threshold $threshold: the batch stayed on the driver")
+      assert(beamRows(out) == want, s"threshold $threshold")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a NULL vector gets an empty HKM path") {
+    val (far, near, levels) = leafyTrie
+    val docs = Seq[(Long, Array[Float])]((1L, near.head._2), (2L, null),
+      (3L, far.head._2)).toDF("doc_id", "vec")
+    val paths = HierarchicalKMeans.assignByLevels(docs, levels, depth = 2)
+      .as[(Long, Seq[Int])].collect().toMap
+    val nodes = HkmReference.nodes(levels)
+    assert(paths(2L).isEmpty)
+    assert(paths(1L) == HkmReference.assign(nodes, near.head._2))
+    assert(paths(3L) == HkmReference.assign(nodes, far.head._2) && paths(3L).length == 1)
+  }
+
+  test("assignByLevels runs two broadcasts and one result job at any depth ≥ 2") {
+    // level 0 joins the root row alone: the optimizer carries the root
+    // prefix "" into the node frame, so that broadcast is one filtered
+    // row, and every deeper level shares the broadcast of the whole frame
+    val rng = new scala.util.Random(47)
+    val df = (0 until 600).map(i =>
+      (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
+      .toDF("doc_id", "vec").cache()
+    df.count()
+    for (depth <- Seq(2, 3)) {
+      val levels = HierarchicalKMeans.fitLevels(df, "vec", k = 3, depth = depth,
+        seed = 4L, maxIter = 5)
+      levels.count()
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      withListener(new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          names.add(
+            if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+                .exists(_.contains("broadcast exchange"))) "broadcast"
+            else "result")
+      })(HierarchicalKMeans.assignByLevels(df, levels, depth).collect())
+      val jobs = names.toArray.toSeq.map(_.toString)
+      assert(jobs.sorted == Seq("broadcast", "broadcast", "result"),
+        s"depth $depth: ${jobs.mkString("; ")}")
+    }
   }
 
   test("bounded node sampling stays partitioning-independent") {
