@@ -18,7 +18,7 @@ import graft.io.MeviIO
   * Every `queries` entry is an operator from SURVEY.md §2 (id in the name),
   * runs on the driver fixtures (TESTDATA.md), and — where SQL-expressible —
   * has a DuckDB oracle in `oracles` with identical column names/ordering.
-  * Non-SQL-expressible entries (MLlib KMeans-derived) get rows-only checks.
+  * Non-SQL-expressible entries (k-means-trained) get rows-only checks.
   */
 object SparkEntry {
 

@@ -31,7 +31,7 @@ object ArtifactCache {
     * concurrent callers of the same key still build once, but a cache hit
     * or an unrelated build never blocks behind another key's in-flight
     * training job — a global lock here would serialize every lookup
-    * under the longest KMeans fit. */
+    * under the longest k-means fit. */
   def value[T](key: String)(build: => T): T =
     values.computeIfAbsent(key, _ => new Lazy(() => build)).get.asInstanceOf[T]
 

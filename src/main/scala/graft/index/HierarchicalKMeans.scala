@@ -24,7 +24,8 @@ import scala.collection.mutable
   * Scale: training is LEVEL-SYNCHRONOUS — one distributed job per level,
   * not per node. All level-i node codebooks are fit inside a single
   * `flatMapGroups` over (path-prefix) groups (each group trains a local
-  * seeded k-means++ over a deterministic bounded sample of its members),
+  * seeded k-means++ over a deterministic bounded sample of its members:
+  * [[SampledKMeans]], the trainer RQ and PQ use too),
   * and the level-(i+1) frontier descends by one prefix join. At the
   * reference's K=32/depth-4 geometry that is ~8 Spark jobs total instead
   * of ~33k sequential MLlib fits. The trained trie is one DataFrame of
@@ -34,163 +35,6 @@ import scala.collection.mutable
   * at K=32/depth-4/768-d the full codebook set is ~3 GB.
   */
 object HierarchicalKMeans {
-
-  /** Deterministic local Lloyd's k-means with seeded k-means++ init.
-    * Input order is the caller's (sorted by doc_id), all arithmetic is
-    * double, ties break to the lowest index, empty clusters keep their
-    * centroid — bit-reproducible regardless of Spark partitioning. Runs
-    * INSIDE an executor task over one node's (bounded) member sample; at
-    * ≤ sampleCap points × dim floats it is a per-task in-memory problem.
-    * Returns min(k, n) centroids.
-    */
-  private[index] def localKMeans(points: Array[Array[Double]], k: Int,
-      seed: Long, maxIter: Int): Array[Array[Float]] = {
-    val n = points.length
-    require(n > 0, "localKMeans over an empty sample")
-    val kk = math.min(k, n)
-    val rng = new scala.util.Random(seed)
-
-    def sqDist(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var j = 0
-      while (j < a.length) { val f = a(j) - b(j); d += f * f; j += 1 }
-      d
-    }
-
-    // k-means++ init: first center seeded-uniform, rest D²-weighted
-    val centers = mutable.ArrayBuffer[Array[Double]](
-      points(rng.nextInt(n)).clone())
-    val d2 = Array.fill(n)(Double.MaxValue)
-    while (centers.length < kk) {
-      val last = centers.last
-      var sum = 0.0; var i = 0
-      while (i < n) {
-        val d = sqDist(points(i), last)
-        if (d < d2(i)) d2(i) = d
-        sum += d2(i); i += 1
-      }
-      if (sum <= 0.0) centers += points(centers.length % n).clone()
-      else {
-        val target = rng.nextDouble() * sum
-        var idx = 0; var acc = d2(0)
-        while (acc < target && idx < n - 1) { idx += 1; acc += d2(idx) }
-        centers += points(idx).clone()
-      }
-    }
-
-    val dim = points(0).length
-    val assignTo = Array.fill(n)(-1)
-    var iter = 0; var changed = true
-    while (iter < maxIter && changed) {
-      changed = false
-      var i = 0
-      while (i < n) {
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < centers.length) {
-          val d = sqDist(points(i), centers(c))
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        if (best != assignTo(i)) { assignTo(i) = best; changed = true }
-        i += 1
-      }
-      if (changed) {
-        val sums = Array.fill(centers.length)(new Array[Double](dim))
-        val counts = new Array[Long](centers.length)
-        i = 0
-        while (i < n) {
-          val s = sums(assignTo(i)); val p = points(i)
-          var j = 0
-          while (j < dim) { s(j) += p(j); j += 1 }
-          counts(assignTo(i)) += 1
-          i += 1
-        }
-        var c = 0
-        while (c < centers.length) {
-          if (counts(c) > 0) { // empty cluster keeps its centroid
-            val s = sums(c); val cent = centers(c)
-            var j = 0
-            while (j < dim) { cent(j) = s(j) / counts(c); j += 1 }
-          }
-          c += 1
-        }
-      }
-      iter += 1
-    }
-    centers.map(_.map(_.toFloat)).toArray
-  }
-
-  /** Partition-order-independent sample rank: a fixed bijective scramble
-    * of the doc id (so "smallest rank" picks a stable pseudo-random
-    * subset without any RNG state shared across tasks). */
-  private def sampleRank(id: Long, seed: Long): Long = {
-    var x = id ^ (seed * 0x9E3779B97F4A7C15L)
-    x ^= x >>> 33; x *= 0xFF51AFD7ED558CCDL
-    x ^= x >>> 33; x *= 0xC4CEB9FE1A85EC53L
-    x ^ (x >>> 33)
-  }
-
-  /** Bounded-sample cap-heap: keeps the `cap` members with the smallest
-    * (scrambled-id rank, id). Max-heap so the worst kept element pops. */
-  private def newSampleHeap(): mutable.PriorityQueue[(Long, Long, Array[Float])] =
-    mutable.PriorityQueue.empty[(Long, Long, Array[Float])](
-      Ordering.by((t: (Long, Long, Array[Float])) => (t._1, t._2)))
-
-  private def heapAdd(heap: mutable.PriorityQueue[(Long, Long, Array[Float])],
-      cap: Int, r: Long, id: Long, vec: Array[Float]): Unit = {
-    if (heap.size < cap) heap.enqueue((r, id, vec))
-    else if (r < heap.head._1 || (r == heap.head._1 && id < heap.head._2)) {
-      heap.dequeue(); heap.enqueue((r, id, vec))
-    }
-  }
-
-  /** ONE distributed fit job for every node of a level: two-stage bounded
-    * sampling — each PARTITION pre-reduces to its `sampleCap` lowest-rank
-    * rows per prefix (plus the true member count), so only ~sampleCap rows
-    * per (node × partition) ever shuffle, then the per-prefix reduce merges
-    * the partial heaps. The kept set is identical to a single global heap
-    * (it is the global (rank, id)-minimum), so results are bit-equal to
-    * the unreduced form — but the root fit no longer shuffles the whole
-    * corpus into one task (every row shuffled at level 0 would put
-    * O(corpus) through a single reducer at 100 TB).
-    */
-  private def levelFit(frontier: Dataset[(String, Long, Array[Float])],
-      k: Int, minSize: Long, seed: Long, maxIter: Int,
-      sampleCap: Int): Dataset[(String, Array[Array[Float]])] = {
-    import frontier.sparkSession.implicits._
-    val partial: Dataset[(String, Long, Array[(Long, Long, Array[Float])])] =
-      frontier.mapPartitions { it =>
-        val heaps = mutable.Map.empty[String,
-          mutable.PriorityQueue[(Long, Long, Array[Float])]]
-        val counts = mutable.Map.empty[String, Long]
-        it.foreach { case (prefix, id, vec) =>
-          counts.update(prefix, counts.getOrElse(prefix, 0L) + 1L)
-          heapAdd(heaps.getOrElseUpdate(prefix, newSampleHeap()),
-            sampleCap, sampleRank(id, seed), id, vec)
-        }
-        heaps.iterator.map { case (prefix, heap) =>
-          (prefix, counts(prefix), heap.dequeueAll[(Long, Long, Array[Float])].toArray)
-        }
-      }
-    partial
-      .groupByKey(_._1)
-      .flatMapGroups { (prefix, parts) =>
-        val heap = newSampleHeap()
-        var n = 0L
-        parts.foreach { case (_, cnt, rows) =>
-          n += cnt
-          rows.foreach { case (r, id, vec) => heapAdd(heap, sampleCap, r, id, vec) }
-        }
-        if (n < minSize) Iterator.empty
-        else {
-          // sorted by doc_id so the local k-means sees a
-          // partition-order-independent input
-          val sample = heap.dequeueAll[(Long, Long, Array[Float])]
-            .sortBy(_._2).map(_._3.map(_.toDouble)).toArray
-          Iterator((prefix,
-            localKMeans(sample, k, nodeSeed(prefix, seed), maxIter)))
-        }
-      }
-  }
 
   /** Per-node k-means seed, derived from the node's path prefix so it is
     * deterministic and partitioning-independent. */
@@ -252,7 +96,7 @@ object HierarchicalKMeans {
   }
 
   /** Train the trie, level-synchronously: for each level, ONE two-stage
-    * fit job trains every node's codebook (see [[levelFit]]), then the
+    * fit job trains every node's codebook ([[SampledKMeans.sampledFit]]), then the
     * frontier descends one level by a PREFIX JOIN against those
     * codebooks. Job count grows with DEPTH, never with node count.
     * Per-node seeds derive from the node's path prefix ([[nodeSeed]]).
@@ -273,7 +117,7 @@ object HierarchicalKMeans {
     */
   def fitLevels(docs: DataFrame, vecCol: String, k: Int, depth: Int,
       seed: Long = 42L, maxIter: Int = 20,
-      sampleCap: Int = 1 << 16): DataFrame = {
+      sampleCap: Int = SampledKMeans.SampleCap): DataFrame = {
     require(k >= 2 && depth >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
@@ -288,8 +132,10 @@ object HierarchicalKMeans {
 
     for (level <- 0 until depth) {
       val minSize = if (level == 0) 1L else 2L * k
-      val fitted = levelFit(frontier, k, minSize, seed, maxIter, sampleCap)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val fitted = SampledKMeans.sampledFit(frontier, minSize, seed, sampleCap,
+          (v: Array[Float]) => v.map(_.toDouble)) { (prefix, sample) =>
+        SampledKMeans.localKMeans(sample, k, nodeSeed(prefix, seed), maxIter)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
       // materialize: used by this level's output AND the join
       if (fitted.count() == 0L && level == 0) {
         fitted.unpersist(blocking = false)

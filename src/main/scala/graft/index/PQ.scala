@@ -2,8 +2,6 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 
 /** Plain product quantization — the reference's `--pq_type pq` mode
   * (MEVI/pq.py:249-279 assignment, :175-198 faiss "PQMxB" build): the
@@ -11,7 +9,7 @@ import org.apache.spark.ml.functions.array_to_vector
   * independent K-centroid codebook. Contrast with [[Codebook]]/RQ
   * (`pq_type rq`, the shipped configs): RQ quantizes full-width residuals
   * sequentially; PQ quantizes disjoint slices independently — M
-  * INDEPENDENT KMeans fits (no level-to-level data dependency) and an
+  * INDEPENDENT k-means fits (no level-to-level data dependency) and an
   * assignment that is argmin per slice with no residual chain.
   *
   * Reconstruction is concatenation of the chosen centroids
@@ -19,7 +17,7 @@ import org.apache.spark.ml.functions.array_to_vector
   *
   * Scale posture matches RQ's: the codebook (M × K × dim/M floats = the
   * same M·K·dim budget as RQ) is the only broadcast state; training fits
-  * each slice over a column-pruned projection; assignment is
+  * every slice on one bounded sample ([[PQTrainer]]); assignment is
   * zero-shuffle map-side arithmetic.
   */
 case class PQCodebook(subs: Array[Array[Array[Float]]]) extends Serializable {
@@ -44,27 +42,7 @@ case class PQCodebook(subs: Array[Array[Array[Float]]]) extends Serializable {
     require(vec.length == dim, s"dim ${vec.length} != codebook dim $dim")
     val codes = new Array[Int](numSub)
     var m = 0
-    while (m < numSub) {
-      val off = m * subDim
-      val cents = subs(m)
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0.0
-        var j = 0
-        while (j < subDim) {
-          val diff = vec(off + j) - cent(j).toDouble
-          d += diff * diff
-          j += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      codes(m) = best
-      m += 1
-    }
+    while (m < numSub) { codes(m) = Codebook.nearest(vec, m * subDim, subDim, subs(m)); m += 1 }
     codes
   }
 
@@ -81,14 +59,22 @@ case class PQCodebook(subs: Array[Array[Array[Float]]]) extends Serializable {
   }
 }
 
+/** Trains M independent slice codebooks on one sample, as [[RQTrainer]]
+  * trains its levels (SURVEY V4; MEVI/pq.py:550-598): one pass keeps the
+  * `SampledKMeans.SampleCap` (2^16) docs of lowest `sampleRank(doc_id,
+  * seed)`, and one reduce task fits each slice on it in doc-id order
+  * (`SampledKMeans.localKMeans`, seed + m), refining its k-means++ seeds
+  * for at most `SampledKMeans.SeedRefinePasses` (30) + `maxIter` Lloyd
+  * passes, until no assignment changes.
+  */
 object PQTrainer {
 
-  /** Fits M independent KMeans codebooks, one per contiguous slice of
-    * `vecCol`. `dim` must divide evenly by `numSub` (the reference asserts
-    * the same, pq.py subvector slicing). Each fit reads only its slice
-    * (column-pruned projection), and the M fits share one cached slice
-    * table — the input is scanned once, not M times.
-    */
+  /** Fits M codebooks, one per contiguous slice of `vecCol` (ARRAY<FLOAT>
+    * or ARRAY<DOUBLE>, with a doc_id column), in two Spark jobs (one
+    * shuffle under AQE); rows with a NULL vector are skipped. `dim` must
+    * divide evenly by `numSub` (the reference asserts the same, pq.py
+    * subvector slicing). A NaN or infinite coordinate, or no usable row,
+    * fails with an IllegalArgumentException naming `vecCol`. */
   def fit(
       df: DataFrame,
       vecCol: String,
@@ -96,25 +82,18 @@ object PQTrainer {
       k: Int,
       seed: Long = 42L,
       maxIter: Int = 20): PQCodebook = {
-    val dim = df.select(size(col(vecCol))).head.getInt(0)
-    require(dim % numSub == 0, s"dim $dim not divisible by numSub $numSub")
-    val subDim = dim / numSub
-
-    val sliced = df.select((0 until numSub).map { m =>
-      array_to_vector(
-        slice(col(vecCol).cast("array<double>"), m * subDim + 1, subDim))
-        .as(s"f$m")
-    }: _*).persist()
-    sliced.count()
-
-    val subsArr = (0 until numSub).map { m =>
-      val km = new KMeans()
-        .setK(k).setSeed(seed + m).setMaxIter(maxIter)
-        .setFeaturesCol(s"f$m").setPredictionCol("cluster")
-      km.fit(sliced).clusterCenters.map(_.toArray.map(_.toFloat))
-    }.toArray
-    sliced.unpersist()
-    PQCodebook(subsArr)
+    require(numSub >= 1 && k >= 1, s"numSub $numSub and k $k must be ≥ 1")
+    val passes = SampledKMeans.SeedRefinePasses + maxIter
+    PQCodebook(SampledKMeans.fitCorpus(df, vecCol, seed, "PQTrainer.fit") { sample =>
+      val dim = sample(0).length
+      require(dim % numSub == 0,
+        s"PQTrainer.fit: $vecCol dim $dim not divisible by numSub $numSub")
+      val subDim = dim / numSub
+      Array.tabulate(numSub) { m =>
+        val slices = sample.map(java.util.Arrays.copyOfRange(_, m * subDim, (m + 1) * subDim))
+        SampledKMeans.localKMeans(slices, k, seed + m, passes)
+      }
+    })
   }
 }
 

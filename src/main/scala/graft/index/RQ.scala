@@ -2,8 +2,6 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 
 /** Trained residual-quantizer codebook: `levels(m)(code)` is a centroid.
   * Geometry mirrors the reference's shipped config (RQ M×B,
@@ -25,29 +23,7 @@ case class Codebook(levels: Array[Array[Array[Float]]]) extends Serializable {
     while (i < vec.length) { resid(i) = vec(i).toDouble; i += 1 }
     val codes = new Array[Int](numLevels)
     var m = 0
-    while (m < numLevels) {
-      val cents = levels(m)
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0.0
-        var j = 0
-        while (j < resid.length) {
-          val diff = resid(j) - cent(j).toDouble
-          d += diff * diff
-          j += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      codes(m) = best
-      val cent = cents(best)
-      var j = 0
-      while (j < resid.length) { resid(j) -= cent(j).toDouble; j += 1 }
-      m += 1
-    }
+    while (m < numLevels) { codes(m) = Codebook.subtractNearest(resid, levels(m)); m += 1 }
     codes
   }
 
@@ -81,6 +57,41 @@ case class Codebook(levels: Array[Array[Array[Float]]]) extends Serializable {
 }
 
 object Codebook {
+  /** Argmin-L2 centroid of `v(off until off + len)`, each distance a
+    * sequential double fold; ties → lowest code. The one nearest-centroid
+    * step of RQ and PQ assignment and of the RQ trainer's residuals. */
+  private[index] def nearest(v: Array[Double], off: Int, len: Int,
+      cents: Array[Array[Float]]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      val cent = cents(c)
+      var d = 0.0
+      var j = 0
+      while (j < len) {
+        val diff = v(off + j) - cent(j).toDouble
+        d += diff * diff
+        j += 1
+      }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** One greedy level step: the [[nearest]] centroid of `resid`,
+    * subtracted from `resid` in place. Assignment and the trainer both
+    * take it, so a level trains on the residuals serving will see. */
+  private[index] def subtractNearest(resid: Array[Double],
+      cents: Array[Array[Float]]): Int = {
+    val best = nearest(resid, 0, resid.length, cents)
+    val cent = cents(best)
+    var j = 0
+    while (j < resid.length) { resid(j) -= cent(j).toDouble; j += 1 }
+    best
+  }
+
   /** Load a [[Codebook.save]]d codebook (exact float round-trip). */
   def load(spark: SparkSession, path: String): Codebook = {
     val rows = spark.read.parquet(path)
@@ -99,19 +110,27 @@ object Codebook {
   }
 }
 
-/** Residual-quantizer trainer: M sequential MLlib KMeans fits, each on the
-  * residual of the previous level — the Spark-native re-expression of the
-  * reference's per-level (MiniBatch)KMeans loop (MEVI/pq.py:550-598) and its
-  * `initialize` dispatch (pq.py:440-486). Level-to-level sequencing is
-  * inherent (level i+1 consumes level-i residuals, SURVEY §7.4.1); each fit
-  * itself is a fully distributed MLlib job.
+/** Residual-quantizer trainer: M sequential k-means fits, each on the
+  * residuals of the levels before it — the reference's per-level
+  * (MiniBatch)KMeans loop (MEVI/pq.py:550-598, `initialize` pq.py:440-486),
+  * which fits on samples (SURVEY V4). One pass keeps the
+  * `SampledKMeans.SampleCap` (2^16) docs of lowest `sampleRank(doc_id,
+  * seed)`, a subset independent of partitioning; as the rank depends on
+  * the id alone, every level would draw the same docs, so one reduce task
+  * trains all levels on that sample in doc-id order: level m runs
+  * `SampledKMeans.localKMeans` (seed + m), then each row steps to its
+  * residual by assignment's own greedy step ([[Codebook.subtractNearest]]).
+  * Each Lloyd loop also refines its k-means++ seeds, as MLlib's k-means||
+  * does: it stops at the first pass that changes no assignment, after at
+  * most `SampledKMeans.SeedRefinePasses` (30) + `maxIter` passes.
   */
 object RQTrainer {
 
-  /** Fits the codebook. Input: (idCol LONG, vecCol ARRAY<FLOAT>).
-    * Residual DataFrames are persisted per level to cut lineage (the loop
-    * would otherwise recompute level-0 residuals M times).
-    */
+  /** Fits the codebook in two Spark jobs (one shuffle under AQE) for any
+    * `numLevels`. Input: (doc_id LONG, vecCol ARRAY<FLOAT> or
+    * ARRAY<DOUBLE>); rows with a NULL vector are skipped. A NaN or
+    * infinite coordinate, or no usable row, fails with an
+    * IllegalArgumentException naming `vecCol`. */
   def fit(
       df: DataFrame,
       vecCol: String,
@@ -119,40 +138,15 @@ object RQTrainer {
       k: Int,
       seed: Long = 42L,
       maxIter: Int = 20): Codebook = {
-
-    var resid = df
-      .select(array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-      .persist()
-    resid.count() // materialize before iterating
-
-    val levels = new Array[Array[Array[Float]]](numLevels)
-    for (m <- 0 until numLevels) {
-      val km = new KMeans()
-        .setK(k).setSeed(seed + m).setMaxIter(maxIter)
-        .setFeaturesCol("features").setPredictionCol("cluster")
-      val model = km.fit(resid)
-      levels(m) = model.clusterCenters.map(_.toArray.map(_.toFloat))
-
-      if (m < numLevels - 1) {
-        // residual = features − centroid(cluster); centers ship in the
-        // closure (≤ K×dim floats), no join needed.
-        val centers = model.clusterCenters.map(_.toArray)
-        val subtract = udf { (v: org.apache.spark.ml.linalg.Vector, c: Int) =>
-          val cent = centers(c)
-          org.apache.spark.ml.linalg.Vectors.dense(
-            Array.tabulate(cent.length)(j => v(j) - cent(j)))
-        }
-        val next = model.transform(resid)
-          .select(subtract(col("features"), col("cluster")).as("features"))
-          .persist()
-        next.count()
-        resid.unpersist()
-        resid = next
-      } else {
-        resid.unpersist()
+    require(numLevels >= 1 && k >= 1, s"numLevels $numLevels and k $k must be ≥ 1")
+    val passes = SampledKMeans.SeedRefinePasses + maxIter
+    Codebook(SampledKMeans.fitCorpus(df, vecCol, seed, "RQTrainer.fit") { resid =>
+      Array.tabulate(numLevels) { m =>
+        val cents = SampledKMeans.localKMeans(resid, k, seed + m, passes)
+        if (m + 1 < numLevels) resid.foreach(Codebook.subtractNearest(_, cents))
+        cents
       }
-    }
-    Codebook(levels)
+    })
   }
 }
 

@@ -7,7 +7,7 @@ import graft.search.LSHSearch
   *
   * The RQ serving core (assign / cluster index / reconstruct / beam search /
   * coarse→fine) is a deterministic function of the corpus AND the trained
-  * codebook. Training (MLlib KMeans) is not SQL-expressible, but the trained
+  * codebook. Training (sampled k-means) is not SQL-expressible, but the trained
   * centroids are tiny (M×K×dim floats) — so the oracle inlines them as SQL
   * literals and replays the serving math exactly. Each `SparkEntry.oracles`
   * entry takes the fixture dir and reads its artifact through the same

@@ -75,7 +75,7 @@ import graft.index.Codebook
 object CoarseFineRetriever {
 
   /** Index-side scoring (code assignment AND beam probe) is always L2:
-    * the codebook is L2-trained (MLlib KMeans), so probing in any other
+    * the codebook is L2-trained (k-means), so probing in any other
     * geometry can miss the cluster a doc was assigned to — including the
     * query's own. The reference keeps assign/probe consistent the same way
     * (one dist_mode through compute_scores for both, pq.py:124-131 +

@@ -112,7 +112,7 @@ object HkmReference {
         case (prefix, members) if members.size >= minSize =>
           require(members.size <= (1 << 16), "the reference fit does not sample")
           val sample = members.sortBy(_._2).map(_._3.map(_.toDouble)).toArray
-          prefix -> HierarchicalKMeans.localKMeans(sample, k,
+          prefix -> SampledKMeans.localKMeans(sample, k,
             HierarchicalKMeans.nodeSeed(prefix, seed), maxIter)
       }
       out ++= fitted

@@ -74,4 +74,66 @@ class PQSpec extends SparkSpec {
     // 4 slices × 4 codes = 256 effective cells vs 4 cells full-width
     assert(meanErr(c4) < meanErr(c1))
   }
+
+  test("rows with a NULL vector are skipped") {
+    val clean = vecs(60, 4)
+    val nulls = Seq((1000L, null: Array[Float])).toDF("doc_id", "vec")
+    val a = PQTrainer.fit(clean, "vec", numSub = 2, k = 3)
+    val b = PQTrainer.fit(clean.union(nulls), "vec", numSub = 2, k = 3)
+    assert(a.subs.flatten.flatten.toSeq == b.subs.flatten.flatten.toSeq)
+  }
+
+  test("an input with no usable row fails naming the column") {
+    val empty = Seq.empty[(Long, Array[Float])].toDF("doc_id", "vec")
+    val allNull = Seq((1L, null: Array[Float])).toDF("doc_id", "vec")
+    for (df <- Seq(empty, allNull)) {
+      val e = intercept[IllegalArgumentException](
+        PQTrainer.fit(df, "vec", numSub = 2, k = 3))
+      assert(e.getMessage.contains("vec"), e.getMessage)
+    }
+  }
+
+  test("a NaN or infinite coordinate fails naming the column") {
+    for (bad <- Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)) {
+      val df = Seq((1L, Array(1f, 2f)), (2L, Array(bad, 3f)), (3L, Array(0f, 1f)))
+        .toDF("doc_id", "vec")
+      val e = intercept[IllegalArgumentException](
+        PQTrainer.fit(df, "vec", numSub = 2, k = 2))
+      assert(e.getMessage.contains("vec") && e.getMessage.contains("non-finite"),
+        e.getMessage)
+    }
+  }
+
+  test("a dim that numSub does not divide fails naming the column") {
+    val e = intercept[IllegalArgumentException](
+      PQTrainer.fit(vecs(20, 6), "vec", numSub = 4, k = 2))
+    assert(e.getMessage.contains("vec") && e.getMessage.contains("numSub"), e.getMessage)
+  }
+
+  test("the same seed gives the same floats on 1 and 7 partitions") {
+    val df = vecs(300, 8)
+    def floats(n: Int) = PQTrainer.fit(df.repartition(n), "vec", numSub = 2, k = 4)
+      .subs.flatten.flatten.toSeq
+    assert(floats(1) == floats(7))
+  }
+
+  test("PQTrainer.fit runs at most 2 Spark jobs") {
+    val df = vecs(300, 8).cache()
+    df.count()
+    val jobs = countJobs { PQTrainer.fit(df, "vec", numSub = 4, k = 4) }
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("on the sf0.01 docs the codebook reconstructs no worse than MLlib KMeans'") {
+    val d = graft.io.Tables.load(spark, sf("0.01"), "embeddings")
+      .select(col("vec_id").as("doc_id"), col("embedding").as("vec")).cache()
+    def meanErr(cb: PQCodebook) = PQAssigner.reconstructWithError(d, cb)
+      .agg(avg("recon_error")).head.getDouble(0)
+    for ((numSub, k) <- Seq((4, 8), (2, 16))) {
+      val ours = meanErr(PQTrainer.fit(d, "vec", numSub, k, seed = 42L, maxIter = 10))
+      val mllib = meanErr(MllibKMeansReference.pq(d, "vec", numSub, k, 42L, 10))
+      info(f"$numSub×$k: sampled $ours%.6f, MLlib $mllib%.6f")
+      assert(ours <= mllib, s"$numSub×$k: $ours > MLlib's $mllib")
+    }
+  }
 }

@@ -139,4 +139,61 @@ class RQSpec extends SparkSpec {
     // memberships of one doc are distinct clusters
     assert(m2.distinct().count() == m2.count())
   }
+
+  private def toyDocs(rows: (Long, Array[Float])*) = {
+    import spark.implicits._
+    rows.toDF("doc_id", "vec")
+  }
+
+  test("rows with a NULL vector are skipped") {
+    val clean = (0L until 40L).map(i => (i, Array(i.toFloat, (i % 7).toFloat)))
+    val nulls = Seq((100L, null: Array[Float]), (101L, null: Array[Float]))
+    val a = RQTrainer.fit(toyDocs(clean: _*), "vec", numLevels = 2, k = 3)
+    val b = RQTrainer.fit(toyDocs(clean ++ nulls: _*), "vec", numLevels = 2, k = 3)
+    assert(a.levels.flatten.flatten.toSeq == b.levels.flatten.flatten.toSeq)
+  }
+
+  test("an input with no usable row fails naming the column") {
+    for (df <- Seq(toyDocs(), toyDocs((1L, null), (2L, null)))) {
+      val e = intercept[IllegalArgumentException](
+        RQTrainer.fit(df, "vec", numLevels = 2, k = 3))
+      assert(e.getMessage.contains("vec"), e.getMessage)
+    }
+  }
+
+  test("a NaN or infinite coordinate fails naming the column") {
+    for (bad <- Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)) {
+      val df = toyDocs((1L, Array(1f, 2f)), (2L, Array(3f, bad)), (3L, Array(0f, 1f)))
+      val e = intercept[IllegalArgumentException](
+        RQTrainer.fit(df, "vec", numLevels = 1, k = 2))
+      assert(e.getMessage.contains("vec") && e.getMessage.contains("non-finite"),
+        e.getMessage)
+    }
+  }
+
+  test("the same seed gives the same floats on 1 and 7 partitions") {
+    def floats(n: Int) = RQTrainer.fit(docs.repartition(n), "vec",
+      numLevels = 2, k = 8, seed = 42L).levels.flatten.flatten.toSeq
+    assert(floats(1) == floats(7))
+    assert(floats(7) == cb.levels.flatten.flatten.toSeq)
+  }
+
+  test("RQTrainer.fit runs at most 2 Spark jobs per level (2 in all)") {
+    docs.count()
+    val jobs = countJobs { RQTrainer.fit(docs, "vec", numLevels = 3, k = 8) }
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("on the sf0.01 docs the codebook reconstructs no worse than MLlib KMeans'") {
+    val d = Tables.load(spark, sf("0.01"), "embeddings")
+      .select(col("vec_id").as("doc_id"), col("embedding").as("vec")).cache()
+    def meanErr(c: Codebook) = CodeAssigner.reconstructionError(d, c)
+      .agg(avg("recon_error")).head.getDouble(0)
+    for ((levels, k) <- Seq((2, 8), (1, 16))) {
+      val ours = meanErr(RQTrainer.fit(d, "vec", levels, k, seed = 42L, maxIter = 10))
+      val mllib = meanErr(MllibKMeansReference.rq(d, "vec", levels, k, 42L, 10))
+      info(f"$levels×$k: sampled $ours%.6f, MLlib $mllib%.6f")
+      assert(ours <= mllib, s"$levels×$k: $ours > MLlib's $mllib")
+    }
+  }
 }

@@ -278,7 +278,7 @@ class SearchSpec extends SparkSpec {
       CodeAssigner.assignTopK(docs, cb, t = 2).select("doc_id", "codes"))
     val beams = 8
     val k = 20
-    val budget = 150
+    val budget = 100
     // the form the retrievers had before the max dedup folded into the
     // top-k: score every (query, candidate) row, groupBy max, then rank
     def groupByMaxRanked(cands: org.apache.spark.sql.DataFrame) = {
