@@ -10,9 +10,9 @@ import org.apache.spark.sql.SparkSession
   * Its generated-code cache holds [[CodegenCacheEntries]] classes, not
   * Spark's default 100: one pass over the catalog at sf0.01 compiles
   * 3118 distinct classes (counted with `CodegenMetrics` at a cache that
-  * never evicts), so at 100 entries a second pass recompiled 5089 of
-  * them, and at 4096 it compiles 204. A static conf, so only the session
-  * builder can size it. */
+  * never evicts); a second pass compiled 5089 classes at 100 entries
+  * and 262 at 4096. A static conf, so only the session builder can size
+  * it. */
 object LocalSession {
 
   /** The host's cores, capped at 32 — the width a bench record is cut at
